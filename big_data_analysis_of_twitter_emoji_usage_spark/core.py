@@ -287,20 +287,6 @@ def stream_table_path(sf_dir: str, name: str) -> str:
     return table_path(sf_dir, name) + "*"
 
 
-# r13 A/B toggle for spread_stream (guide §2.5 input skew): True =
-# file-stream scans whose batch twin would be spread get a per-batch
-# round-robin repartition; False = the pre-r13 shape (map work serial
-# on the fixture's single-row-group files). Module-level so interleaved
-# A/B sessions can flip it without a code edit. NOTE the loaders
-# default to spread_scan=False — engagement is per call site, from the
-# measured table in OPTIMIZATION_r13.md: the exchange's fixed cost
-# (~0.2–0.3 s per availableNow drive at fixture scale) only pays where
-# the per-row map work is genuinely heavy (the 13-gram md5 decontam
-# probes: −30..−40%); the light projections/aggregations all measured
-# small losses.
-_SPREAD_STREAM_SCANS = True
-
-
 def spread_stream(stream, spark: SparkSession, sf_dir: str, name: str):
     """Streaming twin of ``spread``: round-robin repartition a
     file-stream source whose BATCH scan of the same files would arrive
@@ -322,9 +308,14 @@ def spread_stream(stream, spark: SparkSession, sf_dir: str, name: str):
     bounding the shuffled volume. The added per-batch Exchange is
     round-robin with sort-before-repartition (deterministic under task
     retry); results are partitioning-invariant for every consumer
-    (row-level projections, aggregations, watermarked joins)."""
-    if not _SPREAD_STREAM_SCANS:
-        return stream
+    (row-level projections, aggregations, watermarked joins).
+
+    The loaders default to ``spread_scan=False``: engagement is per
+    call site, from the measured table in OPTIMIZATION_r13.md — the
+    exchange's fixed cost (~0.2–0.3 s per availableNow drive at fixture
+    scale) only pays where the per-row map work is heavy (the 13-gram
+    md5 decontam probes: −30..−40%); the light projections and
+    aggregations all measured small losses."""
     sc = spark.sparkContext
     target = sc.defaultParallelism
     batch_probe = spark.read.parquet(table_path(sf_dir, name))

@@ -194,6 +194,27 @@ def sessionize(
     )
 
 
+def multiset_diff_count(a: DataFrame, b: DataFrame) -> DataFrame:
+    """One row, ``n_mismatch`` (long): the size of the symmetric
+    multiset difference of two frames with the same columns, i.e.
+    ``count(a exceptAll b UNION ALL b exceptAll a)`` = Σ over distinct
+    rows of |count_a(row) − count_b(row)|. Computed in one grouped pass
+    over the union of (row, +1) and (row, −1) instead of two exceptAll
+    legs, each of which re-evaluates the other side's subtree. Grouping
+    treats NULLs as equal, as exceptAll does, so a row with NULL
+    columns present on both sides cancels; a join on the row columns
+    would never match it."""
+    cols = a.columns
+    signed = a.select(*cols, F.lit(1).alias("_sign")).unionByName(
+        b.select(*cols, F.lit(-1).alias("_sign"))
+    )
+    return (
+        signed.groupBy(*cols)
+        .agg(F.abs(F.sum("_sign")).alias("_d"))
+        .agg(F.coalesce(F.sum("_d"), F.lit(0)).cast("long").alias("n_mismatch"))
+    )
+
+
 def funnel(
     df: DataFrame,
     steps: list[str],

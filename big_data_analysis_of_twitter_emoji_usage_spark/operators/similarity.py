@@ -51,12 +51,6 @@ _UNROLL_DIM_CAP = 512
 _PROBE_DIM_CACHE: dict[tuple, int] = {}
 _PROBE_DIM_CACHE_MAX = 512
 
-# r13 A/B toggle (VERDICT r12 #2): False = the IVF kNN-join probe
-# unrolls the dot ONLY in its corpus×corpus candidate-pair stage;
-# True = r12's engagement at every dot site in the probe (routing
-# cosine, per-side self-norms too). Bit-identical results either way.
-_UNROLL_ALL_IVF_PROBE_SITES = False
-
 # The measured crossover for the unrolled dot's NET win (r12 per-site
 # A/B table + the r13 pair-only narrowing): engagements at
 # corpus×corpus candidate volumes (~1.5M+ scored pairs at the fixture)
@@ -1141,25 +1135,23 @@ def cosine_knn_join_ivf_probe(
             )
             else None
         )
-    # r13 (VERDICT r12 #2): the unroll engages ONLY in the
-    # candidate-pair stage below — the corpus×corpus volume where it
-    # wins (the r12 rule) — while the routing cosine and the per-side
-    # self-norms keep the HOF dot: their volumes (|left|·n_lists
-    # fan-out, one row per side) are the regime the r12 A/B table
-    # measured as losses, and every extra unrolled site is another
-    # codegen class whose compile/JIT weight taxes the rest of a
-    # many-query session (the measured knn_join_emb collateral).
-    # Bit-identical either way — mixing variants per site is safe.
-    pair_dim, dim = dim, (dim if _UNROLL_ALL_IVF_PROBE_SITES else None)
+    # The unroll engages ONLY in the candidate-pair stage below — the
+    # corpus×corpus volume where it wins — while the routing cosine and
+    # the per-side self-norms keep the HOF dot: their volumes
+    # (|left|·n_lists fan-out, one row per side) measured as losses,
+    # and every extra unrolled site is another codegen class whose
+    # compile/JIT weight taxes the rest of a many-query session
+    # (OPTIMIZATION_r13.md). Each site may pick either dot: results are
+    # bit-identical.
     q = left.select(
         F.col(id_col).alias("left_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("_qn", _dot_d("qv", "qv", dim))
+    ).withColumn("_qn", _dot_d("qv", "qv", None))
     q_scored = q.join(F.broadcast(centroids)).select(
         "left_id",
         "qv",
         "_qn",
         F.col("_cid"),
-        cosine("qv", "_cv", dim).alias("_ccos"),
+        cosine("qv", "_cv", None).alias("_ccos"),
     )
     wq = Window.partitionBy("left_id").orderBy(F.desc("_ccos"), F.asc("_cid"))
     probes = (
@@ -1168,7 +1160,7 @@ def cosine_knn_join_ivf_probe(
         .select("left_id", "qv", "_qn", F.col("_cid").alias("_list"))
     )
     postings_n = postings if "_cn" in postings.columns else postings.withColumn(
-        "_cn", _dot_d("cv", "cv", dim)
+        "_cn", _dot_d("cv", "cv", None)
     )
     scored = (
         postings_n.join(probes, "_list")
@@ -1176,7 +1168,7 @@ def cosine_knn_join_ivf_probe(
             "left_id",
             F.col("neighbor_id").alias("right_id"),
             cosine_with_norms(
-                "qv", "cv", F.col("_qn"), F.col("_cn"), pair_dim
+                "qv", "cv", F.col("_qn"), F.col("_cn"), dim
             ).alias("_cos"),
         )
         .groupBy("left_id", "right_id")
@@ -1763,7 +1755,7 @@ def cosine_knn_ivf_probe_dir(
     dedup stores) and only those ``_list=K`` subtrees enter the file
     index (``sources.readers.read_partition_subtrees``). When a
     two-tier streamed index is being maintained
-    (``stream_ivf_index_append(list_major=True)`` lands each batch
+    (``stream_ivf_index_append`` lands each batch
     batch-major in ``<postings_dir>_recent`` until
     ``roll_recent_into_store`` moves it), the probe also reads the
     recent tail filtered to the probed lists — vectors stay searchable

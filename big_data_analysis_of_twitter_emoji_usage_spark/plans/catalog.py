@@ -57,6 +57,7 @@ from big_data_analysis_of_twitter_emoji_usage_spark.operators.relational import 
     asof_join,
     cohort_retention,
     funnel,
+    multiset_diff_count,
     range_join,
     salted_aggregate,
     salted_join,
@@ -2147,31 +2148,9 @@ def stream_sessionize_stateful_demo(spark, sf):
         .filter(F.col("session_start") < F.col("_mx"))
         .drop("_mx")
     )
-    # r13 (guide §1.2: don't compute things twice): the r4 shape was
-    # count(closed exceptAll expected UNION expected exceptAll closed)
-    # — each exceptAll leg re-evaluates the OTHER side's subtree, so
-    # the batch-sessionize + last-session window above ran TWICE
-    # (phase-attributed at ~1.0 s of this query's ~2.3 s verify side).
-    # The symmetric multiset difference count is identically
-    # Σ_rows |count_closed(row) − count_expected(row)| — computed here
-    # with ONE pass per side: group each side by the full row, full-
-    # outer join the (row → count) tables, sum the absolute count
-    # deltas. Same n_mismatch for every input by definition of
-    # exceptAll (multiset semantics: max(l−r,0)+max(r−l,0) = |l−r|).
-    cols = closed.columns
-    lc = closed.groupBy(cols).agg(F.count(F.lit(1)).alias("_cl"))
-    rc = expected.groupBy(cols).agg(F.count(F.lit(1)).alias("_cr"))
-    delta = F.abs(
-        F.coalesce("_cl", F.lit(0)) - F.coalesce("_cr", F.lit(0))
-    )
-    mismatch_n = (
-        lc.join(rc, cols, "full_outer")
-        .agg(
-            F.coalesce(F.sum(delta), F.lit(0))
-            .cast("long")
-            .alias("n_mismatch")
-        )
-    )
+    # one grouped pass per side instead of two exceptAll legs (each
+    # re-evaluated the other side's batch-sessionize subtree); NULL-safe
+    mismatch_n = multiset_diff_count(closed, expected)
     return closed.agg(
         F.count(F.lit(1)).alias("n_closed_sessions")
     ).crossJoin(F.broadcast(mismatch_n))
@@ -3106,7 +3085,7 @@ def stream_dedup_near_docs(spark, sf):
 
     r10: ``store_buckets=32`` — the gate drives the band-partitioned
     store layout (VERDICT r9 #3), a pure layout change whose keeper
-    set is pinned equal to the flat drive's by the banded
+    set is pinned equal to the batch rule by the banded
     keeper-parity test; the oracle is unchanged because the results
     are. r11: the layout went bucket-major (``_bkt=K/batch_id=N``,
     dynamic partition overwrite, direct-path touched-subtree probes),
@@ -3295,9 +3274,9 @@ def stream_knn_ivf(spark, sf):
     seed file included, is assigned to the fixed centroids and lands
     as posting rows), and the accumulated postings are probed with
     ``cosine_knn_ivf_probe_dir`` at the shipped 24/8×2 operating
-    point. r11: the drive lands LIST-MAJOR (``list_major=True`` —
-    ``_list=K/batch_id=N`` via dynamic partition overwrite, layout
-    marker-enforced) and the probe reads only the probed lists'
+    point. The drive maintains the two-tier LIST-MAJOR layout
+    (``_list=K/batch_id=N`` history plus a batch-major recent tail,
+    layout marker-enforced) and the probe reads only the probed lists'
     subtrees, the same write-once/probe-forever loop as
     ``knn_ivf_persisted`` but with the index MAINTAINED by the stream.
     The oracle re-derives the same thing statically: centroids =
@@ -3337,7 +3316,6 @@ def stream_knn_ivf(spark, sf):
         postings_dir=pdir,
         checkpoint_dir=_os.path.join(scratch, "ckpt"),
         replication=_KNN_IVF_REPL,
-        list_major=True,
         maintain_every=2,
         consolidate_min_batch_dirs=2,
     )
@@ -4957,7 +4935,7 @@ _GATE_FRONT = {
     # the sessionize demo's verify side replaces the double-exceptAll
     # with the grouped-count symmetric difference. Results verified
     # hash-identical for every one (oracle parity + driver contract).
-    # The 40 unchanged r12-attested rows rotate to the end of _PROVEN;
+    # The 42 unchanged r12-attested rows rotate to the end of _PROVEN;
     # their former slots drain the pre-declared r13 head (knn_lsh,
     # embedding_outliers, multimodal_decode, the 21 remaining r10 rows,
     # then the oldest r11 rows through the window boundary). ----

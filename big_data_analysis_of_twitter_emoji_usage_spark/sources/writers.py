@@ -560,9 +560,11 @@ def roll_recent_into_store(
         # is what lets the in-drive maintenance cycle run on a
         # background thread UNDER live probes (guide §2.6): the cycle
         # only ever ADDS files; the deletes happen between triggers.
+        # paths in the caller's root spelling, the same form
+        # consolidate_bucket_history returns
         return {
             "batches_rolled": len(batches),
-            "deferred_reap": [str(b) for b in batches],
+            "deferred_reap": [f"{recent}/{b.getName()}" for b in batches],
         }
     for b in batches:
         fs.delete(b, True)

@@ -16,9 +16,23 @@ pointing the batch reader at a directory; README.md:30).
 from __future__ import annotations
 
 import json
+from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
+from operator import and_
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from big_data_analysis_of_twitter_emoji_usage_spark.sources.readers import (
+    read_partition_subtrees,
+    union_partition_tiers,
+)
+from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import (
+    _hadoop_fs,
+    consolidate_bucket_history,
+    roll_recent_into_store,
+)
 
 
 def stream_query(
@@ -91,14 +105,6 @@ def run_stream_to_memory(
     q.awaitTermination()
     return spark.table(query_name)
 
-
-# r13 A/B toggle for in-drive background maintenance (all streaming
-# store drives; see _MaintenanceScheduler): True = the maintenance
-# cycle (and, for the IVF drive, the drift signal) overlaps later
-# triggers from one serialized background thread; False = the
-# synchronous r12 shape. Module-level so interleaved A/B sessions can
-# flip it without a code edit.
-_OVERLAP_IN_DRIVE_MAINTENANCE = True
 
 SESSION_OUT_SCHEMA = (
     "user_id long, session_start timestamp, session_end timestamp, "
@@ -393,8 +399,6 @@ def run_stream_transform_to_parquet(
     file://.../hdfs://.../s3a://... where a local os.path check is
     always False and would silently discard data that WAS just
     landed."""
-    from pyspark.errors import AnalysisException
-
     fn = transform if transform is not None else (lambda bdf: bdf)
     query = (
         stream_df.writeStream.foreachBatch(
@@ -488,8 +492,8 @@ def stream_decontaminate_join(
 
 
 _STORE_LAYOUT_FILE = "_layout.json"
-# v2 (r11): payload rows carry the verify columns the probe needs
-# (signbucket stores land _n; banded stores land id-bucketed _pbkt dirs)
+# v2: payload rows carry the verify columns the probe needs (signbucket
+# stores land _n; banded stores land id-bucketed _pbkt dirs)
 _STORE_LAYOUT_VERSION = 2
 
 
@@ -499,8 +503,6 @@ def _marker_io(spark: SparkSession, store_dir: str):
     local-only check silently never engages on HDFS/object stores,
     turning the fail-fast layout gate into a no-op exactly where
     stores are big enough for a silent mis-probe to matter."""
-    from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import _hadoop_fs
-
     fs, _ = _hadoop_fs(spark, store_dir)
     jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     return fs, jpath(f"{store_dir.rstrip('/')}/{_STORE_LAYOUT_FILE}"), jpath
@@ -515,28 +517,31 @@ def write_store_layout_marker(
 ) -> None:
     """Persist the accumulating dedup/index store's layout contract as
     ``<store_dir>/_layout.json`` (underscore-prefixed, so Spark's file
-    index never reads it as data). The banded layout (``store_buckets``)
-    is a STORE-LIFETIME choice: resuming a flat-written store with
-    ``store_buckets`` set — or changing the bucket count — silently
-    hides pre-switch history from the probe and emits wrong keeper
-    sets, so the drives refuse to start on a mismatch instead of
-    relying on a docstring (same fail-fast posture as ``get_spark``
+    index never reads it as data). The layout (``kind`` and
+    ``store_buckets``) is a STORE-LIFETIME choice: resuming a store
+    with another bucket count or layout silently hides history from
+    the probe and emits wrong keeper sets, so the drives refuse to
+    start on a mismatch (same fail-fast posture as ``get_spark``
     rejecting a typo'd ``state_store``). Call this yourself when
     seeding a store from batch-built ``build_minhash_store`` /
     ``build_signbucket_store`` output. Marker IO goes through the
     Hadoop FileSystem, so the gate engages on any store FS Spark can
     reach.
 
-    ``max_batch_id`` (r12) records the highest streaming batch id ever
+    ``max_batch_id`` records the highest streaming batch id ever
     landed in the store; the drives keep it current per trigger and
     REFUSE to resume a store whose marker records landed batches when
-    the drive's checkpoint is fresh (no commits): a recreated
+    the drive's checkpoint is fresh (no offsets): a recreated
     checkpoint restarts batch ids at 0, and a later roll's dynamic
     overwrite would silently replace surviving history leaves with
-    colliding ids (the r11 consolidation names merged leaves
-    ``min(ids)-1``, so MERGED history never collides — only
-    unconsolidated leaves and recent tails do). Batch-seeded stores
-    leave it None (no landed batches → fresh checkpoints are fine)."""
+    colliding ids (consolidation names merged leaves ``min(ids)-1``,
+    so MERGED history never collides — only unconsolidated leaves and
+    recent tails do). Batch-seeded stores leave it None (no landed
+    batches → fresh checkpoints are fine).
+
+    The marker is rewritten tmp-then-rename, never truncated in place:
+    it changes once per trigger, and a crash mid-write must not leave
+    every later drive unreadable."""
     fs, marker, jpath = _marker_io(spark, store_dir)
     fs.mkdirs(marker.getParent())
     payload = {
@@ -546,17 +551,10 @@ def write_store_layout_marker(
     }
     if max_batch_id is not None:
         payload["max_batch_id"] = max_batch_id
-    # tmp-then-rename, NOT create(marker, True): since the r12
-    # watermark this rewrite happens once per trigger, and an in-place
-    # create truncates the live marker immediately — a crash mid-write
-    # would leave _layout.json empty/corrupt and every later drive
-    # unreadable. The tmp write is all-or-nothing at the marker path;
-    # the delete→rename window leaves a COMPLETE tmp, which the reader
-    # rolls forward (same repair-on-read family as compact_parquet_dir).
-    _write_small_json_atomic(spark, fs, jpath, marker, payload)
+    _write_small_json_atomic(fs, jpath, marker, payload)
 
 
-def _write_small_json_atomic(spark, fs, jpath, target, payload: dict) -> None:
+def _write_small_json_atomic(fs, jpath, target, payload: dict) -> None:
     """tmp-then-rename landing for tiny JSON control files (layout
     marker, drift signal): the tmp write is all-or-nothing at the
     target path, and the delete→rename window leaves a COMPLETE tmp
@@ -603,8 +601,6 @@ def _checkpoint_is_fresh(spark: SparkSession, checkpoint_dir: str) -> bool:
     commits/ would brick the legitimate resume the gate's own error
     message recommends. Only a checkpoint with no offsets at all
     restarts batch ids at 0 against a store that already has them."""
-    from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import _hadoop_fs
-
     fs, _ = _hadoop_fs(spark, checkpoint_dir)
     jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     offsets = jpath(f"{checkpoint_dir.rstrip('/')}/offsets")
@@ -621,10 +617,9 @@ def _read_store_layout_marker(
 ) -> dict | None:
     """Read the store's layout marker, repairing the atomic-write
     protocol's crash windows: a COMPLETE ``.tmp`` left by a crash
-    between delete and rename (or beside a marker a pre-r12 in-place
-    writer corrupted) is rolled forward to the marker path. Returns
-    None when neither file exists; raises with rebuild guidance when
-    what exists cannot be decoded."""
+    between delete and rename (or beside a corrupted marker) is rolled
+    forward to the marker path. Returns None when neither file exists;
+    raises with rebuild guidance when what exists cannot be decoded."""
     fs, marker, jpath = _marker_io(spark, store_dir)
     tmp = jpath(str(marker) + ".tmp")
 
@@ -671,21 +666,21 @@ def _enforce_store_layout(
     store_dir: str,
     kind: str,
     store_buckets: int | None,
-    checkpoint_dir: str | None = None,
+    checkpoint_dir: str,
 ) -> None:
     """Drive-start layout gate: first use writes the marker; every
     later drive (or resume) must present the SAME kind and bucket
-    count, and a non-empty store without a marker is refused (it could
-    be either layout — rebuild it, or ``write_store_layout_marker`` if
-    you know which; pre-v2 stores also predate the stored verify
-    columns, so a rebuild is the correct migration).
+    count, and a non-empty store without a marker is refused (its
+    layout cannot be verified — rebuild it, or
+    ``write_store_layout_marker`` if you know it; pre-v2 stores also
+    predate the stored verify columns, so a rebuild is the correct
+    migration).
 
-    With ``checkpoint_dir`` (r12), also refuses the fresh-checkpoint /
-    landed-store combination: a recreated checkpoint restarts batch
-    ids at 0, so its landings can silently dynamic-overwrite surviving
-    history leaves with colliding ids. Markers written before r12 (no
-    ``max_batch_id``) pass ungated — they predate the watermark, and
-    their first post-r12 drive starts recording it."""
+    Also refuses the fresh-checkpoint / landed-store combination: a
+    recreated checkpoint restarts batch ids at 0, so its landings can
+    silently dynamic-overwrite surviving history leaves with colliding
+    ids. Markers without ``max_batch_id`` (batch-seeded, or written
+    before the watermark existed) pass ungated."""
     fs, marker, jpath = _marker_io(spark, store_dir)
     expected = {
         "layout_version": _STORE_LAYOUT_VERSION,
@@ -701,10 +696,8 @@ def _enforce_store_layout(
                 "The layout (bucketing and bucket count) is a "
                 "store-lifetime contract — rebuild the store to change it."
             )
-        if (
-            checkpoint_dir is not None
-            and int(got.get("max_batch_id", -1)) >= 0
-            and _checkpoint_is_fresh(spark, checkpoint_dir)
+        if int(got.get("max_batch_id", -1)) >= 0 and _checkpoint_is_fresh(
+            spark, checkpoint_dir
         ):
             raise ValueError(
                 f"dedup store at {store_dir} has landed streaming batches "
@@ -734,9 +727,9 @@ def _enforce_store_layout(
     ]
     if _nonempty(store_dir) or any(_nonempty(s) for s in siblings):
         raise ValueError(
-            f"dedup store at {store_dir} has no _layout.json marker "
-            "(pre-r11 store?): its layout cannot be verified against "
-            f"this drive's (kind={kind!r}, store_buckets={store_buckets!r}). "
+            f"dedup store at {store_dir} has no _layout.json marker: "
+            "its layout cannot be verified against this drive's "
+            f"(kind={kind!r}, store_buckets={store_buckets!r}). "
             "Rebuild the store, or write_store_layout_marker() if you "
             "know its layout matches (pre-v2 stores lack the stored "
             "verify columns and should be rebuilt)."
@@ -744,49 +737,18 @@ def _enforce_store_layout(
     write_store_layout_marker(spark, store_dir, kind, store_buckets)
 
 
-def _read_bucket_subtrees(
-    spark: SparkSession, root: str, bucket_col: str, buckets: list
-) -> DataFrame | None:
-    """Direct-path read of ONLY the touched bucket partitions of a
-    bucket-major store (``<root>/<bucket_col>=K/batch_id=N/...``):
-    existence is checked per bucket through the Hadoop FS (≤
-    ``len(buckets)`` RPCs, bounded by ``store_buckets``), then Spark's
-    file index lists just the touched subtrees. This is the layout's
-    whole point: partition PRUNING (filter/INSET on a batch-major
-    layout) avoids reading untouched dirs but still pays a full
-    InMemoryFileIndex discovery of every partition dir per
-    ``spark.read`` — measured ~7 s per read at B=4096 on this host,
-    more than the pruned scan itself (r11, SCALE.md), and a per-trigger
-    O(B·batches) prefix listing on an object store. Bucket-major
-    direct paths make probe cost proportional to the TOUCHED buckets
-    only. Returns None when no touched bucket dir exists yet (e.g. a
-    zero-row first batch). Thin alias over
-    ``sources.readers.read_partition_subtrees`` (shared with the
-    persisted IVF postings probe)."""
-    from big_data_analysis_of_twitter_emoji_usage_spark.sources.readers import (
-        read_partition_subtrees,
-    )
-
-    return read_partition_subtrees(spark, root, bucket_col, buckets)
-
-
 def _read_committed_recent(
     spark: SparkSession, root: str, bid: int
 ) -> DataFrame | None:
     """Direct-path read of a two-tier store's COMMITTED recent batch
-    dirs (``<root>/batch_id=K`` for K < ``bid``) — the r12 probe shape:
-    the in-flight batch's rows come straight from the persisted
-    in-memory frame instead of being read back from the files the
-    trigger just wrote, which (a) removes the land→read-back ordering
-    so the landings can overlap the probe (guide §2.6), and (b) makes
-    the read immune to a concurrent landing's in-flight commit: only
-    dirs whose batches are checkpoint-committed enter the file index
-    (one listStatus, no per-dir existence RPCs). Returns None when no
+    dirs (``<root>/batch_id=K`` for K < ``bid``). The in-flight batch's
+    rows come from the drive's persisted in-memory frame instead of
+    being read back from the files the trigger is writing, which
+    (a) lets the landings overlap the probe, and (b) keeps the read
+    immune to a concurrent landing's in-flight commit: only dirs whose
+    batches are checkpoint-committed enter the file index (one
+    listStatus, no per-dir existence RPCs). Returns None when no
     committed dir exists yet (first trigger, or a fully-rolled tail)."""
-    from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import (
-        _hadoop_fs,
-    )
-
     root = root.rstrip("/")
     fs, hroot = _hadoop_fs(spark, root)
     if not fs.exists(hroot):
@@ -803,18 +765,6 @@ def _read_committed_recent(
     return spark.read.option("basePath", root).parquet(*dirs)
 
 
-def _two_tier(
-    main: DataFrame | None, recent: DataFrame, bucket_col: str
-) -> DataFrame:
-    """Thin alias over ``sources.readers.union_partition_tiers``
-    (shared with the two-tier streamed IVF postings probe)."""
-    from big_data_analysis_of_twitter_emoji_usage_spark.sources.readers import (
-        union_partition_tiers,
-    )
-
-    return union_partition_tiers(main, recent, bucket_col)
-
-
 def _run_two_tier_maintenance(
     spark: SparkSession,
     roots: list[tuple[str, str, bool]],
@@ -822,38 +772,30 @@ def _run_two_tier_maintenance(
     min_batch_dirs: int,
     defer_reap: bool = False,
 ) -> list[str]:
-    """The r12 self-driving maintenance cycle, called from inside
-    ``foreachBatch`` after batch ``bid``'s work lands: for each
-    (root, bucket_col, wide) store root, roll the COMMITTED recent
-    tail (strictly below the in-flight ``bid`` — those batches'
-    checkpoint commits landed before this batch ran, so rolling them
-    adds no new crash window; the in-flight batch stays in the tail,
-    which also keeps the tail non-empty for the next probe's read),
-    then threshold-gated consolidation: ``consolidate_bucket_history``
-    early-returns unless some bucket accumulated ``min_batch_dirs``
-    batch dirs, so the O(store) merge rewrite fires only every ~
-    ``min_batch_dirs / roll_cadence`` cycles instead of every cycle —
-    the single-level LSM amortization (a size-tiered policy is the
-    next refinement; the threshold already bounds per-probe subtree
-    listing at ``min_batch_dirs`` dirs per bucket). ``wide`` stores
-    (shingle/vector payload arrays) roll and consolidate with
-    ``shuffle=False`` — the wide-row exchange was measured spilling
-    past local scratch at the 20M-doc decade (SCALE.md r11).
+    """One in-drive maintenance cycle, fired after batch ``bid``'s work
+    lands: for each (root, bucket_col, wide) store root, roll the
+    COMMITTED recent tail (strictly below the in-flight ``bid`` —
+    those batches' checkpoint commits landed before this batch ran, so
+    rolling them adds no crash window; the in-flight batch stays in
+    the tail, which also keeps the tail non-empty for the next probe's
+    read), then threshold-gated consolidation:
+    ``consolidate_bucket_history`` early-returns unless some bucket
+    accumulated ``min_batch_dirs`` batch dirs, so the merge rewrite
+    fires only every ~``min_batch_dirs / roll_cadence`` cycles (the
+    single-level LSM amortization). ``wide`` stores (shingle/vector
+    payload arrays) roll and consolidate with ``shuffle=False`` — the
+    wide-row exchange was measured spilling past local scratch at the
+    20M-doc decade (SCALE.md).
 
-    ``defer_reap=True`` (r13): the cycle only ADDS files — the rolled
-    recent dirs, the merged buckets' old dirs and the consolidation
-    PENDING marker are NOT deleted; their paths are RETURNED for the
-    caller to pass to ``_reap_deferred`` at a read-quiesced point.
-    The interim double-presence is exactly the two ops' documented
-    crash windows, which every probe tolerates by construction — this
-    is what lets the whole cycle run on a background thread UNDER
-    live probes (guide §2.6) without a delete ever racing a probe's
-    pinned file index. Returns [] when not deferring."""
-    from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import (
-        _hadoop_fs,
-        consolidate_bucket_history,
-        roll_recent_into_store,
-    )
+    ``defer_reap=True``: the cycle only ADDS files — the rolled recent
+    dirs, the merged buckets' old dirs and the consolidation PENDING
+    marker are NOT deleted; their paths are RETURNED for the caller to
+    pass to ``_reap_deferred`` at a read-quiesced point. The interim
+    double-presence is exactly the two ops' documented crash windows,
+    which every probe tolerates by construction — this is what lets
+    the cycle run on a background thread UNDER live probes without a
+    delete ever racing a probe's pinned file index. Returns [] when
+    not deferring."""
 
     def _maintain_one(root: str, bucket_col: str, wide: bool) -> list[str]:
         reap = roll_recent_into_store(
@@ -880,13 +822,9 @@ def _run_two_tier_maintenance(
     # The roots (band store + payload store) are DISJOINT directory
     # trees whose roll/consolidate jobs share no state — submit them
     # from a small thread pool so the second root's jobs back-fill the
-    # executor slots the first root's tail leaves idle (optimization
-    # guide §2.6: actions are only sequential because driver code
-    # calls them sequentially). Within a root the order stays
-    # roll → consolidate (consolidate merges the dirs roll just
-    # landed). Exceptions propagate via future.result().
-    from concurrent.futures import ThreadPoolExecutor
-
+    # executor slots the first root's tail leaves idle. Within a root
+    # the order stays roll → consolidate (consolidate merges the dirs
+    # roll just landed). Exceptions propagate via future.result().
     reap: list[str] = []
     with ThreadPoolExecutor(max_workers=len(roots)) as pool:
         futures = [pool.submit(_maintain_one, *r) for r in roots]
@@ -896,25 +834,20 @@ def _run_two_tier_maintenance(
 
 
 class _MaintenanceScheduler:
-    """Serialized background in-drive maintenance (r13, guide §2.6):
-    at most ONE cycle in flight, run on a single worker thread so
-    later triggers' jobs back-fill the executor slots the cycle's
-    tail leaves idle. ``cycle(bid)`` is the drive's maintenance
-    callable and returns a deferred-deletion list (possibly empty);
-    deletions are reaped at read-quiesced points only — the next
-    foreachBatch entry (``on_trigger_entry``, before any probe plan
-    is built), the next ``fire`` (which also serializes cycles), or
-    ``drain``. A failed cycle surfaces at the next of those points,
-    one trigger later than the r12 synchronous shape — within the
-    ops' documented crash contract (an interrupted cycle was always
-    legal and convergent: the next roll re-rolls everything
-    committed, the consolidation PENDING marker recovers). With
-    ``_OVERLAP_IN_DRIVE_MAINTENANCE`` False, ``fire`` runs the cycle
-    synchronously and reaps inline (the r12 shape, the A/B toggle)."""
+    """Serialized background in-drive maintenance: at most ONE cycle in
+    flight, run on a single worker thread so later triggers' jobs
+    back-fill the executor slots the cycle's tail leaves idle.
+    ``cycle(bid)`` is the drive's maintenance callable and returns a
+    deferred-deletion list (possibly empty); deletions are reaped at
+    read-quiesced points only — the next foreachBatch entry
+    (``on_trigger_entry``, before any probe plan is built), the next
+    ``fire`` (which also serializes cycles), or ``drain``. A failed
+    cycle surfaces at the next of those points, within the ops'
+    documented crash contract (an interrupted cycle is always legal
+    and convergent: the next roll re-rolls everything committed, the
+    consolidation PENDING marker recovers)."""
 
     def __init__(self, spark: SparkSession, cycle):
-        from concurrent.futures import ThreadPoolExecutor
-
         self._spark = spark
         self._cycle = cycle
         self._pool = ThreadPoolExecutor(max_workers=1)
@@ -931,10 +864,7 @@ class _MaintenanceScheduler:
     def fire(self, bid: int) -> None:
         if self._pending is not None:
             self._join_and_reap()
-        if _OVERLAP_IN_DRIVE_MAINTENANCE:
-            self._pending = self._pool.submit(self._cycle, bid)
-        else:
-            _reap_deferred(self._spark, self._cycle(bid))
+        self._pending = self._pool.submit(self._cycle, bid)
 
     def drain(self) -> None:
         try:
@@ -948,19 +878,246 @@ def _reap_deferred(spark: SparkSession, paths: list[str]) -> None:
     """Delete the paths a ``defer_reap`` maintenance cycle returned.
     Call ONLY from a point where no concurrent reader can hold them in
     a pinned file index: between triggers (foreachBatch entry, before
-    any probe plan is built) or after the drive drains. Order is
-    preserved — data dirs first, the consolidation PENDING marker
-    last, keeping the marker ⇒ possible-duplication invariant."""
-    if not paths:
-        return
-    from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import (
-        _hadoop_fs,
-    )
-
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    fs, _ = _hadoop_fs(spark, paths[0])
+    any probe plan is built) or after the drive drains. Each path is
+    resolved against its own filesystem (a cycle may span stores on
+    different schemes). Order is preserved — data dirs first, the
+    consolidation PENDING marker last, keeping the marker ⇒
+    possible-duplication invariant."""
     for p in paths:
-        fs.delete(Path(p), True)
+        fs, hpath = _hadoop_fs(spark, p)
+        fs.delete(hpath, True)
+
+
+def _run_store_drive(
+    spark: SparkSession,
+    stream_df: DataFrame,
+    checkpoint_dir: str,
+    store_dir: str,
+    kind: str,
+    store_buckets: int | None,
+    land,
+    maintain_every: int | None,
+    cycle,
+    read,
+    empty_schema,
+) -> DataFrame:
+    """The drive protocol every accumulating-store drive shares, with
+    the per-batch work passed in (the grouped-map shape: one skeleton,
+    a per-batch function):
+
+    - the layout gate (``_enforce_store_layout``) before the query
+      starts;
+    - per trigger: reap a finished maintenance cycle, ``land(bdf,
+      bid)``, then advance the marker's ``max_batch_id`` watermark —
+      AFTER the batch's work lands, so a crash in between leaves it one
+      batch low, which only makes the fresh-checkpoint gate
+      conservative;
+    - every ``maintain_every``-th trigger of this drive, ``cycle(bid)``
+      on the ``_MaintenanceScheduler`` (the cadence counter is
+      per-drive, not checkpointed state);
+    - an availableNow start, await, and scheduler drain, so the result
+      read sees a quiesced store;
+    - ``read()`` of the result. A drain that landed nothing (empty
+      source, or everything already committed) may have no readable
+      result: ``read()`` returning None or a missing/uninferable path
+      yields an empty frame of ``empty_schema()`` instead."""
+    _enforce_store_layout(spark, store_dir, kind, store_buckets, checkpoint_dir)
+    sched = None if maintain_every is None else _MaintenanceScheduler(spark, cycle)
+    n_landed = [0]
+
+    def _on_batch(bdf: DataFrame, bid: int) -> None:
+        if sched is not None:
+            sched.on_trigger_entry()
+        land(bdf, bid)
+        _record_max_batch_id(spark, store_dir, bid)
+        if sched is not None:
+            n_landed[0] += 1
+            if n_landed[0] % maintain_every == 0:
+                sched.fire(bid)
+
+    query = (
+        stream_df.writeStream.foreachBatch(_on_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        query.awaitTermination()
+    finally:
+        if sched is not None:
+            sched.drain()
+    try:
+        got = read()
+    except AnalysisException as exc:
+        if "PATH_NOT_FOUND" not in str(exc) and (
+            "UNABLE_TO_INFER_SCHEMA" not in str(exc)
+        ):
+            raise
+        got = None
+    return spark.createDataFrame([], empty_schema()) if got is None else got
+
+
+def _stream_banded_dedup(
+    spark: SparkSession,
+    stream_df: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    store_dir: str,
+    kind: str,
+    id_col: str,
+    store_buckets: int,
+    max_bucket: int | None,
+    maintain_every: int | None,
+    consolidate_min_batch_dirs: int,
+    build_state,
+    band_rows,
+    keys: list[str],
+    dropped_ids,
+) -> DataFrame:
+    """The banded two-tier near-dedup drive behind
+    ``stream_near_dedup_minhash`` / ``stream_near_dedup_embedding``
+    (contract in the former's docstring). Per-kind pieces:
+    ``build_state(bdf)`` is the per-batch store increment (id, payload
+    and signature/code columns); ``band_rows(state)`` yields its
+    (id, *keys) LSH band rows, where rows sharing all ``keys`` are
+    candidates; ``dropped_ids(cand, payload)`` verifies candidate
+    (id_a, id_b) pairs against the payload rows of both ids and returns
+    the distinct dropped ids as ``id_col``."""
+    if store_buckets is None or store_buckets < 1:
+        raise ValueError(
+            f"store_buckets={store_buckets!r}: the flat (unbucketed) "
+            "store layout was removed — pass store_buckets >= 1 (the "
+            "catalog drives use 32). A store written flat cannot be "
+            "resumed; rebuild it with a bucket count."
+        )
+    root = store_dir.rstrip("/")
+    bands_dir = root + "_bands"
+
+    def _bucket(*cols) -> Column:
+        return F.pmod(F.xxhash64(*cols), F.lit(store_buckets))
+
+    def _read_touched(
+        hist: str, col: str, touched: list, cur: DataFrame, bid: int
+    ) -> DataFrame:
+        # history subtrees of the touched buckets ∪ committed recent
+        # dirs ∪ the in-flight batch's persisted rows, as of ``bid``
+        committed = _read_committed_recent(spark, hist + "_recent", bid)
+        cur = cur.withColumn("batch_id", F.lit(bid))
+        recent = cur if committed is None else committed.unionByName(cur)
+        return union_partition_tiers(
+            read_partition_subtrees(spark, hist, col, touched),
+            recent.filter(F.col(col).isin(touched)),
+            col,
+        ).filter(F.col("batch_id") <= F.lit(bid))
+
+    def _dedup_batch(bdf: DataFrame, bid: int) -> None:
+        state = build_state(bdf).persist()
+        state_p = state.withColumn("_pbkt", _bucket(F.col(id_col)))
+        bc = band_rows(state).withColumn("_bkt", _bucket(*keys)).persist()
+        cand = seen_cached = None
+        # The landings write dirs nothing in this trigger reads back
+        # (the probe takes the current batch from the persisted frames),
+        # so they overlap the probe on background threads and are
+        # joined before the batch returns: a landing failure must fail
+        # the batch so the checkpoint never commits a half-landed
+        # trigger.
+        pool = ThreadPoolExecutor(max_workers=2)
+        landings = [
+            pool.submit(write_batch_idempotent, state_p, bid, root + "_recent"),
+            pool.submit(write_batch_idempotent, bc, bid, bands_dir + "_recent"),
+        ]
+        try:
+            bkts = [r[0] for r in bc.select("_bkt").distinct().collect()]
+            if not bkts:
+                # zero-row micro-batch: nothing landed, nothing to dedup
+                write_batch_idempotent(bdf, bid, out_dir)
+                return
+            bands_seen = _read_touched(bands_dir, "_bkt", bkts, bc, bid)
+            probe = bc
+            if max_bucket is not None:
+                # Corpus-global hot-band guard: every row of a band
+                # group hashes to the same _bkt, so the touched-subtree
+                # read holds each probed group's full occupancy.
+                # Persisted so the occupancy agg and the candidate join
+                # share one read of the touched subtrees. countDistinct,
+                # not count: the crash windows legally duplicate rows
+                # across tiers, and store rows are unique per (id, band).
+                bands_seen = seen_cached = bands_seen.persist()
+                hot = (
+                    bands_seen.join(
+                        F.broadcast(bc.select(*keys).distinct()), keys
+                    )
+                    .groupBy(*keys)
+                    .agg(F.countDistinct(F.col(id_col)).alias("_bc"))
+                    .filter(F.col("_bc") > max_bucket)
+                    .select(*keys)
+                )
+                probe = bc.join(F.broadcast(hot), keys, "left_anti")
+            on = [F.col("a._bkt") == F.col("b._bkt")]
+            on += [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+            on.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            cand = (
+                bands_seen.alias("a")
+                .join(F.broadcast(probe).alias("b"), reduce(and_, on))
+                .select(
+                    F.col(f"a.{id_col}").alias("id_a"),
+                    F.col(f"b.{id_col}").alias("id_b"),
+                )
+                .distinct()
+                .persist()
+            )
+            # verify reads only the candidates' payload buckets; cand is
+            # persisted so this collect and the verify join share one
+            # execution of the band probe
+            pbkts = [
+                r[0]
+                for r in cand.select(
+                    F.explode(F.array("id_a", "id_b")).alias("_i")
+                )
+                .select(_bucket("_i").alias("_pbkt"))
+                .distinct()
+                .collect()
+            ]
+            keep = bdf
+            if pbkts:
+                payload = _read_touched(root, "_pbkt", pbkts, state_p, bid)
+                keep = bdf.join(dropped_ids(cand, payload), id_col, "left_anti")
+            write_batch_idempotent(keep, bid, out_dir)
+        finally:
+            # join EVERY landing before re-raising: their writes read
+            # the persisted frames unpersisted below
+            errs = []
+            for f in landings:
+                try:
+                    f.result()
+                except BaseException as e:  # noqa: BLE001 — re-raised
+                    errs.append(e)
+            pool.shutdown()
+            for df in (state, bc, cand, seen_cached):
+                if df is not None:
+                    df.unpersist()
+            if errs:
+                raise errs[0]
+
+    return _run_store_drive(
+        spark,
+        stream_df,
+        checkpoint_dir,
+        store_dir,
+        kind,
+        store_buckets,
+        _dedup_batch,
+        maintain_every,
+        lambda bid: _run_two_tier_maintenance(
+            spark,
+            [(bands_dir, "_bkt", False), (store_dir, "_pbkt", True)],
+            bid,
+            consolidate_min_batch_dirs,
+            defer_reap=True,
+        ),
+        lambda: spark.read.parquet(out_dir).drop("batch_id"),
+        lambda: stream_df.schema,
+    )
 
 
 def stream_near_dedup_minhash(
@@ -982,136 +1139,70 @@ def stream_near_dedup_minhash(
     consolidate_min_batch_dirs: int = 8,
 ) -> DataFrame:
     """Incremental near-dup deduplication of a document stream against
-    an accumulating MinHash signature store (r9) — the ingestion-time
-    twin of ``dedup.near_dup_pairs``. New data arrives in micro-batches
-    and each batch is deduplicated against EVERYTHING seen so far
-    without ever recomputing the history: per batch, shingle arrays +
-    MinHash signatures are computed once, landed in the store
-    (``store_dir/batch_id=N`` — overwritten, so checkpoint replays are
-    idempotent), and the batch's LSH bands are probed against the bands
-    of the full store. A document is DROPPED iff some already-seen or
-    smaller-id-same-batch document collides in an LSH band AND exact
-    shingle Jaccard (``dedup.verify_pairs_jaccard``, same arrays) meets
+    an accumulating MinHash signature store — the ingestion-time twin
+    of ``dedup.near_dup_pairs``. Each micro-batch is deduplicated
+    against EVERYTHING seen so far without recomputing the history:
+    its shingle arrays and MinHash signatures are computed once
+    (``build_minhash_store``), landed in the store, and its LSH bands
+    are probed against the bands of the whole store.
+
+    Drop rule: a document is DROPPED iff some already-seen or
+    smaller-id same-batch document collides in an LSH band AND exact
+    shingle Jaccard (``dedup.verify_pairs_jaccard``) meets
     ``threshold``; survivors land in ``out_dir/batch_id=N``
-    (``write_batch_idempotent``). Dropped documents' signatures STAY in
-    the store — the drop rule is "has a smaller qualifying partner,
-    whatever that partner's own fate", which (unlike greedy
-    keep-first-transitively) is batch-boundary-free and therefore
-    exactly equal to the batch rule: under event-order = id-order
+    (``write_batch_idempotent``). Dropped documents STAY in the store —
+    "has a smaller qualifying partner, whatever that partner's own
+    fate" is batch-boundary-free, so under event-order = id-order
     arrival (the staged-replay contract, as ``native_sessionize_stream``)
     the drained keeper set equals ``corpus MINUS {id_b of
-    near_dup_pairs(corpus)}`` at the same parameters, which is the
-    DuckDB oracle. Out-of-order arrival degrades gracefully: it is
-    still "dedup against all prior arrivals + smaller in-batch ids",
-    just no longer the batch-identical pair set.
+    near_dup_pairs(corpus)}`` at the same parameters — the DuckDB
+    oracle. Out-of-order arrival degrades gracefully to "dedup against
+    all prior arrivals + smaller in-batch ids".
 
-    Scale shape — the part that matters at 100 TB of history: the
-    history is NEVER shuffled and NEVER recomputed. Each trigger costs
-    two columnar scans of the store (parquet, partitioned by batch_id):
-    the band probe reads only the ``h*`` signature columns and joins
-    against the BROADCAST bands of the current batch (micro-batches
-    are small by construction — broadcast-hash, zero exchange on the
-    history side), and the verify reads only the ``shingles`` column
-    for the handful of candidate ids. Per-doc state is written exactly
-    once, at arrival. The sum over triggers is O(total × history/batch)
-    scan work with the flat layout — the intrinsic cost of exact dedup
-    against full history when every trigger re-bands the whole store.
-    ``store_buckets`` (r10, bucket-major since r11) is the banded
-    layout that removes it: when set, each batch's band rows are ALSO
-    landed pre-banded at ``<store_dir>_bands/_bkt=K/batch_id=N`` where
-    ``_bkt = pmod(xxhash64(band, sig), store_buckets)``, landed via
-    DYNAMIC partition overwrite (a checkpoint replay rewrites exactly
-    its own (bucket, batch) leaves — exactly-once at the file level),
-    and the probe reads ONLY the touched bucket subtrees by direct
-    path (``_read_bucket_subtrees``; one bounded driver-side collect
-    of ≤ store_buckets bucket ids + ≤ store_buckets FS existence
-    checks per trigger). Untouched bucket directories are never read
-    — and, since r11, never even LISTED: the r10 batch-major layout
-    (``batch_id=N/_bkt=K`` + literal-IN partition pruning) skipped the
-    untouched dirs' bytes but still paid a full file-index discovery
-    of every partition dir per read, measured at ~7 s per read at
-    B=4096 on this host — more than the pruned scan itself — and an
-    O(B·batches) prefix listing on an object store (SCALE.md r11;
-    literal IN rather than DPP because DPP's benefit heuristic was
-    measured declining to plant at that bucket count). History is
-    never re-banded (the flat probe re-derives band rows from the h*
-    columns every trigger; the banded store pays that once at
-    arrival). Probe cost ≈ coverage(m, store_buckets) × (listing +
-    history-read) where a batch with ``m`` band rows touches ≤ m
-    buckets — constant-in-history in the trickle regime (small
-    frequent batches against deep history); a batch with m ≫
-    store_buckets covers every bucket and degrades to the flat scan
-    cost. Size ``store_buckets`` ≈ 5–10× the per-trigger band-row
-    count.
+    Store layout (``store_buckets`` ≥ 1, required): two-tier and
+    bucket-major. Band rows are keyed ``_bkt = pmod(xxhash64(band,
+    sig), store_buckets)`` under ``<store_dir>_bands``; signature and
+    shingle rows are keyed ``_pbkt = pmod(xxhash64(id),
+    store_buckets)`` under ``store_dir``. Each trigger lands batch-major
+    in the ``_recent`` tails (one cheap overwritten ``batch_id=N`` dir
+    per root, so replays are idempotent); maintenance
+    (``sources.writers.roll_recent_into_store`` then
+    ``consolidate_bucket_history``) moves committed tails into
+    ``<bucket>=K/batch_id=N`` history. The probe reads by direct path
+    only the history subtrees of the buckets the batch touches plus
+    the recent tail, and the verify reads only the candidate ids'
+    payload buckets — per-trigger cost tracks the touched buckets, not
+    the history (size ``store_buckets`` ≈ 5–10× the per-trigger
+    band-row count; SCALE.md has the measurements). The layout is a
+    STORE-LIFETIME contract: ``<store_dir>/_layout.json`` (kind
+    ``minhash``) is written on first use and the drive REFUSES a
+    mismatched bucket count, an unmarked non-empty store, or a fresh
+    checkpoint against a store with landed batches.
 
-    The banded layout also ID-BUCKETS THE PAYLOAD (r11): signature
-    rows land under ``store_dir/_pbkt=K/batch_id=N`` with ``_pbkt =
-    pmod(xxhash64(id), store_buckets)``, and the exact-Jaccard verify
-    reads only the candidate ids' bucket subtrees (same direct-path
-    idiom as the band probe) — without it every trigger scanned the
-    full history's ``shingles`` column (the store's widest) for a
-    handful of candidates, an O(history)-per-trigger term the banded
-    band probe alone did not remove (VERDICT r10; measured 6×+ and
-    growing at the 5M-doc decade, SCALE.md).
+    Crash windows: landings are per-batch overwrites (a replay rewrites
+    its own dirs); an interrupted roll or consolidation leaves rows in
+    both tiers, which the probe tolerates (DISTINCT candidate and drop
+    sets, countDistinct occupancy, pair-aggregated verify) and the next
+    cycle converges. ``maintain_every=N`` runs one maintenance cycle
+    in-drive after every Nth trigger, on a background thread with
+    deletes deferred to between triggers; it rolls only
+    checkpoint-committed batches (ids below the in-flight one), and
+    consolidation fires once some bucket holds
+    ``consolidate_min_batch_dirs`` batch dirs.
 
-    The layout is a STORE-LIFETIME contract like the signature space:
-    resuming a store written flat with ``store_buckets`` set (or
-    changing the bucket count) would silently hide pre-switch history
-    from the probe — so the drive persists the layout in
-    ``<store_dir>/_layout.json`` on first use and REFUSES to start on
-    a mismatch or on an unmarked pre-existing store
-    (``_enforce_store_layout``); rebuild the store to change layout,
-    exactly like re-bucketing.
-
-    TWO-TIER LANDING (r11): a dynamic-overwrite landing straight into
-    the bucket-major layout costs ~17 ms of commit per touched
-    partition dir PER TRIGGER (measured ~9 s/trigger at B=4096 —
-    dominating the otherwise-constant banded trigger), so each batch
-    lands batch-major in ``<store_dir>_recent`` / ``<bands>_recent``
-    (one cheap dir per trigger) and probes read history ∪ recent
-    (``_two_tier``). Maintenance loop:
-    ``sources.writers.roll_recent_into_store`` on BOTH roots (pays the
-    per-dir commit once per cycle; its crash window only duplicates
-    rows across tiers, which the DISTINCT candidate/drop sets and the
-    pair-aggregating verify tolerate), then
-    ``consolidate_bucket_history`` to merge each bucket's accumulated
-    batch dirs (probe filters ``batch_id <= bid`` keep merged history
-    visible). Roll cadence bounds the recent tail's listing cost —
-    unrolled, the recent tier degrades toward the flat layout's
-    per-trigger scan. SELF-DRIVING since r12: ``maintain_every=N``
-    runs that loop in-drive from ``foreachBatch`` after every Nth
-    landed batch (``_run_two_tier_maintenance`` — rolls only
-    checkpoint-COMMITTED batches, so no new crash window; the O(store)
-    consolidation rewrite is threshold-gated on
-    ``consolidate_min_batch_dirs`` dirs in some bucket, the
-    single-level LSM amortization), instead of requiring an external
-    scheduler between drives. Two-tier only (requires
-    ``store_buckets``).
-
-    ``max_bucket`` (r12) is the hot-band backstop the batch operator
-    has (``dedup.near_dup_pairs(max_bucket=...)``): (band, sig) groups
-    whose occupancy exceeds it produce NO candidates — the bound that
-    keeps a degenerate boilerplate/template band from fanning out
-    every trigger's probe join without limit. The occupancy is
-    CORPUS-GLOBAL AS OF EACH TRIGGER, not per-probe-batch: every row
-    of a (band, sig) group hashes to the same ``_bkt``, so the probe's
-    touched-subtree read already holds each probed group's full
-    history∪recent∪current occupancy, and the guard applies the exact
-    batch window-count rule to the corpus-so-far (one extra aggregation
-    over the already-read subtrees, candidate-group-restricted). The
-    one semantic caveat is inherent to ANY online guard: a group that
-    crosses the cap mid-stream produced drops while it was small
-    (each a correct application of the batch rule to that trigger's
-    prefix corpus) and stops producing new ones after — on corpora
-    where no group crosses the cap mid-stream (including every
-    non-skewed corpus, where the guard never engages) the drained
-    keeper set equals the batch operator's at the same ``max_bucket``.
+    ``max_bucket`` is the hot-band backstop of
+    ``dedup.near_dup_pairs(max_bucket=...)``: (band, sig) groups whose
+    occupancy exceeds it produce NO candidates. The occupancy is
+    corpus-global AS OF EACH TRIGGER (history ∪ recent ∪ current). The
+    one caveat is inherent to any online guard: a group that crosses
+    the cap mid-stream produced drops while it was small (each the
+    batch rule applied to that trigger's prefix corpus) and stops
+    producing new ones after; where no group crosses the cap
+    mid-stream the drained keeper set equals the batch operator's at
+    the same ``max_bucket``.
 
     Returns the drained keeper rows (original stream columns) as a
-    batch DataFrame over ``out_dir``.
-    """
-    from pyspark.errors import AnalysisException
-
+    batch DataFrame over ``out_dir``."""
     from big_data_analysis_of_twitter_emoji_usage_spark.operators.dedup import (
         build_minhash_store,
         signature_bands,
@@ -1119,325 +1210,31 @@ def stream_near_dedup_minhash(
     )
 
     hcols = [f"h{i}" for i in range(num_hashes)]
-    bands_dir = store_dir.rstrip("/") + "_bands"
-    if maintain_every is not None and store_buckets is None:
-        raise ValueError(
-            "maintain_every requires the two-tier banded layout "
-            "(store_buckets): the flat layout has no recent tail to "
-            "roll or bucket history to consolidate."
-        )
-    _enforce_store_layout(
-        spark, store_dir, "minhash", store_buckets, checkpoint_dir
-    )
-
-    def _dedup_batch(bdf: DataFrame, bid: int) -> None:
-        # the per-batch state IS one build_minhash_store increment —
-        # batch-built reference stores and this accumulating store are
-        # interchangeable (dedup.near_dup_pairs_against_store probes
-        # either)
-        state = build_minhash_store(
+    return _stream_banded_dedup(
+        spark,
+        stream_df,
+        out_dir,
+        checkpoint_dir,
+        store_dir,
+        "minhash",
+        id_col,
+        store_buckets,
+        max_bucket,
+        maintain_every,
+        consolidate_min_batch_dirs,
+        build_state=lambda bdf: build_minhash_store(
             bdf, text_col, id_col, k, num_hashes, unit
+        ),
+        band_rows=lambda state: signature_bands(
+            state.select(id_col, *hcols), id_col, num_hashes, band_size
+        ),
+        keys=["band", "sig"],
+        dropped_ids=lambda cand, payload: verify_pairs_jaccard(
+            cand, payload.select(id_col, "shingles"), id_col, threshold
         )
-        if store_buckets is None:
-            # flat layout: one compute of the shingle/signature kernel
-            # per batch; the probe and verify below re-READ it columnar
-            # instead of re-executing the subtree (SCALE.md execution
-            # caveat). <= bid: replays must not see a later batch's
-            # state (none can exist in normal operation — out_dir lands
-            # after store — but the filter makes the replay read-set
-            # explicit and exact).
-            state.write.mode("overwrite").parquet(
-                f"{store_dir}/batch_id={bid}"
-            )
-            store = spark.read.parquet(store_dir).filter(
-                F.col("batch_id") <= F.lit(bid)
-            )
-            cur = store.filter(F.col("batch_id") == bid)
-            bands_cur = signature_bands(
-                cur.select(id_col, *hcols), id_col, num_hashes, band_size
-            )
-            # the seen side carries the corpus-global occupancy guard
-            # (window count over the WHOLE store incl. this batch —
-            # the exact batch-operator rule); emptying a hot group on
-            # one side of the equi-join kills all its pairs
-            bands_seen = signature_bands(
-                store.select(id_col, *hcols),
-                id_col,
-                num_hashes,
-                band_size,
-                max_bucket,
-            )
-            cand = (
-                bands_seen.alias("a")
-                .join(
-                    F.broadcast(bands_cur).alias("b"),
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.sig") == F.col("b.sig"))
-                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-                )
-                .select(
-                    F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"),
-                )
-                .distinct()
-            )
-            pairs = verify_pairs_jaccard(
-                cand, store.select(id_col, "shingles"), id_col, threshold
-            )
-            dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
-            write_batch_idempotent(
-                bdf.join(dropped, id_col, "left_anti"), bid, out_dir
-            )
-            return
-        # Banded (two-tier bucket-major) layout: each batch lands
-        # BATCH-MAJOR in the _recent tails (one per-batch overwrite
-        # dir — write_batch_idempotent, so a checkpoint replay
-        # rewrites its own dir and landings stay exactly-once at the
-        # file level) and the maintenance roll moves committed tails
-        # into <bucket>=K/batch_id=N history (landing there directly
-        # would pay the dynamic-overwrite commit per touched dir per
-        # trigger; SCALE.md r11). Probes read ONLY the touched bucket
-        # subtrees of the history tier by direct path
-        # (_read_bucket_subtrees) plus the small recent tail — the r10
-        # batch-major layout pruned the SCAN with a literal IN on _bkt
-        # but still paid a full partition discovery of all
-        # ~store_buckets dirs per read (measured ~7 s at B=4096,
-        # dominating the probe). The per-trigger driver work stays
-        # bounded: one collect of the batch's ≤ store_buckets band
-        # buckets, one of the candidates' ≤ store_buckets payload
-        # buckets, and ≤ store_buckets FS existence checks per probe.
-        state = state.persist()
-        state_p = state.withColumn(
-            "_pbkt",
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(store_buckets)),
-        )
-        bc = (
-            signature_bands(
-                state.select(id_col, *hcols), id_col, num_hashes, band_size
-            )
-            .withColumn(
-                "_bkt", F.pmod(F.xxhash64("band", "sig"), F.lit(store_buckets))
-            )
-            .persist()
-        )
-        cand = None
-        seen_cached = None
-        # r12 trigger shape: the two landings write dirs nothing in
-        # this trigger reads back — the probe takes the current batch's
-        # rows from the PERSISTED state/bc frames and the recent tail
-        # from the already-committed batch dirs (_read_committed_recent)
-        # — so both writes run on background threads, overlapped with
-        # the probe/verify jobs (guide §2.6), and are joined before the
-        # batch returns (a landing failure must fail the batch so the
-        # checkpoint never commits a half-landed trigger).
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=2)
-        landings = [
-            pool.submit(
-                write_batch_idempotent,
-                state_p,
-                bid,
-                store_dir.rstrip("/") + "_recent",
-            ),
-            pool.submit(write_batch_idempotent, bc, bid, bands_dir + "_recent"),
-        ]
-        try:
-            bkts = [r[0] for r in bc.select("_bkt").distinct().collect()]
-            if not bkts:
-                # zero-row micro-batch: nothing landed, nothing to dedup
-                write_batch_idempotent(bdf, bid, out_dir)
-                return
-            committed_bands = _read_committed_recent(
-                spark, bands_dir + "_recent", bid
-            )
-            cur_bands = bc.withColumn("batch_id", F.lit(bid))
-            recent_bands = (
-                cur_bands
-                if committed_bands is None
-                else committed_bands.unionByName(cur_bands)
-            )
-            bands_seen = _two_tier(
-                _read_bucket_subtrees(spark, bands_dir, "_bkt", bkts),
-                recent_bands.filter(F.col("_bkt").isin(bkts)),
-                "_bkt",
-            ).filter(F.col("batch_id") <= F.lit(bid))
-            probe = bc
-            if max_bucket is not None:
-                # corpus-global hot-band backstop (r12): every row of
-                # a (band, sig) group hashes to the same _bkt, so the
-                # touched-subtree read above already holds each probed
-                # group's FULL history∪recent∪current occupancy — one
-                # extra aggregation over those subtrees (restricted to
-                # the batch's own groups by the broadcast semi-join)
-                # computes the exact batch-operator window count, and
-                # hot groups are emptied from the broadcast probe side
-                # (killing all their pairs). ``hot`` is bounded by the
-                # batch's distinct groups — broadcastable by the same
-                # argument as bc itself. bands_seen is persisted so the
-                # occupancy agg and the candidate join share ONE read
-                # of the touched subtrees — the dominant per-trigger IO
-                # at deep history, which the guard must not double.
-                bands_seen = seen_cached = bands_seen.persist()
-                hot = (
-                    bands_seen.join(
-                        F.broadcast(bc.select("band", "sig").distinct()),
-                        ["band", "sig"],
-                    )
-                    .groupBy("band", "sig")
-                    # countDistinct, not count: the store's documented
-                    # crash windows (roll/consolidate interrupted,
-                    # replayed final batch) legally duplicate rows
-                    # across tiers, and a raw row count would inflate
-                    # occupancy and spuriously engage the guard —
-                    # store rows are unique per (id, band) by
-                    # construction, so the distinct-id count IS the
-                    # batch operator's occupancy under any duplication
-                    .agg(F.countDistinct(F.col(id_col)).alias("_bc"))
-                    .filter(F.col("_bc") > max_bucket)
-                    .select("band", "sig")
-                )
-                probe = bc.join(
-                    F.broadcast(hot), ["band", "sig"], "left_anti"
-                )
-            cand = (
-                bands_seen.alias("a")
-                .join(
-                    F.broadcast(probe).alias("b"),
-                    (F.col("a._bkt") == F.col("b._bkt"))
-                    & (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.sig") == F.col("b.sig"))
-                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-                )
-                .select(
-                    F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"),
-                )
-                .distinct()
-                .persist()
-            )
-            # verify pruned to the candidates' payload buckets (r11):
-            # the exact-Jaccard verify reads the store's WIDEST column
-            # (shingles) for a handful of candidate ids — the pruned
-            # direct-path read touches only their buckets instead of
-            # scanning (or even listing) the whole history's payload.
-            # cand is persisted so the bucket collect and the verify
-            # join share one execution of the band-probe subtree.
-            pbkts = [
-                r[0]
-                for r in cand.select(
-                    F.explode(F.array("id_a", "id_b")).alias("_i")
-                )
-                .select(
-                    F.pmod(F.xxhash64("_i"), F.lit(store_buckets)).alias(
-                        "_pbkt"
-                    )
-                )
-                .distinct()
-                .collect()
-            ]
-            if not pbkts:
-                keep = bdf
-            else:
-                committed_pay = _read_committed_recent(
-                    spark, store_dir.rstrip("/") + "_recent", bid
-                )
-                cur_pay = state_p.withColumn("batch_id", F.lit(bid))
-                recent_pay = (
-                    cur_pay
-                    if committed_pay is None
-                    else committed_pay.unionByName(cur_pay)
-                )
-                payload = _two_tier(
-                    _read_bucket_subtrees(spark, store_dir, "_pbkt", pbkts),
-                    recent_pay.filter(F.col("_pbkt").isin(pbkts)),
-                    "_pbkt",
-                ).filter(F.col("batch_id") <= F.lit(bid)).select(
-                    id_col, "shingles"
-                )
-                pairs = verify_pairs_jaccard(
-                    cand, payload, id_col, threshold
-                )
-                dropped = pairs.select(
-                    F.col("id_b").alias(id_col)
-                ).distinct()
-                keep = bdf.join(dropped, id_col, "left_anti")
-            write_batch_idempotent(keep, bid, out_dir)
-        finally:
-            # join the landing threads FIRST: their writes read the
-            # persisted frames, and a landing failure must propagate.
-            # Drain EVERY future before re-raising (r13, ADVICE r12):
-            # result() raising on the first landing must not skip the
-            # second landing's join (its write would still be in
-            # flight while the frames unpersist below) nor the pool
-            # shutdown (leaked executor threads for the process life).
-            _errs = []
-            for _f in landings:
-                try:
-                    _f.result()
-                except BaseException as _e:  # noqa: BLE001 — re-raised
-                    _errs.append(_e)
-            pool.shutdown()
-            state.unpersist()
-            bc.unpersist()
-            if cand is not None:
-                cand.unpersist()
-            if seen_cached is not None:
-                seen_cached.unpersist()
-            if _errs:
-                raise _errs[0]
-
-    n_landed = [0]  # triggers since drive start (cadence, not state)
-    # r13: the maintenance cycle runs on a background thread with
-    # DEFERRED reaping — the cycle only ADDS files (the roll/
-    # consolidate crash-window shape every probe tolerates), and the
-    # deletes land between triggers, where no probe holds a pinned
-    # file index (guide §2.6; _MaintenanceScheduler).
-    sched = (
-        _MaintenanceScheduler(
-            spark,
-            lambda bid: _run_two_tier_maintenance(
-                spark,
-                [(bands_dir, "_bkt", False), (store_dir, "_pbkt", True)],
-                bid,
-                consolidate_min_batch_dirs,
-                defer_reap=True,
-            ),
-        )
-        if maintain_every is not None
-        else None
+        .select(F.col("id_b").alias(id_col))
+        .distinct(),
     )
-
-    def _on_batch(bdf: DataFrame, bid: int) -> None:
-        if sched is not None:
-            sched.on_trigger_entry()
-        _dedup_batch(bdf, bid)
-        # marker watermark AFTER the batch's work lands — a crash in
-        # between leaves the watermark one batch low, which only makes
-        # the fresh-checkpoint gate conservative (never permissive)
-        _record_max_batch_id(spark, store_dir, bid)
-        if maintain_every is not None:
-            n_landed[0] += 1
-            if n_landed[0] % maintain_every == 0:
-                sched.fire(bid)
-
-    query = (
-        stream_df.writeStream.foreachBatch(_on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        if sched is not None:
-            sched.drain()
-    try:
-        return spark.read.parquet(out_dir).drop("batch_id")
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc):
-            return spark.createDataFrame([], stream_df.schema)
-        raise
 
 
 def stream_near_dedup_embedding(
@@ -1457,407 +1254,86 @@ def stream_near_dedup_embedding(
     consolidate_min_batch_dirs: int = 8,
 ) -> DataFrame:
     """Incremental SEMANTIC near-dup deduplication of an embedding
-    stream against an accumulating sign-LSH bucket store (r9) — the
-    embedding-space twin of ``stream_near_dedup_minhash`` and the
-    ingestion-time twin of ``similarity.embedding_near_dup_pairs``. Per
-    micro-batch: vectors and their per-table coordinate-sign bucket
-    codes are computed ONCE at arrival and landed in the store
-    (``store_dir/batch_id=N``, overwritten — replay-idempotent), the
-    batch's (table, bucket) rows probe the full store's via
-    broadcast-hash (history never shuffled), and candidates are
-    verified by exact cosine against the stored vectors. A vector is
-    DROPPED iff some smaller-id already-seen or same-batch vector
-    shares a bucket in any table at cosine ≥ ``threshold``; dropped
-    vectors' codes STAY in the store (the "smaller qualifying partner,
-    whatever its fate" rule — batch-boundary-free), so under ordered
-    arrival the drained keeper set equals the batch operator's keeper
-    rule exactly.
+    stream against an accumulating sign-LSH bucket store — the
+    ingestion-time twin of ``similarity.embedding_near_dup_pairs``, on
+    the same drive as ``stream_near_dedup_minhash`` (same store layout,
+    crash windows, maintenance and ``max_bucket`` contracts; layout
+    kind ``signbucket``). Per micro-batch, vectors and their per-table
+    coordinate-sign bucket codes are computed once
+    (``build_signbucket_store``, which also lands the self-norm ``_n``);
+    the band rows are (table ``_t``, bucket ``_b``), and candidates are
+    verified by exact cosine against the stored vectors and norms. A
+    vector is DROPPED iff some smaller-id already-seen or same-batch
+    vector shares a bucket in any table at cosine ≥ ``threshold``, so
+    under ordered arrival the drained keeper set equals the batch
+    operator's keeper rule exactly.
 
-    ``bits``/``tables`` are REQUIRED static here (no auto-bits): the
-    bucket space must be identical across the store's whole lifetime —
-    a per-batch corpus-sized ``bits`` would re-key history and silently
-    miss cross-batch pairs. Size them for the corpus the store will
-    GROW INTO (the ``auto_sign_bits`` rule at expected n), and rebuild
-    the store on re-bucketing, exactly like any persisted LSH index.
-    ``max_bucket`` (r12) is the corpus-global hot-bucket backstop —
-    (table, bucket) groups whose occupancy across everything seen so
-    far exceeds it produce no candidates, the exact
-    ``similarity.embedding_near_dup_pairs(max_bucket=...)`` window
-    rule applied to the corpus-as-of-each-trigger (see the MinHash
-    twin's docstring for why the touched-subtree read already holds
-    the full occupancy and for the one inherent online caveat).
-    ``maintain_every`` / ``consolidate_min_batch_dirs`` (r12) run the
-    two-tier maintenance loop in-drive, every Nth landed batch —
-    same contract as the MinHash twin.
-
-    Scale shape: per-vector state is written once at arrival; each
-    trigger costs two columnar store scans (bucket-code columns for
-    the probe, vector column for the handful of candidates) joined
-    against the BROADCAST batch — O(total × history/batch) total scan
-    work with the flat layout. ``store_buckets`` (r10) is the same
-    band-partitioned lever as the MinHash twin's, with the SAME
-    two-tier bucket-major shape (see that docstring for the layout
-    measurements): (table, bucket) rows — ``_bkt =
-    pmod(xxhash64(_t, _b), store_buckets)`` — and ``_pbkt``-keyed
-    payload rows land batch-major in ``<dir>_recent`` per trigger (one
-    cheap dir; the straight bucket-major landing's per-dir commit was
-    the dominant trigger cost), probes read the bucket-major history
-    tier ∪ recent by direct path over the TOUCHED buckets only, and
-    the cosine verify reads only the candidate ids' payload buckets
-    plus the stored per-vector self-norm ``_n`` — no per-trigger
-    whole-history scan, listing, or norm recompute. The win is real
-    in the trickle regime (per-trigger band rows ≪ ``store_buckets``),
-    and the layout is a store-lifetime contract like ``bits``,
-    enforced by the ``<store_dir>/_layout.json`` marker (the drive
-    refuses a mismatched or unmarked resume; never flip layout or
-    bucket count mid-store). Maintenance loop, between drives:
-    ``roll_recent_into_store`` on both roots, then
-    ``consolidate_bucket_history`` (see the MinHash twin).
+    ``bits``/``tables`` are static for the store's lifetime (no
+    auto-bits): a per-batch corpus-sized ``bits`` would re-key history
+    and silently miss cross-batch pairs. Size them for the corpus the
+    store will GROW INTO (the ``auto_sign_bits`` rule at expected n),
+    and rebuild the store to re-bucket. ``max_bucket`` applies the
+    ``embedding_near_dup_pairs(max_bucket=...)`` rule to (table,
+    bucket) groups, corpus-global as of each trigger.
 
     Returns the drained keeper rows (original stream columns) over
-    ``out_dir``.
-    """
+    ``out_dir``."""
+    from big_data_analysis_of_twitter_emoji_usage_spark.core import explode_nonempty
     from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
-        _dot_d,
         build_signbucket_store,
         cosine_with_norms,
     )
-    from big_data_analysis_of_twitter_emoji_usage_spark.core import explode_nonempty
 
-    # dim=None → interpreted-HOF dot everywhere in this drive: the
-    # codegen-unrolled _dot_d only wins at pair volumes far above a
-    # trigger's candidate count (interleaved A/B, OPTIMIZATION_r12),
-    # and a per-drive width probe is one more job per trigger path.
-    # The plumbing stays (_dot_d(..., None) ≡ _dot) so a large-batch
-    # deployment can re-engage it with one probed constant.
-
-    def _drive_dim(bdf: DataFrame) -> int | None:
-        return None
-
-    bcols = [f"b{t}" for t in range(tables)]
-
-    def _bands(df: DataFrame) -> DataFrame:
+    def _bands(state: DataFrame) -> DataFrame:
         structs = F.array(
             *[
                 F.struct(F.lit(t).alias("t"), F.col(f"b{t}").alias("b"))
                 for t in range(tables)
             ]
         )
-        return df.select(
+        return state.select(
             F.col(id_col), explode_nonempty(structs).alias("_tb")
         ).select(id_col, F.col("_tb.t").alias("_t"), F.col("_tb.b").alias("_b"))
 
-    from pyspark.errors import AnalysisException
+    def _cosine_dropped(cand: DataFrame, payload: DataFrame) -> DataFrame:
+        def side(s: str) -> DataFrame:
+            return payload.select(
+                F.col(id_col).alias(f"id_{s}"),
+                F.col("_v").alias(f"_v{s}"),
+                F.col("_n").alias(f"_n{s}"),
+            )
 
-    bands_dir = store_dir.rstrip("/") + "_bands"
-    if maintain_every is not None and store_buckets is None:
-        raise ValueError(
-            "maintain_every requires the two-tier banded layout "
-            "(store_buckets): the flat layout has no recent tail to "
-            "roll or bucket history to consolidate."
-        )
-    _enforce_store_layout(
-        spark, store_dir, "signbucket", store_buckets, checkpoint_dir
-    )
-
-    def _dedup_batch(bdf: DataFrame, bid: int) -> None:
-        # one build_signbucket_store increment — batch-built reference
-        # stores and this accumulating store are interchangeable
-        # (similarity.embedding_near_dup_against_store probes either)
-        dim = _drive_dim(bdf)
-        state = build_signbucket_store(bdf, id_col, vec_col, bits, tables, dim)
-        if store_buckets is None:
-            # flat layout (see the MinHash twin for the replay filter)
-            state.write.mode("overwrite").parquet(
-                f"{store_dir}/batch_id={bid}"
-            )
-            store = spark.read.parquet(store_dir).filter(
-                F.col("batch_id") <= F.lit(bid)
-            )
-            cur = store.filter(F.col("batch_id") == bid)
-            bands_cur = _bands(cur.select(id_col, *bcols))
-            bands_all = _bands(store.select(id_col, *bcols))
-            if max_bucket is not None:
-                # corpus-global occupancy guard on the seen side —
-                # the exact _banded_pairs_cosine_verify window rule
-                # over the whole store incl. this batch; emptying a
-                # hot group on one join side kills all its pairs
-                from pyspark.sql import Window
-
-                w = Window.partitionBy("_t", "_b")
-                bands_all = (
-                    bands_all.withColumn("_bc", F.count(F.lit(1)).over(w))
-                    .filter(F.col("_bc") <= max_bucket)
-                    .drop("_bc")
-                )
-            cand = (
-                bands_all.alias("a")
-                .join(
-                    F.broadcast(bands_cur).alias("b"),
-                    (F.col("a._t") == F.col("b._t"))
-                    & (F.col("a._b") == F.col("b._b"))
-                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-                )
-                .select(
-                    F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"),
-                )
-                .distinct()
-            )
-            # stored self-norm (r11 store schema; build_signbucket_store
-            # lands _n at arrival) — recomputing _dot(_v,_v) here was
-            # one interpreted-HOF pass over the ENTIRE accumulated
-            # store per trigger (VERDICT r10 #1). Fallback compute for
-            # seeded stores predating the column.
-            _nexpr = (
-                F.col("_n")
-                if "_n" in store.columns
-                else _dot_d(F.col("_v"), F.col("_v"), dim)
-            )
-            vecs = store.select(F.col(id_col), F.col("_v"), _nexpr.alias("_n"))
-            dropped = _cosine_dropped(cand, vecs, dim)
-            write_batch_idempotent(
-                bdf.join(dropped, id_col, "left_anti"), bid, out_dir
-            )
-            return
-        # Banded (two-tier bucket-major) layout — same shape as the
-        # MinHash twin: batch-major _recent landings per trigger,
-        # rolled into <bucket>=K/batch_id=N history by maintenance,
-        # probes by direct path over the touched bucket subtrees of
-        # history plus the recent tail (see the MinHash twin's branch
-        # comment for the measured whys).
-        state = state.persist()
-        state_p = state.withColumn(
-            "_pbkt",
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(store_buckets)),
-        )
-        bc = (
-            _bands(state.select(id_col, *bcols))
-            .withColumn(
-                "_bkt", F.pmod(F.xxhash64("_t", "_b"), F.lit(store_buckets))
-            )
-            .persist()
-        )
-        cand = None
-        seen_cached = None
-        # r12 trigger shape — see the MinHash twin: landings write dirs
-        # nothing in this trigger reads back (current rows come from
-        # the persisted frames, committed recent dirs are read by
-        # direct path), so both writes overlap the probe on background
-        # threads and are joined before the batch returns.
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=2)
-        landings = [
-            pool.submit(
-                write_batch_idempotent,
-                state_p,
-                bid,
-                store_dir.rstrip("/") + "_recent",
-            ),
-            pool.submit(write_batch_idempotent, bc, bid, bands_dir + "_recent"),
-        ]
-        try:
-            bkts = [r[0] for r in bc.select("_bkt").distinct().collect()]
-            if not bkts:
-                # zero-row micro-batch: nothing landed, nothing to dedup
-                write_batch_idempotent(bdf, bid, out_dir)
-                return
-            committed_bands = _read_committed_recent(
-                spark, bands_dir + "_recent", bid
-            )
-            cur_bands = bc.withColumn("batch_id", F.lit(bid))
-            recent_bands = (
-                cur_bands
-                if committed_bands is None
-                else committed_bands.unionByName(cur_bands)
-            )
-            bands_seen = _two_tier(
-                _read_bucket_subtrees(spark, bands_dir, "_bkt", bkts),
-                recent_bands.filter(F.col("_bkt").isin(bkts)),
-                "_bkt",
-            ).filter(F.col("batch_id") <= F.lit(bid))
-            probe = bc
-            if max_bucket is not None:
-                # corpus-global hot-bucket backstop (r12) — see the
-                # MinHash twin: the touched subtrees hold each probed
-                # (table, bucket) group's FULL occupancy; persisted so
-                # the occupancy agg and the candidate join share one
-                # touched-subtree read
-                bands_seen = seen_cached = bands_seen.persist()
-                hot = (
-                    bands_seen.join(
-                        F.broadcast(bc.select("_t", "_b").distinct()),
-                        ["_t", "_b"],
-                    )
-                    .groupBy("_t", "_b")
-                    # countDistinct: dedup-robust across the crash
-                    # windows' cross-tier duplication (see the
-                    # MinHash twin)
-                    .agg(F.countDistinct(F.col(id_col)).alias("_bc"))
-                    .filter(F.col("_bc") > max_bucket)
-                    .select("_t", "_b")
-                )
-                probe = bc.join(F.broadcast(hot), ["_t", "_b"], "left_anti")
-            cand = (
-                bands_seen.alias("a")
-                .join(
-                    F.broadcast(probe).alias("b"),
-                    (F.col("a._bkt") == F.col("b._bkt"))
-                    & (F.col("a._t") == F.col("b._t"))
-                    & (F.col("a._b") == F.col("b._b"))
-                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-                )
-                .select(
-                    F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"),
-                )
-                .distinct()
-                .persist()
-            )
-            # cosine verify over the candidates' payload buckets only,
-            # reading the STORED self-norm _n (r11): no per-trigger
-            # whole-history vector scan and no per-row norm recompute
-            pbkts = [
-                r[0]
-                for r in cand.select(
-                    F.explode(F.array("id_a", "id_b")).alias("_i")
-                )
-                .select(
-                    F.pmod(F.xxhash64("_i"), F.lit(store_buckets)).alias(
-                        "_pbkt"
-                    )
-                )
-                .distinct()
-                .collect()
-            ]
-            if not pbkts:
-                payload = None
-                keep = bdf
-            else:
-                committed_pay = _read_committed_recent(
-                    spark, store_dir.rstrip("/") + "_recent", bid
-                )
-                cur_pay = state_p.withColumn("batch_id", F.lit(bid))
-                recent_pay = (
-                    cur_pay
-                    if committed_pay is None
-                    else committed_pay.unionByName(cur_pay)
-                )
-                payload = _two_tier(
-                    _read_bucket_subtrees(spark, store_dir, "_pbkt", pbkts),
-                    recent_pay.filter(F.col("_pbkt").isin(pbkts)),
-                    "_pbkt",
-                ).filter(F.col("batch_id") <= F.lit(bid))
-                _nexpr = (
-                    F.col("_n")
-                    if "_n" in payload.columns
-                    else _dot_d(F.col("_v"), F.col("_v"), dim)
-                )
-                vecs = payload.select(
-                    F.col(id_col), F.col("_v"), _nexpr.alias("_n")
-                )
-                dropped = _cosine_dropped(cand, vecs, dim)
-                keep = bdf.join(dropped, id_col, "left_anti")
-            write_batch_idempotent(keep, bid, out_dir)
-        finally:
-            # join the landing threads FIRST: their writes read the
-            # persisted frames, and a landing failure must propagate.
-            # Drain EVERY future before re-raising (r13, ADVICE r12) —
-            # see the MinHash twin for why.
-            _errs = []
-            for _f in landings:
-                try:
-                    _f.result()
-                except BaseException as _e:  # noqa: BLE001 — re-raised
-                    _errs.append(_e)
-            pool.shutdown()
-            state.unpersist()
-            bc.unpersist()
-            if cand is not None:
-                cand.unpersist()
-            if seen_cached is not None:
-                seen_cached.unpersist()
-            if _errs:
-                raise _errs[0]
-
-    def _cosine_dropped(
-        cand: DataFrame, vecs: DataFrame, dim: int | None = None
-    ) -> DataFrame:
-        """ids of candidates whose exact cosine meets the threshold —
-        per-side stored/derived norms, never per-pair recompute."""
         return (
-            cand.join(
-                vecs.select(
-                    F.col(id_col).alias("id_a"),
-                    F.col("_v").alias("_va"),
-                    F.col("_n").alias("_na"),
-                ),
-                "id_a",
-            )
-            .join(
-                vecs.select(
-                    F.col(id_col).alias("id_b"),
-                    F.col("_v").alias("_vb"),
-                    F.col("_n").alias("_nb"),
-                ),
-                "id_b",
-            )
+            cand.join(side("a"), "id_a")
+            .join(side("b"), "id_b")
             .filter(
-                cosine_with_norms(
-                    "_va", "_vb", F.col("_na"), F.col("_nb"), dim
-                )
+                cosine_with_norms("_va", "_vb", F.col("_na"), F.col("_nb"))
                 >= threshold
             )
             .select(F.col("id_b").alias(id_col))
             .distinct()
         )
 
-    n_landed = [0]  # triggers since drive start (cadence, not state)
-    # r13 background maintenance with deferred reaping — see the
-    # MinHash twin and _MaintenanceScheduler.
-    sched = (
-        _MaintenanceScheduler(
-            spark,
-            lambda bid: _run_two_tier_maintenance(
-                spark,
-                [(bands_dir, "_bkt", False), (store_dir, "_pbkt", True)],
-                bid,
-                consolidate_min_batch_dirs,
-                defer_reap=True,
-            ),
-        )
-        if maintain_every is not None
-        else None
+    bcols = [f"b{t}" for t in range(tables)]
+    return _stream_banded_dedup(
+        spark,
+        stream_df,
+        out_dir,
+        checkpoint_dir,
+        store_dir,
+        "signbucket",
+        id_col,
+        store_buckets,
+        max_bucket,
+        maintain_every,
+        consolidate_min_batch_dirs,
+        build_state=lambda bdf: build_signbucket_store(
+            bdf, id_col, vec_col, bits, tables
+        ),
+        band_rows=lambda state: _bands(state.select(id_col, *bcols)),
+        keys=["_t", "_b"],
+        dropped_ids=_cosine_dropped,
     )
-
-    def _on_batch(bdf: DataFrame, bid: int) -> None:
-        if sched is not None:
-            sched.on_trigger_entry()
-        _dedup_batch(bdf, bid)
-        _record_max_batch_id(spark, store_dir, bid)
-        if maintain_every is not None:
-            n_landed[0] += 1
-            if n_landed[0] % maintain_every == 0:
-                sched.fire(bid)
-
-    query = (
-        stream_df.writeStream.foreachBatch(_on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        if sched is not None:
-            sched.drain()
-    try:
-        return spark.read.parquet(out_dir).drop("batch_id")
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc):
-            return spark.createDataFrame([], stream_df.schema)
-        raise
 
 
 def stream_ivf_index_append(
@@ -1869,130 +1345,80 @@ def stream_ivf_index_append(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     replication: int = 2,
-    list_major: bool = False,
     maintain_every: int | None = None,
     consolidate_min_batch_dirs: int = 8,
     drift_signal: bool = True,
 ) -> DataFrame:
-    """Maintain a persisted IVF index under streaming arrival (r9) —
-    the ANN member of the continuous-curation contract: the centroid
-    set is FIXED (read once from ``centroids_dir``, written by
+    """Maintain a persisted IVF index under streaming arrival — the ANN
+    member of the continuous-curation contract. The centroid set is
+    FIXED (read once from ``centroids_dir``, written by
     ``similarity.build_ivf_index`` over the seed corpus — the static
-    quantizer, same contract as the dedup stores' static ``bits``),
-    and each micro-batch assigns its vectors to those centroids via
-    the SAME replicated flat assignment the batch builder uses
+    quantizer, same contract as the dedup stores' static ``bits``), and
+    each micro-batch assigns its vectors to those centroids via the
+    SAME replicated flat assignment the batch builder uses
     (``similarity._flat_replicated_assign`` — shared code, cannot
-    drift) and lands vector-carrying posting rows at
-    ``postings_dir/batch_id=N`` idempotently. The accumulated postings
-    are exactly ``build_ivf_index``'s posting relation for the total
-    corpus against the seed centroids, so ``cosine_knn_ivf_probe``
-    works unchanged over them at any point in the stream's life — a
-    vector is searchable one trigger after it arrives, with no index
-    rebuild ever. Re-centering (new centroids for a drifted corpus)
-    is an explicit offline rebuild, exactly like re-bucketing a dedup
-    store. ``list_major`` (r11) maintains the TWO-TIER
-    ``write_ivf_index`` layout: each batch lands batch-major in
-    ``<postings_dir>_recent`` (one cheap dir per trigger — landing
-    straight into per-list dirs pays the dynamic-overwrite commit per
-    touched list per trigger), ``cosine_knn_ivf_probe_dir`` probes
-    history ∪ recent so vectors stay searchable one trigger after
-    arrival, and the maintenance loop is
-    ``roll_recent_into_store(postings_dir, "_list")`` +
-    ``consolidate_bucket_history`` (one batch dir per list after each
-    cycle) — run between drives, or IN-DRIVE every ``maintain_every``
-    landed batches (r12; ``_run_two_tier_maintenance``, committed
-    batches only, consolidation threshold-gated on
-    ``consolidate_min_batch_dirs`` — same contract as the dedup
-    twins; requires ``list_major``). Like the dedup stores, the
-    landing layout is a store-lifetime contract enforced by a
-    ``_layout.json`` marker, whose ``max_batch_id`` watermark also
-    refuses a fresh-checkpoint resume of a store with landed batches
-    (colliding batch ids would silently overwrite history leaves).
-    Each in-drive maintenance fire also lands the RE-CENTERING DRIFT
-    SIGNAL beside the index (``drift_signal=True``, r12):
-    ``similarity.ivf_drift_summary`` over the accumulated postings —
-    occupancy skew, mean assignment cosine, empty-list share, stamped
-    with the batch id — written atomically to
-    ``<postings_dir>/_drift.json`` (underscore-hidden from Spark's
-    file index), so the metric an operator alerts on (thresholds in
-    the summary's docstring, measured basis in SCALE.md r12) is
-    maintained by the drive itself at maintenance cadence: one
-    broadcast-join aggregate scan of the postings per cycle, the same
-    O(store) class as the consolidation it rides along with.
-    Returns the accumulated postings (batch_id dropped).
-    """
-    from pyspark.errors import AnalysisException
+    drift), landing vector-carrying posting rows (``neighbor_id, cv,
+    _cn, _list``). The accumulated postings are exactly
+    ``build_ivf_index``'s posting relation for the total corpus against
+    the seed centroids, so a vector is searchable one trigger after it
+    arrives, with no index rebuild. Re-centering (new centroids for a
+    drifted corpus) is an explicit offline rebuild.
 
+    Layout: the two-tier list-major ``write_ivf_index`` shape (marker
+    kind ``ivf_postings_list_major``, a store-lifetime contract with the
+    dedup stores' ``_layout.json`` gates). Each batch lands batch-major
+    in ``<postings_dir>_recent/batch_id=N`` (one cheap overwritten dir
+    per trigger); ``cosine_knn_ivf_probe_dir`` probes history ∪ recent;
+    maintenance (``roll_recent_into_store(postings_dir, "_list")`` +
+    ``consolidate_bucket_history``) moves committed batches into
+    ``_list=K/batch_id=N`` history, run between drives or in-drive
+    every ``maintain_every`` triggers (committed batches only,
+    consolidation gated on ``consolidate_min_batch_dirs``). The cycle
+    runs on a background thread and deletes immediately, so its drift
+    read sees each posting once; that races nothing, because no trigger
+    of this drive reads the store and the drift read pins its file
+    index to batches ≤ the fire's batch id.
+
+    With ``drift_signal`` each in-drive maintenance cycle also lands
+    the re-centering drift signal beside the index:
+    ``similarity.ivf_drift_summary`` over the accumulated postings
+    (occupancy skew, mean assignment cosine, empty-list share), stamped
+    ``as_of_batch_id`` and written atomically to
+    ``<postings_dir>/_drift.json`` (underscore-hidden from Spark's file
+    index) — one aggregate scan per cycle, the same O(store) class as
+    the consolidation it rides along with.
+
+    Returns the accumulated postings (batch_id dropped)."""
     from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
         _as_double,
         _dot_d,
         _flat_replicated_assign,
+        ivf_drift_summary,
+        ivf_index_drift_stats,
     )
 
-    if maintain_every is not None and not list_major:
-        raise ValueError(
-            "maintain_every requires list_major=True: the flat postings "
-            "layout has no recent tail to roll or list history to "
-            "consolidate."
-        )
-    _enforce_store_layout(
-        spark,
-        postings_dir,
-        "ivf_postings_list_major" if list_major else "ivf_postings",
-        None,
-        checkpoint_dir,
-    )
+    recent_dir = postings_dir.rstrip("/") + "_recent"
     c = spark.read.parquet(centroids_dir)
-    # vector width for the codegen-unrolled dot (similarity._dot_d),
-    # probed once per drive from the broadcast-sized centroid relation
-    # (same width as the stream's vectors by the quantizer contract;
-    # _dot_d guards per row regardless)
-    dim = None  # HOF dot: per-trigger volumes sit below the unroll win
     # broadcast-sized by contract; counted once for the drift rollup
     n_lists = c.count() if (maintain_every is not None and drift_signal) else 0
 
-    def _append(bdf: DataFrame, bid: int) -> None:
+    def _postings(bdf: DataFrame) -> DataFrame:
+        # same posting shape as build_ivf_index incl. the stored
+        # self-norm (_cn): probe- and schema-identical to the batch index
         e0 = bdf.select(
             F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v")
         )
-        assign = _flat_replicated_assign(e0, c, replication, dim)
-        # same posting shape as build_ivf_index incl. the stored
-        # self-norm (_cn) — the streamed index stays probe-identical
-        # AND schema-identical to the batch-built one
-        postings = (
+        assign = _flat_replicated_assign(e0, c, replication)
+        return (
             bdf.select(
                 F.col(id_col).alias("neighbor_id"),
                 _as_double(F.col(vec_col)).alias("cv"),
             )
-            .withColumn("_cn", _dot_d(F.col("cv"), F.col("cv"), dim))
+            .withColumn("_cn", _dot_d(F.col("cv"), F.col("cv"), None))
             .join(assign.withColumnRenamed("_id", "neighbor_id"), "neighbor_id")
         )
-        if list_major:
-            # two-tier list-major maintenance (r11): the batch lands
-            # batch-major in <postings_dir>_recent (ONE cheap dir —
-            # a dynamic-overwrite landing straight into _list=K dirs
-            # pays ~17 ms of commit per touched list PER TRIGGER, the
-            # same disease the dedup stores' two-tier landing cures);
-            # cosine_knn_ivf_probe_dir unions the recent tail with the
-            # list-major history, and roll_recent_into_store +
-            # consolidate_bucket_history (between drives) move it into
-            # _list=K/batch_id=N — the probed-lists-only layout that
-            # bounds probe IO to the probed fraction of the corpus
-            # (measured 10.2× byte reduction at 2M vectors /
-            # sqrt-rule lists; SCALE.md r11)
-            write_batch_idempotent(
-                postings, bid, postings_dir.rstrip("/") + "_recent"
-            )
-        else:
-            write_batch_idempotent(postings, bid, postings_dir)
-
-    n_landed = [0]  # triggers since drive start (cadence, not state)
 
     def _maintain(bid: int) -> list:
-        # no deferred reap here: this drive has no per-trigger probes
-        # pinning store file indexes (landings only ADD new recent
-        # dirs), so immediate deletes race nothing — and the drift
-        # read below must see each posting exactly once
         _run_two_tier_maintenance(
             spark,
             [(postings_dir, "_list", False)],
@@ -2000,11 +1426,6 @@ def stream_ivf_index_append(
             consolidate_min_batch_dirs,
         )
         if drift_signal:
-            from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
-                ivf_drift_summary,
-                ivf_index_drift_stats,
-            )
-
             s = ivf_drift_summary(
                 ivf_index_drift_stats(
                     spark, centroids_dir, postings_dir, as_of_batch_id=bid
@@ -2013,127 +1434,42 @@ def stream_ivf_index_append(
             )
             s["as_of_batch_id"] = bid
             fs, _, jpath = _marker_io(spark, postings_dir)
-            _write_small_json_atomic(
-                spark,
-                fs,
-                jpath,
-                jpath(f"{postings_dir.rstrip('/')}/_drift.json"),
-                s,
-            )
+            target = jpath(f"{postings_dir.rstrip('/')}/_drift.json")
+            _write_small_json_atomic(fs, jpath, target, s)
         return []  # nothing deferred (deletes ran inline above)
 
-    # r13 (guide §2.6 / VERDICT r12 #1): the maintenance cycle + drift
-    # signal run on ONE background thread so later triggers' landings
-    # back-fill the executor slots its jobs leave idle. Safe because
-    # the cycle touches only data a concurrent landing never reads or
-    # writes: the roll reads EXACTLY the committed (< bid) batch dirs
-    # by direct path and writes/deletes only those and the history
-    # tier; a landing writes a NEW ≥-bid dir; the drift read pins its
-    # file index to batches ≤ bid (as_of_batch_id). Cycles are
-    # serialized and drained by _MaintenanceScheduler; a maintenance
-    # error surfaces at the next fire or at drive end (the drive
-    # still FAILS) with the batch itself committed — inside the
-    # documented crash contract, since an interrupted cycle was always
-    # legal and convergent (roll re-runs on everything committed; the
-    # consolidation PENDING marker recovers).
-    sched = (
-        _MaintenanceScheduler(spark, _maintain)
-        if maintain_every is not None
-        else None
-    )
+    def _tier(root: str, prefix: str) -> DataFrame | None:
+        # a rolled tail is an EMPTY dir, and a fresh store holds only
+        # the marker: read a tier only when it has data dirs
+        fs, hroot = _hadoop_fs(spark, root)
+        if fs.exists(hroot) and any(
+            s.isDirectory() and s.getPath().getName().startswith(prefix)
+            for s in fs.listStatus(hroot)
+        ):
+            return spark.read.parquet(root)
+        return None
 
-    def _on_batch(bdf: DataFrame, bid: int) -> None:
-        _append(bdf, bid)
-        _record_max_batch_id(spark, postings_dir, bid)
-        if maintain_every is not None:
-            n_landed[0] += 1
-            if n_landed[0] % maintain_every == 0:
-                sched.fire(bid)
-
-    query = (
-        stream_df.writeStream.foreachBatch(_on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        # the drained read below must see a quiesced store: join the
-        # in-flight cycle before building it (and surface its error)
-        if sched is not None:
-            sched.drain()
-    try:
-        if list_major:
-            from big_data_analysis_of_twitter_emoji_usage_spark.sources.readers import (
-                union_partition_tiers,
-            )
-            from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import _hadoop_fs
-
-            fs, hroot = _hadoop_fs(spark, postings_dir)
-            main = (
-                spark.read.parquet(postings_dir)
-                if fs.exists(hroot)
-                and any(
-                    s.isDirectory()
-                    and s.getPath().getName().startswith("_list=")
-                    for s in fs.listStatus(hroot)
-                )
-                else None
-            )
-            recent_dir = postings_dir.rstrip("/") + "_recent"
-            rfs, hrecent = _hadoop_fs(spark, recent_dir)
-            # a rolled tail is an EMPTY dir (roll deletes the batch
-            # dirs): reading it would raise UNABLE_TO_INFER_SCHEMA and
-            # the empty-source fallback below would silently discard
-            # the _list=K history — guard it and return main alone
-            recent = (
-                spark.read.parquet(recent_dir)
-                if rfs.exists(hrecent)
-                and any(
-                    s.isDirectory()
-                    and s.getPath().getName().startswith("batch_id=")
-                    for s in rfs.listStatus(hrecent)
-                )
-                else None
-            )
-            if recent is None:
-                if main is None:
-                    # neither tier has data yet: funnel into the
-                    # empty-source fallback below (same contract)
-                    raise AnalysisException(
-                        f"PATH_NOT_FOUND: no postings under {postings_dir}"
-                    )
-                return main.withColumn(
-                    "_list", F.col("_list").cast("long")
-                ).drop("batch_id")
-            return union_partition_tiers(main, recent, "_list").drop(
+    def _read() -> DataFrame | None:
+        main = _tier(postings_dir, "_list=")
+        recent = _tier(recent_dir, "batch_id=")
+        if recent is not None:
+            return union_partition_tiers(main, recent, "_list").drop("batch_id")
+        if main is not None:
+            return main.withColumn("_list", F.col("_list").cast("long")).drop(
                 "batch_id"
             )
-        return spark.read.parquet(postings_dir).drop("batch_id")
-    except AnalysisException as exc:
-        if not (
-            "PATH_NOT_FOUND" in str(exc)
-            or "UNABLE_TO_INFER_SCHEMA" in str(exc)
-        ):
-            raise
-        # First drive over an empty source: no trigger fired, so the
-        # postings dir holds only the layout marker (schema
-        # uninferable) — before r11's marker it did not exist at all
-        # (PATH_NOT_FOUND). Same contract as the sibling drains —
-        # derive the (neighbor_id, cv, _list) schema from an empty
-        # batch (schema-only, nothing executes).
-        empty = spark.createDataFrame([], stream_df.schema)
-        e0 = empty.select(
-            F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v")
-        )
-        assign = _flat_replicated_assign(e0, c, replication, dim)
-        postings = (
-            empty.select(
-                F.col(id_col).alias("neighbor_id"),
-                _as_double(F.col(vec_col)).alias("cv"),
-            )
-            .withColumn("_cn", _dot_d(F.col("cv"), F.col("cv"), dim))
-            .join(assign.withColumnRenamed("_id", "neighbor_id"), "neighbor_id")
-        )
-        return spark.createDataFrame([], postings.schema)
+        return None
+
+    return _run_store_drive(
+        spark,
+        stream_df,
+        checkpoint_dir,
+        postings_dir,
+        "ivf_postings_list_major",
+        None,
+        lambda bdf, bid: write_batch_idempotent(_postings(bdf), bid, recent_dir),
+        maintain_every,
+        _maintain,
+        _read,
+        lambda: _postings(spark.createDataFrame([], stream_df.schema)).schema,
+    )

@@ -6,7 +6,11 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
-from big_data_analysis_of_twitter_emoji_usage_spark.operators.relational import asof_join, sessionize
+from big_data_analysis_of_twitter_emoji_usage_spark.operators.relational import (
+    asof_join,
+    multiset_diff_count,
+    sessionize,
+)
 
 
 def ts(s):
@@ -208,13 +212,12 @@ def test_asof_tolerance_numeric_ts_columns(spark):
 
 
 def test_symmetric_multiset_diff_count_equals_exceptall(spark):
-    """r13 pin for the sessionize-demo verify restructure
-    (plans/catalog.stream_sessionize_stateful_demo): for any two
-    multisets, count(A exceptAll B ∪ B exceptAll A) equals the
-    grouped-count full-outer-join Σ|cnt_A − cnt_B| that replaced it —
-    including duplicate rows and one-sided rows, and on empty inputs."""
-    from pyspark.sql import functions as F
-
+    """``multiset_diff_count`` (the sessionize demo's verify side,
+    plans/catalog.stream_sessionize_stateful_demo) equals
+    count(A exceptAll B ∪ B exceptAll A) for any two multisets —
+    including duplicate rows, one-sided rows, empty inputs, and rows
+    with NULL columns present on both sides (exceptAll treats NULLs as
+    equal, so those must cancel)."""
     cases = [
         ([(1, "x"), (1, "x"), (2, "y"), (3, "z")],
          [(1, "x"), (2, "y"), (2, "y"), (4, "w")]),
@@ -222,19 +225,12 @@ def test_symmetric_multiset_diff_count_equals_exceptall(spark):
         ([(1, "x")], []),
         ([], []),
         ([(1, "x"), (1, "x")], [(1, "x"), (1, "x")]),
+        ([(None, "x"), (1, None), (None, None)],
+         [(None, "x"), (1, None), (None, None), (None, None)]),
     ]
     for la, lb in cases:
         a = spark.createDataFrame(la, "k int, v string")
         b = spark.createDataFrame(lb, "k int, v string")
         old = a.exceptAll(b).unionAll(b.exceptAll(a)).count()
-        lc = a.groupBy("k", "v").agg(F.count(F.lit(1)).alias("_cl"))
-        rc = b.groupBy("k", "v").agg(F.count(F.lit(1)).alias("_cr"))
-        delta = F.abs(
-            F.coalesce("_cl", F.lit(0)) - F.coalesce("_cr", F.lit(0))
-        )
-        new = (
-            lc.join(rc, ["k", "v"], "full_outer")
-            .agg(F.coalesce(F.sum(delta), F.lit(0)).cast("long"))
-            .collect()[0][0]
-        )
+        new = multiset_diff_count(a, b).collect()[0]["n_mismatch"]
         assert new == old, (la, lb, new, old)

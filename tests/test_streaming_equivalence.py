@@ -246,281 +246,15 @@ def test_stream_transform_empty_drain_returns_transform_schema(
     assert got.count() == 0
 
 
-def test_stream_near_dedup_matches_batch_keepers(spark, sf_dir, tmp_path):
-    """Incremental streaming near-dedup == the batch pair-set keeper
-    rule under ordered arrival: stage the documents fixture as four
-    ascending-doc_id files with sequenced mtimes, drain one file per
-    trigger, and compare against ``near_dup_pairs``-derived keepers.
-    Also pins that the drive really was incremental (one store
-    partition per micro-batch) — a staging regression that collapses
-    everything into one batch would trivially pass the equivalence."""
-    from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
-    from big_data_analysis_of_twitter_emoji_usage_spark.operators.dedup import near_dup_pairs
-    from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
-        _ordered_docs_stream_dir,
-    )
-    from big_data_analysis_of_twitter_emoji_usage_spark.streaming.jobs import (
-        stream_near_dedup_minhash,
-    )
-
-    src_dir = _ordered_docs_stream_dir(sf_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    store_dir = str(tmp_path / "store")
-    got = stream_near_dedup_minhash(
-        spark,
-        stream,
-        out_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        store_dir=store_dir,
-        threshold=0.2,
-    ).select("doc_id")
-
-    docs = load_table(spark, sf_dir, "documents")
-    dropped = (
-        near_dup_pairs(docs, threshold=0.2)
-        .select(F.col("id_b").alias("doc_id"))
-        .distinct()
-    )
-    want = docs.join(dropped, "doc_id", "left_anti").select("doc_id")
-    assert rows(got) == rows(want)
-    assert 0 < dropped.count()  # the equivalence is non-vacuous
-    batches = sorted(
-        d for d in os.listdir(store_dir) if d.startswith("batch_id=")
-    )
-    assert len(batches) == 4
-
-
-def test_stream_near_dedup_embedding_matches_batch_keepers(spark, sf_dir, tmp_path):
-    """Incremental streaming SEMANTIC dedup == the batch sign-LSH
-    keeper rule under ordered arrival (the embedding twin of the test
-    above): stage the embeddings fixture as four ascending-vec_id
-    files, drain one per trigger, compare against the
-    ``embedding_near_dup_pairs``-derived keepers at the same operating
-    point (no bucket guard — the streaming twin doesn't offer one).
-    Pins one store partition per micro-batch."""
-    from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
-    from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
-        embedding_near_dup_pairs,
-    )
-    from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
-        _ordered_embeddings_stream_dir,
-    )
-    from big_data_analysis_of_twitter_emoji_usage_spark.streaming.jobs import (
-        stream_near_dedup_embedding,
-    )
-
-    src_dir = _ordered_embeddings_stream_dir(sf_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    store_dir = str(tmp_path / "store")
-    got = stream_near_dedup_embedding(
-        spark,
-        stream,
-        out_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        store_dir=store_dir,
-        bits=8,
-        tables=2,
-        threshold=0.3,
-    ).select("vec_id")
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    dropped = (
-        embedding_near_dup_pairs(emb, threshold=0.3, bits=8, tables=2)
-        .select(F.col("id_b").alias("vec_id"))
-        .distinct()
-    )
-    want = emb.join(dropped, "vec_id", "left_anti").select("vec_id")
-    assert rows(got) == rows(want)
-    assert 0 < dropped.count()  # non-vacuous
-    batches = sorted(
-        d for d in os.listdir(store_dir) if d.startswith("batch_id=")
-    )
-    assert len(batches) == 4
-
-
-def test_stream_near_dedup_store_survives_compaction_between_drives(
-    spark, sf_dir, tmp_path
-):
-    """The docstring's maintenance loop, pinned: drive the first half
-    of an ordered replay, compact the signature store
-    (`compact_partitioned_parquet` — the store is batch_id-partitioned),
-    then resume the SAME checkpoint over the second half. The final
-    keeper set must still equal the batch rule over the full corpus —
-    i.e. compaction changes the store's file layout, never its content
-    or the resumed stream's reads."""
-    import shutil
-
-    from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
-    from big_data_analysis_of_twitter_emoji_usage_spark.operators.dedup import near_dup_pairs
-    from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
-        _ordered_docs_stream_dir,
-    )
-    from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import (
-        compact_partitioned_parquet,
-    )
-    from big_data_analysis_of_twitter_emoji_usage_spark.streaming.jobs import (
-        stream_near_dedup_minhash,
-    )
-
-    staged = _ordered_docs_stream_dir(sf_dir)
-    parts = sorted(p for p in os.listdir(staged) if p.endswith(".parquet"))
-    assert len(parts) == 4
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    store_dir = str(tmp_path / "store")
-    kwargs = dict(
-        out_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        store_dir=store_dir,
-        threshold=0.2,
-    )
-
-    def drive():
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        return stream_near_dedup_minhash(spark, stream, **kwargs)
-
-    # first half arrives and is drained
-    for p in parts[:2]:
-        shutil.copy2(os.path.join(staged, p), os.path.join(src, p))
-    drive()
-    # maintenance window: compact the store between drives
-    stats = compact_partitioned_parquet(spark, store_dir, target_file_bytes=1 << 30)
-    assert stats["partitions"] == 2 and stats["files_after"] == 2
-    # second half arrives; the SAME checkpoint resumes (only new files)
-    for p in parts[2:]:
-        shutil.copy2(os.path.join(staged, p), os.path.join(src, p))
-    got = drive().select("doc_id")
-
-    docs = load_table(spark, sf_dir, "documents")
-    dropped = (
-        near_dup_pairs(docs, threshold=0.2)
-        .select(F.col("id_b").alias("doc_id"))
-        .distinct()
-    )
-    want = docs.join(dropped, "doc_id", "left_anti").select("doc_id")
-    assert rows(got) == rows(want)
-    batches = sorted(
-        d for d in os.listdir(store_dir) if d.startswith("batch_id=")
-    )
-    assert len(batches) == 4
-
-
-def test_stream_ivf_postings_survive_compaction_between_drives(
-    spark, sf_dir, tmp_path
-):
-    """The IVF analogue of the store-compaction pin above: drive half
-    the embedding replay into the posting store, compact it
-    (batch_id-partitioned leaves), resume the SAME checkpoint over the
-    rest — the probe over the final postings must equal the probe over
-    a batch-built index against the same seed centroids."""
-    import shutil
-
-    from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
-    from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
-        _as_double,
-        _flat_replicated_assign,
-        cosine_knn_ivf_probe,
-        ivf_assignments,
-        select_ivf_centroids,
-    )
-    from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
-        _ordered_embeddings_stream_dir,
-    )
-    from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import (
-        compact_partitioned_parquet,
-    )
-    from big_data_analysis_of_twitter_emoji_usage_spark.streaming.jobs import (
-        stream_ivf_index_append,
-    )
-
-    staged = _ordered_embeddings_stream_dir(sf_dir)
-    parts = sorted(p for p in os.listdir(staged) if p.endswith(".parquet"))
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    cdir = str(tmp_path / "cent")
-    pdir = str(tmp_path / "post")
-    seed = spark.read.parquet(os.path.join(staged, parts[0]))
-    c, _ = ivf_assignments(seed, select_ivf_centroids(seed, "vec_id", 24))
-    c.write.parquet(cdir)
-
-    def drive():
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        return stream_ivf_index_append(
-            spark,
-            stream,
-            centroids_dir=cdir,
-            postings_dir=pdir,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            replication=2,
-        )
-
-    for p in parts[:2]:
-        shutil.copy2(os.path.join(staged, p), os.path.join(src, p))
-    drive()
-    stats = compact_partitioned_parquet(spark, pdir, target_file_bytes=1 << 30)
-    assert stats["partitions"] == 2
-    for p in parts[2:]:
-        shutil.copy2(os.path.join(staged, p), os.path.join(src, p))
-    postings = drive()
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    cp = spark.read.parquet(cdir)
-    got = sorted(
-        tuple(r)
-        for r in cosine_knn_ivf_probe(
-            cp, postings, queries, k=3, nprobe=8, replication=2
-        ).collect()
-    )
-    e0 = emb.select(
-        F.col("vec_id").alias("_id"), _as_double(F.col("embedding")).alias("_v")
-    )
-    batch_post = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        _as_double(F.col("embedding")).alias("cv"),
-    ).join(
-        _flat_replicated_assign(e0, cp, 2).withColumnRenamed(
-            "_id", "neighbor_id"
-        ),
-        "neighbor_id",
-    )
-    want = sorted(
-        tuple(r)
-        for r in cosine_knn_ivf_probe(
-            cp, batch_post, queries, k=3, nprobe=8, replication=2
-        ).collect()
-    )
-    assert got == want and len(got) == 30
-
-
 def test_stream_ivf_append_empty_source_returns_empty_postings(
     spark, tmp_path, sf_dir
 ):
-    """ADVICE r9 #1: a first drive over an empty source (no trigger
-    ever fires, so no postings dir is written) must return an empty
-    postings frame with the (neighbor_id, cv, _list) schema instead of
-    raising PATH_NOT_FOUND — the same empty-drain contract every
-    sibling drain honors."""
+    """A first drive of the list-major IVF appender over an empty
+    source (no trigger ever fires, so neither the _list=K history nor
+    the recent tail exists — the postings dir holds only the layout
+    marker) must return an empty postings frame with the
+    (neighbor_id, cv, _cn, _list) schema instead of raising — the same
+    empty-drain contract every sibling drain honors."""
     from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
     from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
         ivf_assignments,
@@ -546,6 +280,7 @@ def test_stream_ivf_append_empty_source_returns_empty_postings(
     )
     assert postings.columns == ["neighbor_id", "cv", "_cn", "_list"]
     assert postings.count() == 0
+    assert not os.path.exists(str(tmp_path / "post_recent"))
 
 
 def test_stream_near_dedup_banded_store_matches_batch_keepers(
@@ -637,12 +372,14 @@ def test_stream_near_dedup_banded_probe_reads_touched_subtrees_only(
     batch-major layout pruned the scan bytes with a literal IN but
     still paid a full partition discovery of every bucket dir per
     read). Built exactly as the operator builds it
-    (_read_bucket_subtrees) over a store a real drive wrote."""
+    (sources.readers.read_partition_subtrees) over a store a real drive wrote."""
     from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
         _ordered_docs_stream_dir,
     )
+    from big_data_analysis_of_twitter_emoji_usage_spark.sources.readers import (
+        read_partition_subtrees,
+    )
     from big_data_analysis_of_twitter_emoji_usage_spark.streaming.jobs import (
-        _read_bucket_subtrees,
         stream_near_dedup_minhash,
     )
 
@@ -676,7 +413,7 @@ def test_stream_near_dedup_banded_probe_reads_touched_subtrees_only(
     )
     assert len(existing) > 2
     touched = existing[:2]
-    df = _read_bucket_subtrees(spark, bands_dir, "_bkt", touched + [9999])
+    df = read_partition_subtrees(spark, bands_dir, "_bkt", touched + [9999])
     files = df.inputFiles()
     assert files
     assert all(
@@ -687,7 +424,7 @@ def test_stream_near_dedup_banded_probe_reads_touched_subtrees_only(
     assert {"_bkt", "batch_id"} <= set(df.columns)
     assert df.filter(F.col("batch_id") <= 3).count() == df.count()
     # a read of NO existing buckets is None (zero-row-batch contract)
-    assert _read_bucket_subtrees(spark, bands_dir, "_bkt", [9999]) is None
+    assert read_partition_subtrees(spark, bands_dir, "_bkt", [9999]) is None
 
 
 def test_stream_near_dedup_embedding_banded_matches_batch_keepers(
@@ -820,10 +557,13 @@ def test_stream_near_dedup_banded_store_survives_compaction_between_drives(
 
 
 def test_store_layout_marker_enforced(spark, sf_dir, tmp_path):
-    """ADVICE r10: the banded-store layout is a store-lifetime contract
-    — the drive must persist a layout marker on first use and REFUSE
-    (not silently mis-probe) a resume with a different bucket count, a
-    flat resume of a banded store, or an unmarked pre-existing store."""
+    """The banded-store layout is a store-lifetime contract — the drive
+    must persist a layout marker on first use (its payload is the
+    on-disk format existing stores depend on, pinned whole) and REFUSE
+    (not silently mis-probe) a resume with a different bucket count or
+    an unmarked pre-existing store. The flat layout is gone:
+    store_buckets=None or < 1 is refused before any streaming query
+    starts."""
     import json
 
     from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
@@ -857,14 +597,22 @@ def test_store_layout_marker_enforced(spark, sf_dir, tmp_path):
     drive(store_dir, 0, store_buckets=16)
     marker = os.path.join(store_dir, _STORE_LAYOUT_FILE)
     with open(marker) as fh:
-        assert json.load(fh)["store_buckets"] == 16
+        assert json.load(fh) == {
+            "layout_version": 2,
+            "kind": "minhash",
+            "store_buckets": 16,
+            "max_batch_id": 1,  # 4 files / 2 per trigger
+        }
 
     # changed bucket count → refused
     with pytest.raises(ValueError, match="store-lifetime"):
         drive(store_dir, 1, store_buckets=32)
-    # flat resume of a banded store → refused
-    with pytest.raises(ValueError, match="store-lifetime"):
-        drive(store_dir, 2, store_buckets=None)
+    # the removed flat layout → refused up front: no query, no marker
+    for bad in (None, 0):
+        with pytest.raises(ValueError, match="flat"):
+            drive(str(tmp_path / "flat"), f"flat{bad}", store_buckets=bad)
+        assert not os.path.exists(tmp_path / f"ckptflat{bad}")
+    assert not os.path.exists(tmp_path / "flat")
     # unmarked pre-existing store → refused (cannot verify its layout)
     os.remove(marker)
     with pytest.raises(ValueError, match="no _layout.json"):
@@ -882,8 +630,10 @@ def test_stream_near_dedup_payload_scan_prunes_to_candidate_buckets(
     from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
         _ordered_docs_stream_dir,
     )
+    from big_data_analysis_of_twitter_emoji_usage_spark.sources.readers import (
+        read_partition_subtrees,
+    )
     from big_data_analysis_of_twitter_emoji_usage_spark.streaming.jobs import (
-        _read_bucket_subtrees,
         stream_near_dedup_minhash,
     )
 
@@ -919,7 +669,7 @@ def test_stream_near_dedup_payload_scan_prunes_to_candidate_buckets(
     )
     # the verify's payload read: direct-path over candidate buckets
     touched = sorted(int(d.split("=")[1]) for d in pdirs)[:3]
-    payload = _read_bucket_subtrees(spark, store_dir, "_pbkt", touched)
+    payload = read_partition_subtrees(spark, store_dir, "_pbkt", touched)
     files = payload.inputFiles()
     assert files and all(
         any(f"/_pbkt={k}/" in f for k in touched) for f in files
@@ -996,13 +746,12 @@ def test_stream_near_dedup_banded_survives_empty_batch(spark, sf_dir, tmp_path):
 def test_stream_ivf_list_major_probeable_by_probe_dir(
     spark, sf_dir, tmp_path
 ):
-    """r11 list-major streamed index: stream_ivf_index_append with
-    list_major=True lands postings under _list=K/batch_id=N (dynamic
-    partition overwrite), so the accumulated streamed index is
-    directly probeable by cosine_knn_ivf_probe_dir — result equal to
-    the in-memory probe over the drained postings, layout marker
-    enforced (a flat resume of a list-major postings store is
-    refused)."""
+    """List-major streamed index: stream_ivf_index_append lands each
+    trigger in the batch-major recent tail and maintenance moves it
+    under _list=K/batch_id=N, so the accumulated streamed index is
+    directly probeable by cosine_knn_ivf_probe_dir before and after
+    the roll — result equal to the in-memory probe over the drained
+    postings."""
     from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
     from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
         cosine_knn_ivf_probe,
@@ -1025,23 +774,19 @@ def test_stream_ivf_list_major_probeable_by_probe_dir(
     c.write.parquet(cdir)
     schema = spark.read.parquet(staged).schema
 
-    def drive(**kw):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        return stream_ivf_index_append(
-            spark,
-            stream,
-            centroids_dir=cdir,
-            postings_dir=pdir,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            replication=2,
-            **kw,
-        )
-
-    postings = drive(list_major=True)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(staged)
+    )
+    postings = stream_ivf_index_append(
+        spark,
+        stream,
+        centroids_dir=cdir,
+        postings_dir=pdir,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        replication=2,
+    )
     # two-tier layout: triggers land batch-major in the recent tail
     recents = [
         d
@@ -1087,9 +832,6 @@ def test_stream_ivf_list_major_probeable_by_probe_dir(
         ).collect()
     )
     assert got2 == want
-    # layout is a store-lifetime contract: flat resume refused
-    with pytest.raises(ValueError, match="store-lifetime"):
-        drive(list_major=False)
 
 
 def test_consolidate_bucket_history_between_drives(spark, sf_dir, tmp_path):
@@ -1291,7 +1033,6 @@ def test_stream_ivf_list_major_post_roll_resume_keeps_history(
             postings_dir=pdir,
             checkpoint_dir=str(tmp_path / "ckpt"),
             replication=2,
-            list_major=True,
         )
 
     n = drive().count()
@@ -2127,7 +1868,6 @@ def test_stream_ivf_maintenance_lands_drift_signal(spark, sf_dir, tmp_path):
         postings_dir=pdir,
         checkpoint_dir=str(tmp_path / "ckpt"),
         replication=2,
-        list_major=True,
         maintain_every=2,
         consolidate_min_batch_dirs=2,
     )
@@ -2185,28 +1925,29 @@ def test_read_committed_recent_equals_whole_tail_read(spark, tmp_path):
 def test_background_maintenance_parity_with_synchronous(
     spark, sf_dir, tmp_path
 ):
-    """r13: the background deferred-reap maintenance cycle
+    """The background deferred-reap maintenance cycle
     (_MaintenanceScheduler + defer_reap) must leave keeper set AND
-    final store layout identical to the synchronous r12 shape — same
-    drive, same parameters, toggle flipped."""
+    final store layout identical to the same cycles run synchronously
+    with immediate deletes — here between two drives of two batches
+    each, at the batch ids the in-drive cadence fires at (1 and 3)."""
     import shutil
 
     from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
         _ordered_docs_stream_dir,
     )
-    from big_data_analysis_of_twitter_emoji_usage_spark.streaming import jobs
     from big_data_analysis_of_twitter_emoji_usage_spark.streaming.jobs import (
+        _run_two_tier_maintenance,
         stream_near_dedup_minhash,
     )
 
     staged = _ordered_docs_stream_dir(sf_dir)
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for p in sorted(os.listdir(staged)):
-        if p.endswith(".parquet"):
-            shutil.copy2(os.path.join(staged, p), os.path.join(src, p))
+    parts = sorted(p for p in os.listdir(staged) if p.endswith(".parquet"))
 
-    def drive(tag):
+    def drive(tag, files, maintain_every):
+        src = str(tmp_path / tag / "src")
+        os.makedirs(src, exist_ok=True)
+        for p in files:
+            shutil.copy2(os.path.join(staged, p), os.path.join(src, p))
         schema = spark.read.parquet(src).schema
         stream = (
             spark.readStream.schema(schema)
@@ -2222,18 +1963,20 @@ def test_background_maintenance_parity_with_synchronous(
             threshold=0.2,
             store_buckets=16,
             max_bucket=64,
-            maintain_every=2,
+            maintain_every=maintain_every,
             consolidate_min_batch_dirs=2,
         )
-        keepers = rows(out.select("doc_id"))
+        return rows(out.select("doc_id"))
+
+    def layout(tag):
         store = str(tmp_path / tag / "store")
-        layout = {}
+        got = {}
         for root in (store, store + "_bands"):
             for sub in ("", "_recent"):
                 d = root + sub
                 # directory STRUCTURE only (bucket/batch dirs) — part
                 # file names carry per-run UUIDs
-                layout[os.path.basename(d)] = sorted(
+                got[os.path.basename(d)] = sorted(
                     os.path.join(b, s)
                     for b in os.listdir(d)
                     if not b.startswith(".")
@@ -2243,18 +1986,68 @@ def test_background_maintenance_parity_with_synchronous(
                          if x.startswith("batch_id=")] or [""]
                     )
                 ) if os.path.isdir(d) else None
-        return keepers, layout
+        return got
 
-    prev = jobs._OVERLAP_IN_DRIVE_MAINTENANCE
-    try:
-        jobs._OVERLAP_IN_DRIVE_MAINTENANCE = True
-        k_bg, l_bg = drive("bg")
-        jobs._OVERLAP_IN_DRIVE_MAINTENANCE = False
-        k_sync, l_sync = drive("sync")
-    finally:
-        jobs._OVERLAP_IN_DRIVE_MAINTENANCE = prev
+    k_bg = drive("bg", parts, maintain_every=2)
+
+    store = str(tmp_path / "sync" / "store")
+    roots = [(store + "_bands", "_bkt", False), (store, "_pbkt", True)]
+    drive("sync", parts[:2], maintain_every=None)  # batches 0-1
+    assert _run_two_tier_maintenance(spark, roots, 1, 2) == []
+    k_sync = drive("sync", parts[2:], maintain_every=None)  # batches 2-3
+    assert _run_two_tier_maintenance(spark, roots, 3, 2) == []
+
     assert k_bg == k_sync and len(k_bg) > 0
-    assert l_bg == l_sync  # same dirs rolled/merged/reaped at drain
+    assert layout("bg") == layout("sync")  # same dirs rolled/merged/reaped
+
+
+def test_deferred_reap_paths_share_one_form_and_are_all_deleted(
+    spark, sf_dir, tmp_path
+):
+    """A defer_reap cycle over the band and payload roots returns its
+    rolled recent dirs, merged-away history dirs and consolidation
+    PENDING markers in ONE form — the roots' own spelling, from both
+    roll_recent_into_store and consolidate_bucket_history — and
+    _reap_deferred (which resolves each path's own filesystem) deletes
+    every one of them."""
+    from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
+        _ordered_docs_stream_dir,
+    )
+    from big_data_analysis_of_twitter_emoji_usage_spark.streaming.jobs import (
+        _reap_deferred,
+        _run_two_tier_maintenance,
+        stream_near_dedup_minhash,
+    )
+
+    src_dir = _ordered_docs_stream_dir(sf_dir)
+    schema = spark.read.parquet(src_dir).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
+    store_dir = str(tmp_path / "store")
+    stream_near_dedup_minhash(
+        spark,
+        stream,
+        out_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        store_dir=store_dir,
+        threshold=0.2,
+        store_buckets=16,
+    )
+    roots = [(store_dir + "_bands", "_bkt", False), (store_dir, "_pbkt", True)]
+    # all 4 batches committed: roll them all, then merge the buckets
+    paths = _run_two_tier_maintenance(spark, roots, 4, 2, defer_reap=True)
+    assert all(p.startswith(store_dir) for p in paths), paths
+    for root in (store_dir, store_dir + "_bands"):
+        assert {f"{root}_recent/batch_id={i}" for i in range(4)} <= set(paths)
+        assert f"{root}/.__consolidate_pending__" in paths
+        assert any(p.startswith(f"{root}/_") and "/batch_id=" in p
+                   for p in paths)
+    assert all(os.path.exists(p) for p in paths)
+    _reap_deferred(spark, paths)
+    assert not [p for p in paths if os.path.exists(p)]
 
 
 def test_spread_stream_fires_only_for_underspread_scans(spark, sf_dir):
@@ -2275,20 +2068,21 @@ def test_spread_stream_fires_only_for_underspread_scans(spark, sf_dir):
     assert "Repartition" in spread._jdf.queryExecution().logical().toString()
 
 
-def test_stream_decontam_docs_spread_result_parity(spark, sf_dir):
+def test_stream_decontam_docs_spread_result_parity(
+    spark, sf_dir, monkeypatch
+):
     """The spread exchange must not change stream_decontam_docs'
-    drained result (partitioning-invariant per-row probe)."""
-    from big_data_analysis_of_twitter_emoji_usage_spark import core
-    from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
-        QUERIES,
-    )
+    drained result (partitioning-invariant per-row probe): the shipped
+    query over the spread stream equals the same query over the
+    unspread stream."""
+    from big_data_analysis_of_twitter_emoji_usage_spark.plans import catalog
 
-    prev = core._SPREAD_STREAM_SCANS
-    try:
-        core._SPREAD_STREAM_SCANS = True
-        a = rows(QUERIES["stream_decontam_docs"](spark, sf_dir))
-        core._SPREAD_STREAM_SCANS = False  # voids the per-site opt-in
-        b = rows(QUERIES["stream_decontam_docs"](spark, sf_dir))
-    finally:
-        core._SPREAD_STREAM_SCANS = prev
+    a = rows(catalog.QUERIES["stream_decontam_docs"](spark, sf_dir))
+    load = catalog.load_table_stream
+    monkeypatch.setattr(
+        catalog,
+        "load_table_stream",
+        lambda *args, **kw: load(*args, **{**kw, "spread_scan": False}),
+    )
+    b = rows(catalog.QUERIES["stream_decontam_docs"](spark, sf_dir))
     assert a == b and len(a) > 0

@@ -22,7 +22,7 @@ the md5 cost is dwarfed by the shuffle it feeds.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from big_data_analysis_of_twitter_emoji_usage_spark.core import explode_nonempty
 
@@ -217,13 +217,13 @@ def lsh_candidate_pairs(
     """Band the signatures and self-join on (band, band_signature).
 
     Two docs are candidates iff they agree on every hash of some band —
-    the standard LSH S-curve. Bands are emitted with a single
-    ``explode`` over a literal array of (band, sig) structs — one
-    generator in one stage, instead of a num_bands-way union that
-    schedules num_bands tiny concurrent stages. The join key (band,
-    sig) is high-cardinality and uniform, so the shuffle partitions
-    evenly; the cross-product within a bucket is bounded by bucket
-    size, not n. Returns distinct (id_a, id_b) with id_a < id_b.
+    the standard LSH S-curve. The self-join is ``band_pairs`` with the
+    same band frame on both sides, restricted to ``id_a < id_b``; the
+    restriction is pushed into the join condition, so mirrored pairs
+    and self-pairs never leave the join. The join key (band, sig) is
+    high-cardinality and uniform, so the shuffle partitions evenly; the
+    cross-product within a bucket is bounded by bucket size, not n.
+    Returns distinct (id_a, id_b) with id_a < id_b.
 
     ``max_bucket`` is the skew guard: buckets larger than it are dropped
     entirely before the self-join. Degenerate buckets appear whenever
@@ -236,18 +236,8 @@ def lsh_candidate_pairs(
     bands = signature_bands(
         signatures, id_col, num_hashes, band_size, max_bucket
     )
-    a, b_ = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
+    return band_pairs(bands, bands, id_col).filter(
+        F.col("id_a") < F.col("id_b")
     )
 
 
@@ -260,12 +250,14 @@ def signature_bands(
 ) -> DataFrame:
     """The banding half of ``lsh_candidate_pairs``: (id, band, sig)
     rows of a MinHash signature relation, null signatures dropped,
-    optional bucket-size skew guard. Exposed separately (r9) so
-    CROSS-relation probes can band each side independently and join
-    them — ``streaming.jobs.stream_near_dedup_minhash`` bands a
-    micro-batch and the accumulated history store and probes one
-    against the other, which the self-join entry point cannot
-    express."""
+    optional bucket-size skew guard. Bands are emitted with a single
+    ``explode`` over a literal array of (band, sig) structs — one
+    generator in one stage, instead of a num_bands-way union that
+    schedules num_bands tiny concurrent stages. Band each side
+    separately and join them with ``band_pairs``: the self-join, the
+    cross-corpus join and the store probe
+    (``near_dup_pairs_against_store``,
+    ``streaming.jobs.stream_near_dedup_minhash``) all use these rows."""
     n_bands = num_hashes // band_size
     band_structs = F.array(
         *[
@@ -312,8 +304,6 @@ def signature_bands(
         .filter(F.col("sig").isNotNull())
     )
     if max_bucket is not None:
-        from pyspark.sql import Window
-
         w = Window.partitionBy("band", "sig")
         bands = (
             bands.withColumn("_bc", F.count(F.lit(1)).over(w))
@@ -321,6 +311,28 @@ def signature_bands(
             .drop("_bc")
         )
     return bands
+
+
+def band_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    id_col: str = "doc_id",
+    keys: tuple[str, ...] = ("band", "sig"),
+) -> DataFrame:
+    """The LSH band join: distinct (id_a, id_b) for every id_a band row
+    of ``a`` and id_b band row of ``b`` that agree on all ``keys``
+    (``signature_bands``' (band, sig), ``similarity.signbucket_bands``'
+    (_t, _b)). Both sides are renamed before the join, so ``a`` and
+    ``b`` may be the same frame and their id spaces may overlap.
+    Orientation is (a, b) with no id order; a self-join restricts the
+    result to ``id_a < id_b``, which Catalyst pushes into the join. To
+    broadcast one side, pass it already wrapped in ``F.broadcast``."""
+    return (
+        a.select(F.col(id_col).alias("id_a"), *keys)
+        .join(b.select(F.col(id_col).alias("id_b"), *keys), list(keys))
+        .select("id_a", "id_b")
+        .distinct()
+    )
 
 
 def near_dup_pairs(
@@ -360,6 +372,12 @@ def near_dup_pairs(
     signature stage. ``None`` (the default) keeps ALL shingles — 16/16
     has no keep-all encoding because hex-nibble-mod-16 < 16 is a
     tautology; ``sample_shingles`` rejects values outside 1..15.
+
+    Candidates come from ``lsh_candidate_pairs``: the cross path's
+    band join (``band_pairs``) with the signature bands on both sides
+    and ``id_a < id_b`` pushed into the join, so every pair is emitted
+    once, smaller id first, and ``max_bucket`` counts corpus-global
+    bucket occupancy.
 
     ``materialize_shingles`` lazily ``localCheckpoint``s the per-doc
     shingle relation so its two consumers (signature pass, verify
@@ -425,6 +443,20 @@ def verify_pairs_jaccard(
     sh = arrays.select(
         F.col(id_col).alias("_vid"), F.col("shingles").alias("_sh")
     )
+    return _jaccard_tail(
+        melted.join(sh, "_vid"),
+        F.col("_vid") == F.col("id_a"),
+        F.col("_vid") == F.col("id_b"),
+        threshold,
+    )
+
+
+def _jaccard_tail(
+    joined: DataFrame, is_a: Column, is_b: Column, threshold: float
+) -> DataFrame:
+    """Aggregate, threshold and output shared by both Jaccard verifies:
+    ``joined`` holds one (id_a, id_b, _sh) row per pair member, and
+    ``is_a`` / ``is_b`` pick out each member's shingle array."""
     # Intersect INSIDE the aggregate's result expressions (r7): the
     # previous shape emitted (_sha, _shb) arrays from the agg and
     # computed array_intersect in a downstream projection — but the
@@ -435,19 +467,11 @@ def verify_pairs_jaccard(
     # aggregate outputs makes them Aggregate attributes the Filter
     # cannot be rewritten past — the set arithmetic runs exactly once
     # per pair, and everything downstream is integer math.
-    _sha = F.first(
-        F.when(F.col("_vid") == F.col("id_a"), F.col("_sh")), ignorenulls=True
-    )
-    _shb = F.first(
-        F.when(F.col("_vid") == F.col("id_b"), F.col("_sh")), ignorenulls=True
-    )
-    paired = (
-        melted.join(sh, "_vid")
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.size(F.array_intersect(_sha, _shb)).alias("_i"),
-            (F.size(_sha) + F.size(_shb)).alias("_sz"),
-        )
+    _sha = F.first(F.when(is_a, F.col("_sh")), ignorenulls=True)
+    _shb = F.first(F.when(is_b, F.col("_sh")), ignorenulls=True)
+    paired = joined.groupBy("id_a", "id_b").agg(
+        F.size(F.array_intersect(_sha, _shb)).alias("_i"),
+        (F.size(_sha) + F.size(_shb)).alias("_sz"),
     )
     jac = F.col("_i") / (F.col("_sz") - F.col("_i"))
     return (
@@ -471,7 +495,10 @@ def _verify_pairs_jaccard_cross(
     conflated. Same plan shape as the self-join verify: each corpus's
     shingle relation is scanned exactly once, the set arithmetic runs
     inside the pair aggregate (a boundary the threshold Filter cannot
-    be rewritten past), and everything downstream is integer math."""
+    be rewritten past), and everything downstream is integer math.
+    It stays a separate melt from the self verify: run on one frame,
+    the (side, id) melt would union the shingle relation with itself
+    and scan it twice."""
     melted = cand.select(
         "id_a",
         "id_b",
@@ -498,24 +525,11 @@ def _verify_pairs_jaccard_cross(
             F.col("shingles").alias("_sh"),
         )
     )
-    _sha = F.first(
-        F.when(F.col("_s") == 0, F.col("_sh")), ignorenulls=True
-    )
-    _shb = F.first(
-        F.when(F.col("_s") == 1, F.col("_sh")), ignorenulls=True
-    )
-    paired = (
-        melted.join(sh, ["_s", "_i_key"])
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.size(F.array_intersect(_sha, _shb)).alias("_i"),
-            (F.size(_sha) + F.size(_shb)).alias("_sz"),
-        )
-    )
-    jac = F.col("_i") / (F.col("_sz") - F.col("_i"))
-    return (
-        paired.filter(jac >= threshold)
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+    return _jaccard_tail(
+        melted.join(sh, ["_s", "_i_key"]),
+        F.col("_s") == 0,
+        F.col("_s") == 1,
+        threshold,
     )
 
 
@@ -546,44 +560,36 @@ def near_dup_pairs_cross(
     twin's store: ``streaming.jobs.stream_near_dedup_minhash``).
 
     Scale shape: one scan + one band shuffle per corpus, the candidate
-    equi-join on (band, sig), then the cross verify (each corpus's
-    shingle relation scanned once, set math inside the pair aggregate).
-    Neither corpus ever self-joins — at 100 TB of reference the
-    reference side contributes exactly one signature pass + one
-    columnar band join, no n² term. ``max_bucket`` caps degenerate
-    band buckets PER SIDE (corpus-global occupancy within each side),
-    bounding a both-sides-hot band value's candidate fan-out at
-    max_bucket²; the oracle mirrors per-side capping.
+    equi-join on (band, sig) (``band_pairs``), then the cross verify
+    (each corpus's shingle relation scanned once, set math inside the
+    pair aggregate). Neither corpus ever self-joins — at 100 TB of
+    reference the reference side contributes exactly one signature
+    pass + one columnar band join, no n² term.
 
-    Unlike the self-join operator there is no ``id_a < id_b``
-    canonicalization — the pair orientation is (reference, new), and
-    the same id on both sides is a legitimate pair, not a self-match.
+    Contract: the pair orientation is (reference, new) with no id
+    order. The id spaces may overlap: the verify keys members by
+    (side, id), so the same id naming different documents is never
+    conflated, and the same id naming near-identical documents is a
+    legitimate pair, not a self-match. ``max_bucket`` caps degenerate
+    band buckets PER SIDE (each side's own occupancy), bounding a
+    both-sides-hot band value's candidate fan-out at max_bucket²; the
+    oracle mirrors per-side capping. ``near_dup_pairs`` is this band
+    join run on one frame and restricted to ``id_a < id_b``; there the
+    per-side occupancy is the corpus occupancy.
     """
     ref_arrays = doc_shingle_arrays(ref_df, text_col, id_col, k, unit)
     new_arrays = doc_shingle_arrays(new_df, text_col, id_col, k, unit)
-    ref_bands = signature_bands(
-        minhash_signatures(ref_arrays, id_col, num_hashes),
-        id_col,
-        num_hashes,
-        band_size,
-        max_bucket,
-    )
-    new_bands = signature_bands(
-        minhash_signatures(new_arrays, id_col, num_hashes),
-        id_col,
-        num_hashes,
-        band_size,
-        max_bucket,
-    )
-    cand = (
-        ref_bands.select(F.col(id_col).alias("id_a"), "band", "sig")
-        .join(
-            new_bands.select(F.col(id_col).alias("id_b"), "band", "sig"),
-            ["band", "sig"],
+
+    def bands(arrays: DataFrame) -> DataFrame:
+        return signature_bands(
+            minhash_signatures(arrays, id_col, num_hashes),
+            id_col,
+            num_hashes,
+            band_size,
+            max_bucket,
         )
-        .select("id_a", "id_b")
-        .distinct()
-    )
+
+    cand = band_pairs(bands(ref_arrays), bands(new_arrays), id_col)
     return _verify_pairs_jaccard_cross(
         cand, ref_arrays, new_arrays, id_col, threshold
     )
@@ -639,32 +645,25 @@ def near_dup_pairs_against_store(
     parameters (``k``/``unit``) must match the store's build — they are
     baked into the stored arrays. No ``max_bucket``: occupancy counted
     against a store-vs-arrival split diverges from the corpus-global
-    guard (same contract as the streaming twin). The arrival's bands
-    are broadcast (arrival ≪ store is this operator's premise — same
-    shape as the streaming twin's per-trigger probe); for
-    comparable-sized corpora use ``near_dup_pairs_cross``, whose band
-    join lets AQE pick the strategy."""
-    hcols = [f"h{i}" for i in range(num_hashes)]
+    guard (same contract as the streaming twin). Orientation and the
+    overlapping-id contract are ``near_dup_pairs_cross``'s, and so is
+    the band join (``band_pairs``); the arrival's bands enter it
+    wrapped in ``F.broadcast`` (arrival ≪ store is this operator's
+    premise — same shape as the streaming twin's per-trigger probe).
+    For comparable-sized corpora use ``near_dup_pairs_cross``, whose
+    band join lets AQE pick the strategy."""
     new_arrays = doc_shingle_arrays(new_df, text_col, id_col, k, unit)
-    bands_ref = signature_bands(
-        store_df.select(id_col, *hcols), id_col, num_hashes, band_size
-    )
-    bands_new = signature_bands(
-        minhash_signatures(new_arrays, id_col, num_hashes),
+    cand = band_pairs(
+        signature_bands(store_df, id_col, num_hashes, band_size),
+        F.broadcast(
+            signature_bands(
+                minhash_signatures(new_arrays, id_col, num_hashes),
+                id_col,
+                num_hashes,
+                band_size,
+            )
+        ),
         id_col,
-        num_hashes,
-        band_size,
-    )
-    cand = (
-        bands_ref.select(F.col(id_col).alias("id_a"), "band", "sig")
-        .join(
-            F.broadcast(
-                bands_new.select(F.col(id_col).alias("id_b"), "band", "sig")
-            ),
-            ["band", "sig"],
-        )
-        .select("id_a", "id_b")
-        .distinct()
     )
     return _verify_pairs_jaccard_cross(
         cand, store_df.select(id_col, "shingles"), new_arrays, id_col, threshold
@@ -710,7 +709,6 @@ def containment_pairs(
     unit: str = "word",
     threshold: float = 0.7,
     max_df: int = 20,
-    materialize_postings: bool = False,
 ) -> DataFrame:
     """Asymmetric containment near-dup pairs: the dedup mode Jaccard
     misses. When a small document A is quoted/embedded inside a much
@@ -755,41 +753,16 @@ def containment_pairs(
     partition is one document's kept shingles, bounded by document
     length.
 
-    ``materialize_postings`` (r8, default OFF after measuring both
-    decades) lazily ``localCheckpoint``s the exploded postings
-    relation so the df-cap count and the join probe share one kernel
-    run instead of re-executing the scan→shingle→explode subtree
-    each. The decade A/B says the default is the recompute: at sf0.1
-    the checkpoint wins ~10% (2.70 → 2.45 s), but at 100× (500k docs,
-    min-of-3 same-session) it LOSES 14% (46.1 vs 40.3 s) — the
-    exploded relation is one row per shingle INSTANCE (~corpus-sized
-    text), and writing+reading those non-replicated executor-local
-    blocks costs more than re-running the cheap word-shingle kernel
-    over a scan that rides idle cores. Turn it on when the kernel is
-    the expensive side (char n-grams — see near_dup_pairs'
-    ``materialize_shingles``, whose PER-DOC arrays relation measured
-    8% faster materialized at the 50k-doc decade) and executor loss
-    is acceptable (same caveat as ``connected_components``).
+    The postings relation is recomputed for its two consumers (df
+    count, join probe) rather than checkpointed: a lazy
+    ``localCheckpoint`` of it measured 10% faster at sf0.1 but 14%
+    slower at 500k docs (SCALE.md), because the exploded relation is
+    one row per shingle instance.
     """
-    arrays = doc_shingle_arrays(df, text_col, id_col, k, unit)
-    postings = arrays.select(
+    postings = doc_shingle_arrays(df, text_col, id_col, k, unit).select(
         id_col, explode_nonempty("shingles").alias("shingle")
     )
-    if materialize_postings:
-        postings = postings.localCheckpoint(eager=False)
-    # df pass FIRST, membership collection second: computing
-    # collect_list before the cap would buffer a df-10M stop shingle's
-    # whole posting list in one aggregation buffer.
-    keep = (
-        postings.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") <= max_df)
-        .select("shingle")
-    )
-    kept = postings.join(keep, "shingle")
-    kept_n = kept.withColumn(
-        "_n", F.count(F.lit(1)).over(Window.partitionBy(id_col))
-    )
+    kept_n = _capped_postings(postings, max_df, id_col)
     # sort_array on (id, n) structs orders by id (unique per list), so
     # pair orientation id_a < id_b matches the plain-id sort it replaces.
     members = kept_n.groupBy("shingle").agg(
@@ -819,15 +792,42 @@ def containment_pairs(
             ),
         )
     )
-    pairs = (
-        members.filter(F.size("_ms") >= 2)
-        .select(explode_nonempty(pair_structs).alias("_p"))
-        .select(
-            F.col("_p.a").alias("id_a"),
-            F.col("_p.b").alias("id_b"),
-            F.col("_p.na").alias("_na"),
-            F.col("_p.nb").alias("_nb"),
-        )
+    return _containment_tail(
+        members.filter(F.size("_ms") >= 2), pair_structs, threshold
+    )
+
+
+def _capped_postings(
+    postings: DataFrame, max_df: int, *doc_keys: str
+) -> DataFrame:
+    """The stop-shingle cap shared by both containment operators: drop
+    shingles with document frequency above ``max_df``, then attach each
+    document's kept-shingle count ``_n`` (a window over ``doc_keys``)."""
+    # df pass FIRST, membership collection second: computing
+    # collect_list before the cap would buffer a df-10M stop shingle's
+    # whole posting list in one aggregation buffer.
+    keep = (
+        postings.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("_df"))
+        .filter(F.col("_df") <= max_df)
+        .select("shingle")
+    )
+    return postings.join(keep, "shingle").withColumn(
+        "_n", F.count(F.lit(1)).over(Window.partitionBy(*doc_keys))
+    )
+
+
+def _containment_tail(
+    members: DataFrame, pair_structs: Column, threshold: float
+) -> DataFrame:
+    """Expand ``pair_structs`` (a, b, na, nb) over the per-shingle
+    member rows, count shared shingles per pair and keep pairs where
+    either containment direction clears ``threshold``."""
+    pairs = members.select(explode_nonempty(pair_structs).alias("_p")).select(
+        F.col("_p.a").alias("id_a"),
+        F.col("_p.b").alias("id_b"),
+        F.col("_p.na").alias("_na"),
+        F.col("_p.nb").alias("_nb"),
     )
     # _na/_nb are functionally determined by (id_a, id_b); keeping them
     # as grouping keys (constant within each group) preserves map-side
@@ -881,7 +881,13 @@ def containment_pairs_cross(
     more) — left out until measurement justifies the approximation.
     Member keys are (side, id) structs internally, so overlapping id
     spaces never conflate; the ``kept_n`` window partitions by (side,
-    id) and stays bounded by document length."""
+    id) and stays bounded by document length.
+
+    It shares the df-capped postings and the score tail with
+    ``containment_pairs`` but not the pair expansion: run on
+    ``(df, df)`` the combined cap would count every posting twice and
+    change which shingles survive, and the product expansion would
+    emit each pair in both orientations."""
     arrays_r = doc_shingle_arrays(ref_df, text_col, id_col, k, unit)
     arrays_n = doc_shingle_arrays(new_df, text_col, id_col, k, unit)
     postings = arrays_r.select(
@@ -895,16 +901,7 @@ def containment_pairs_cross(
             explode_nonempty("shingles").alias("shingle"),
         )
     )
-    keep = (
-        postings.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") <= max_df)
-        .select("shingle")
-    )
-    kept = postings.join(keep, "shingle")
-    kept_n = kept.withColumn(
-        "_n", F.count(F.lit(1)).over(Window.partitionBy("_s", id_col))
-    )
+    kept_n = _capped_postings(postings, max_df, "_s", id_col)
     member = F.struct(F.col(id_col).alias("id"), F.col("_n").alias("n"))
     members = kept_n.groupBy("shingle").agg(
         F.collect_list(F.when(F.col("_s") == 0, member)).alias("_ma"),
@@ -924,30 +921,10 @@ def containment_pairs_cross(
             ),
         )
     )
-    pairs = (
-        members.filter((F.size("_ma") >= 1) & (F.size("_mb") >= 1))
-        .select(explode_nonempty(pair_structs).alias("_p"))
-        .select(
-            F.col("_p.a").alias("id_a"),
-            F.col("_p.b").alias("id_b"),
-            F.col("_p.na").alias("_na"),
-            F.col("_p.nb").alias("_nb"),
-        )
-    )
-    inter = pairs.groupBy("id_a", "id_b", "_na", "_nb").agg(
-        F.count(F.lit(1)).alias("n_common")
-    )
-    cont_a = F.col("n_common") / F.col("_na")
-    cont_b = F.col("n_common") / F.col("_nb")
-    return (
-        inter.filter(F.greatest(cont_a, cont_b) >= threshold)
-        .select(
-            "id_a",
-            "id_b",
-            "n_common",
-            F.round(cont_a, 6).alias("containment_a"),
-            F.round(cont_b, 6).alias("containment_b"),
-        )
+    return _containment_tail(
+        members.filter((F.size("_ma") >= 1) & (F.size("_mb") >= 1)),
+        pair_structs,
+        threshold,
     )
 
 

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from big_data_analysis_of_twitter_emoji_usage_spark.core import as_col, explode_nonempty
+from big_data_analysis_of_twitter_emoji_usage_spark.operators.dedup import band_pairs
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -393,13 +394,34 @@ def auto_sign_bits(
     return max(min_bits, min(max_bits, raw))
 
 
-def _warn_if_buckets_collapse(
-    n_rows: int, bits: int, max_bucket: int | None, op: str
-) -> None:
-    """Surface the silent-0-rows regime: expected bucket occupancy
-    beyond the skew guard means typical buckets get dropped wholesale."""
+def _auto_bits(
+    n_rows: int,
+    max_bucket: int | None,
+    target_occupancy: int,
+    op: str,
+    probe: DataFrame | None = None,
+    vec_col: str = "embedding",
+    tables: int = 1,
+) -> int:
+    """The ``bits=None`` operating point: ``auto_sign_bits(n_rows)``,
+    capped at dim // tables when a ``probe`` frame is given (coordinate-
+    sign table t reads dims [t·bits, (t+1)·bits); dim comes from the
+    probe's first non-null vector). Warns when the point still implies
+    typical buckets past ``max_bucket`` — the silent-0-rows regime."""
     import warnings
 
+    bits = auto_sign_bits(n_rows, target_occupancy)
+    if probe is not None:
+        # first NON-NULL vector: under the non-ANSI default size(NULL)
+        # is NULL, so probing the literal first row would int(None) on
+        # a corpus whose first scanned row has a null embedding.
+        row = (
+            probe.filter(F.col(vec_col).isNotNull())
+            .select(F.size(F.col(vec_col)).alias("d"))
+            .first()
+        )
+        dim = int(row["d"]) if row is not None else 64
+        bits = min(bits, max(1, dim // max(1, tables)))
     if max_bucket is not None and n_rows / float(1 << bits) > max_bucket:
         warnings.warn(
             f"{op}: expected bucket occupancy "
@@ -410,6 +432,35 @@ def _warn_if_buckets_collapse(
             RuntimeWarning,
             stacklevel=3,
         )
+    return bits
+
+
+def _sign_rows(
+    corpus: DataFrame, id_col: str, vec_col: str, bits: int, tables: int
+) -> tuple[DataFrame, DataFrame]:
+    """The coordinate-sign family's rows: ``e`` is (_id, _v double
+    array) and ``buckets`` is (_id, _t, _b), one row per hash table
+    (table t keys on dims [t·bits, (t+1)·bits))."""
+    e = corpus.select(
+        F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v")
+    )
+    table_structs = F.array(
+        *[
+            F.struct(
+                F.lit(t).alias("t"),
+                sign_bucket(F.col("_v"), bits, offset=t * bits).alias("b"),
+            )
+            for t in range(tables)
+        ]
+    )
+    # explode_nonempty: table_structs is a literal-built array (never
+    # empty), and inner explode would let InferFiltersFromGenerate clone
+    # the CollapseProject-inlined bucket expressions into a pre-Generate
+    # Filter (see core.explode_nonempty).
+    buckets = e.select(
+        F.col("_id"), explode_nonempty(table_structs).alias("_tb")
+    ).select("_id", F.col("_tb.t").alias("_t"), F.col("_tb.b").alias("_b"))
+    return e, buckets
 
 
 def embedding_near_dup_pairs(
@@ -447,9 +498,11 @@ def embedding_near_dup_pairs(
       embedding space — are dropped before the join, capping any single
       bucket's contribution at O(max_bucket²) pairs.
 
-    Candidate pairs are distinct-ed, then scored by joining each side
-    back to its vector — two hash joins on ids, same verified-candidates
-    shape as near_dup_pairs.
+    The self-join is the cross path (``_banded_cosine_pairs``) with
+    the corpus on both sides and ``id_a < id_b`` in the pair join, so
+    each pair is emitted once, oriented smaller id first, and a vector
+    never pairs with itself. ``max_bucket`` counts each bucket's
+    occupancy over the whole corpus.
 
     ``bits=None`` (the r8 default) applies the sizing rule in code:
     one cheap count + first-row dim probe derives
@@ -465,114 +518,100 @@ def embedding_near_dup_pairs(
     same literals).
     """
     if bits is None:
-        n_rows = corpus.count()
-        # first NON-NULL vector: under the non-ANSI default size(NULL)
-        # is NULL, so probing the literal first row would int(None) on
-        # a corpus whose first scanned row has a null embedding.
-        row = (
-            corpus.filter(F.col(vec_col).isNotNull())
-            .select(F.size(F.col(vec_col)).alias("d"))
-            .first()
+        bits = _auto_bits(
+            corpus.count(),
+            max_bucket,
+            target_occupancy,
+            "embedding_near_dup_pairs",
+            corpus,
+            vec_col,
+            tables,
         )
-        dim = int(row["d"]) if row is not None else 64
-        bits = min(
-            auto_sign_bits(n_rows, target_occupancy),
-            max(1, dim // max(1, tables)),
-        )
-        _warn_if_buckets_collapse(
-            n_rows, bits, max_bucket, "embedding_near_dup_pairs"
-        )
-    e = corpus.select(
-        F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v")
+    e, buckets = _sign_rows(corpus, id_col, vec_col, bits, tables)
+    return _banded_cosine_pairs(
+        e, buckets, e, buckets, threshold, max_bucket,
+        F.col("id_a") < F.col("id_b"),
     )
-    table_structs = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("t"),
-                sign_bucket(F.col("_v"), bits, offset=t * bits).alias("b"),
-            )
-            for t in range(tables)
-        ]
-    )
-    # explode_nonempty: table_structs is a literal-built array (never
-    # empty), and inner explode would let InferFiltersFromGenerate clone
-    # the CollapseProject-inlined bucket expressions into a pre-Generate
-    # Filter (see core.explode_nonempty).
-    buckets = e.select(
-        F.col("_id"), explode_nonempty(table_structs).alias("_tb")
-    ).select("_id", F.col("_tb.t").alias("_t"), F.col("_tb.b").alias("_b"))
-    return _banded_pairs_cosine_verify(e, buckets, threshold, max_bucket)
 
 
-def _banded_pairs_cosine_verify(
-    e: DataFrame,
-    buckets: DataFrame,
+def _banded_cosine_pairs(
+    ea: DataFrame,
+    buckets_a: DataFrame,
+    eb: DataFrame,
+    buckets_b: DataFrame,
     threshold: float,
     max_bucket: int | None,
-    dim: int | None = None,
+    pair_pred: Column | None = None,
 ) -> DataFrame:
-    """Shared tail of the embedding near-dup family: optional
-    degenerate-bucket skew guard, then IN-BAND verification (r9) —
-    vectors are attached to the surviving band rows by ONE id join and
-    the per-(table, bucket) self-join scores each candidate in place;
-    only pairs that PASS the threshold reach the final dedupe
-    aggregate. ``e`` is (_id, _v double-array); ``buckets`` is
-    (_id, _t, _b).
+    """The embedding near-dup family's one pair path: optional per-side
+    skew guard, then IN-BAND verification (r9) — each side's vectors
+    and self-norms are attached to its surviving band rows by one id
+    join, the (table, bucket) join of side a × side b scores each
+    candidate in place, and only pairs that PASS the threshold reach
+    the final dedupe aggregate. ``ea``/``eb`` are (_id, _v
+    double-array); ``buckets_a``/``buckets_b`` are (_id, _t, _b).
 
-    Why this replaced the candidates-distinct → two-id-joins shape
+    Orientation is (a, b). Sides stay separate relations end to end, so
+    overlapping id spaces never conflate: the same id on both sides is
+    a legitimate pair. ``max_bucket`` guards each side's buckets
+    independently, bounding a both-sides-hot bucket's fan-out at
+    max_bucket². A self-join passes the same frames on both sides and
+    ``pair_pred`` ``id_a < id_b``; the two sides' identical exchanges
+    are then reused, so the plan is the one-frame plan. The predicate
+    is applied right after the bucket join, below the cosine filter,
+    so Catalyst puts it FIRST in the join condition and mirrored pairs
+    and self-pairs never pay the dot product; a filter on this tail's
+    output would be pushed into the join after the cosine instead.
+
+    Why in-band rather than candidates-distinct → two id joins
     (measured at the 100× embedding decade, 200k vectors / 15 auto
     bits / 6 tables, same session A/B): the multi-table candidate set
     is effectively duplicate-free THERE (6,652,598 raw vs 6,649,554
-    distinct — chance pairs almost never agree in two 15-bit tables),
-    so the old pre-verify ``distinct`` was a full 6.6M-row exchange
-    that removed 0.05% of rows, and the two id joins re-shuffled the
-    corpus + candidates again to fetch vectors the band rows had
-    already seen. In-band: 14.57 s vs 19.20 s (identical 560,705
-    pairs), and the sf0.1 gate configs measure the same-or-better
-    (SCALE.md r9). The dedupe that IS still needed — a true near-dup
-    pair agreeing in several tables — moves AFTER the threshold,
-    where it aggregates only the surviving pairs (560k, not 6.6M) and
-    duplicate scores are bit-identical so ``max`` is exact. The trade
-    is band-shuffle width (rows carry the 64-dim vector); at
-    dimensions far past ~10³, or table counts high enough to make the
-    dup factor material, the re-join shape wins again — re-measure
-    before reusing this tail there."""
-    if max_bucket is not None:
-        w = Window.partitionBy("_t", "_b")
-        buckets = (
-            buckets.withColumn("_bc", F.count(F.lit(1)).over(w))
-            .filter(F.col("_bc") <= max_bucket)
-            .drop("_bc")
+    distinct), so a pre-verify ``distinct`` was a full 6.6M-row
+    exchange that removed 0.05% of rows, and the two id joins
+    re-shuffled the corpus + candidates to fetch vectors the band rows
+    had already seen. In-band: 14.57 s vs 19.20 s (identical 560,705
+    pairs; SCALE.md r9). The dedupe that IS still needed — a true
+    near-dup pair agreeing in several tables — runs AFTER the
+    threshold, over survivors only; duplicate scores are bit-identical
+    so ``max`` is exact. The trade is band-shuffle width (rows carry
+    the vector); at dimensions far past ~10³, or table counts high
+    enough to make the dup factor material, the re-join shape wins
+    again — re-measure before reusing this tail there. The dot is the
+    HOF form: the unrolled fast path measured a LOSS at this verify's
+    fixture candidate volume (OPTIMIZATION_r12)."""
+
+    def side(e: DataFrame, buckets: DataFrame, s: str) -> DataFrame:
+        if max_bucket is not None:
+            w = Window.partitionBy("_t", "_b")
+            buckets = (
+                buckets.withColumn("_bc", F.count(F.lit(1)).over(w))
+                .filter(F.col("_bc") <= max_bucket)
+                .drop("_bc")
+            )
+        # per-side self-norms ride the band rows so the verify join pays
+        # one interpreted-HOF dot per candidate, not three (bit-identical;
+        # cosine_with_norms)
+        return buckets.join(
+            e.withColumn("_n", _dot_d("_v", "_v", None)), "_id"
+        ).select(
+            "_t",
+            "_b",
+            F.col("_id").alias(f"id_{s}"),
+            F.col("_v").alias(f"_v{s}"),
+            F.col("_n").alias(f"_n{s}"),
         )
-    # per-side self-norms ride the band rows so the verify join pays
-    # one interpreted-HOF dot per candidate, not three (bit-identical;
-    # cosine_with_norms)
-    bv = buckets.join(
-        e.withColumn("_n", _dot_d("_v", "_v", dim)), "_id"
-    )
-    aa = bv.select(
-        "_t",
-        "_b",
-        F.col("_id").alias("id_a"),
-        F.col("_v").alias("_va"),
-        F.col("_n").alias("_na"),
-    )
-    bb = bv.select(
-        "_t",
-        "_b",
-        F.col("_id").alias("id_b"),
-        F.col("_v").alias("_vb"),
-        F.col("_n").alias("_nb"),
-    )
+
+    pairs = side(ea, buckets_a, "a").join(side(eb, buckets_b, "b"), ["_t", "_b"])
+    if pair_pred is not None:
+        pairs = pairs.filter(pair_pred)
     return (
-        aa.join(bb, ["_t", "_b"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
+        pairs.select(
             "id_a",
             "id_b",
-            cosine_with_norms(
-                "_va", "_vb", F.col("_na"), F.col("_nb"), dim
-            ).alias("_cos"),
+            cosine_with_norms("_va", "_vb", F.col("_na"), F.col("_nb")).alias(
+                "_cos"
+            ),
         )
         .filter(F.col("_cos") >= threshold)
         .groupBy("id_a", "id_b")
@@ -607,16 +646,17 @@ def embedding_near_dup_pairs_hyperplane(
     (size 2^bits to corpus/2^bits ≈ target occupancy), and the two
     knobs no longer compete for the 64 stored dims.
 
-    Plan shape is identical to the coordinate-sign variant — one
+    Only the band rows differ from the coordinate-sign variant: one
     Arrow-batched signature projection (``_hyperplane_sigs_udf``; see
-    its docstring for the measured 10× JVM-expression dead ends), a
-    posexplode to (table, sig) band rows, and the shared
-    guard + self-join + exact-cosine verify tail — so the banded join
-    remains the only shuffle and the skew guard caps any degenerate
-    bucket at O(max_bucket²) pairs. The coefficient schedule is baked
-    into both the Spark plan and the SQL oracle as literals
-    (plans.catalog), with the schedule-order summation contract keeping
-    buckets bit-identical across engines.
+    its docstring for the measured 10× JVM-expression dead ends) and a
+    posexplode to (table, sig) rows. Pairs then come from the same
+    one-frame call of ``_banded_cosine_pairs``: (id_a, id_b, cosine)
+    with id_a < id_b, the banded join the only shuffle, and the
+    corpus-global skew guard capping any degenerate bucket at
+    O(max_bucket²) pairs. The coefficient schedule is baked into both
+    the Spark plan and the SQL oracle as literals (plans.catalog), with
+    the schedule-order summation contract keeping buckets bit-identical
+    across engines.
 
     ``bits=None`` (the r8 default) derives the operating point from a
     cheap build-time corpus count via ``auto_sign_bits`` — with no
@@ -626,10 +666,11 @@ def embedding_near_dup_pairs_hyperplane(
     query does this so its oracle can bake the schedule literals).
     """
     if bits is None:
-        n_rows = corpus.count()
-        bits = auto_sign_bits(n_rows, target_occupancy)
-        _warn_if_buckets_collapse(
-            n_rows, bits, max_bucket, "embedding_near_dup_pairs_hyperplane"
+        bits = _auto_bits(
+            corpus.count(),
+            max_bucket,
+            target_occupancy,
+            "embedding_near_dup_pairs_hyperplane",
         )
     planes = lsh_hyperplanes(bits, tables, dim, nnz)
     sig_udf = _hyperplane_sigs_udf(planes, dim)
@@ -639,71 +680,9 @@ def embedding_near_dup_pairs_hyperplane(
     buckets = e.select(
         "_id", F.posexplode(sig_udf(F.col("_v"))).alias("_t", "_b")
     )
-    # HOF dot (dim not forwarded): the unrolled fast path measured a
-    # LOSS on this verify at fixture candidate volume (A/B table,
-    # OPTIMIZATION_r12); re-engage per call when pair volume is large
-    return _banded_pairs_cosine_verify(e, buckets, threshold, max_bucket)
-
-
-def _banded_pairs_cosine_verify_cross(
-    ea: DataFrame,
-    buckets_a: DataFrame,
-    eb: DataFrame,
-    buckets_b: DataFrame,
-    threshold: float,
-    max_bucket: int | None,
-    dim: int | None = None,
-) -> DataFrame:
-    """``_banded_pairs_cosine_verify`` for two DISTINCT corpora: the
-    (table, bucket) join runs reference-side × new-side instead of
-    self-join, with no ``id_a < id_b`` canonicalization (orientation is
-    (reference, new); overlapping id spaces are legitimate — sides are
-    kept in separate relations end to end, so the same id on both
-    sides can pair and is never conflated). ``max_bucket`` guards each
-    side's buckets independently, bounding a both-sides-hot bucket's
-    fan-out at max_bucket² (same per-side rule as
-    ``dedup.near_dup_pairs_cross``). In-band verify as the self-join
-    tail: vectors ride the band rows, only threshold survivors reach
-    the final dedupe aggregate."""
-
-    def guard(buckets: DataFrame) -> DataFrame:
-        if max_bucket is None:
-            return buckets
-        w = Window.partitionBy("_t", "_b")
-        return (
-            buckets.withColumn("_bc", F.count(F.lit(1)).over(w))
-            .filter(F.col("_bc") <= max_bucket)
-            .drop("_bc")
-        )
-
-    ea_n = ea.withColumn("_n", _dot_d("_v", "_v", dim))
-    eb_n = eb.withColumn("_n", _dot_d("_v", "_v", dim))
-    aa = guard(buckets_a).join(ea_n, "_id").select(
-        "_t",
-        "_b",
-        F.col("_id").alias("id_a"),
-        F.col("_v").alias("_va"),
-        F.col("_n").alias("_na"),
-    )
-    bb = guard(buckets_b).join(eb_n, "_id").select(
-        "_t",
-        "_b",
-        F.col("_id").alias("id_b"),
-        F.col("_v").alias("_vb"),
-        F.col("_n").alias("_nb"),
-    )
-    return (
-        aa.join(bb, ["_t", "_b"])
-        .select(
-            "id_a",
-            "id_b",
-            cosine_with_norms(
-                "_va", "_vb", F.col("_na"), F.col("_nb"), dim
-            ).alias("_cos"),
-        )
-        .filter(F.col("_cos") >= threshold)
-        .groupBy("id_a", "id_b")
-        .agg(F.round(F.max("_cos"), 6).alias("cosine"))
+    return _banded_cosine_pairs(
+        e, buckets, e, buckets, threshold, max_bucket,
+        F.col("id_a") < F.col("id_b"),
     )
 
 
@@ -730,48 +709,31 @@ def embedding_near_dup_pairs_cross(
     cost is one signature pass over the new batch + one band join
     (O(|ref|·|new|) bucket products, never the reference self-join).
 
+    Orientation is (reference, new) with no id order; the id spaces may
+    overlap, and the same id on both sides is a legitimate pair, never
+    a self-match. ``max_bucket`` caps each side's buckets by that
+    side's own occupancy. ``embedding_near_dup_pairs`` is this same
+    pair path run on one frame.
+
     ``bits=None`` sizes the code width from the COMBINED corpus count
     (the union is the occupancy universe the buckets must spread), dim
     from a reference-side probe, capped at dim // tables as in the
     self-join variant."""
     if bits is None:
-        n_rows = ref.count() + new.count()
-        row = (
-            ref.filter(F.col(vec_col).isNotNull())
-            .select(F.size(F.col(vec_col)).alias("d"))
-            .first()
+        bits = _auto_bits(
+            ref.count() + new.count(),
+            max_bucket,
+            target_occupancy,
+            "embedding_near_dup_pairs_cross",
+            ref,
+            vec_col,
+            tables,
         )
-        dim = int(row["d"]) if row is not None else 64
-        bits = min(
-            auto_sign_bits(n_rows, target_occupancy),
-            max(1, dim // max(1, tables)),
-        )
-        _warn_if_buckets_collapse(
-            n_rows, bits, max_bucket, "embedding_near_dup_pairs_cross"
-        )
-
-    def prep(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
-        e = corpus.select(
-            F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v")
-        )
-        table_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("t"),
-                    sign_bucket(F.col("_v"), bits, offset=t * bits).alias("b"),
-                )
-                for t in range(tables)
-            ]
-        )
-        buckets = e.select(
-            F.col("_id"), explode_nonempty(table_structs).alias("_tb")
-        ).select("_id", F.col("_tb.t").alias("_t"), F.col("_tb.b").alias("_b"))
-        return e, buckets
-
-    ea, buckets_a = prep(ref)
-    eb, buckets_b = prep(new)
-    return _banded_pairs_cosine_verify_cross(
-        ea, buckets_a, eb, buckets_b, threshold, max_bucket
+    return _banded_cosine_pairs(
+        *_sign_rows(ref, id_col, vec_col, bits, tables),
+        *_sign_rows(new, id_col, vec_col, bits, tables),
+        threshold,
+        max_bucket,
     )
 
 
@@ -818,6 +780,60 @@ def build_signbucket_store(
     )
 
 
+def signbucket_bands(
+    state: DataFrame, id_col: str = "vec_id", tables: int = 2
+) -> DataFrame:
+    """(id, _t, _b) band rows of a ``build_signbucket_store`` relation,
+    one per table — the embedding counterpart of
+    ``dedup.signature_bands``. Rows sharing (_t, _b) are candidates
+    (``dedup.band_pairs`` with ``keys=("_t", "_b")``)."""
+    structs = F.array(
+        *[
+            F.struct(F.lit(t).alias("t"), F.col(f"b{t}").alias("b"))
+            for t in range(tables)
+        ]
+    )
+    return state.select(
+        F.col(id_col), explode_nonempty(structs).alias("_tb")
+    ).select(id_col, F.col("_tb.t").alias("_t"), F.col("_tb.b").alias("_b"))
+
+
+def verify_pairs_cosine(
+    cand: DataFrame,
+    a: DataFrame,
+    b: DataFrame,
+    id_col: str = "vec_id",
+    threshold: float = 0.4,
+) -> DataFrame:
+    """Exact-cosine verification of candidate (id_a, id_b) pairs — the
+    counterpart of ``dedup.verify_pairs_jaccard``. id_a is looked up in
+    ``a`` and id_b in ``b``, both in ``build_signbucket_store`` form
+    (id, _v, _n self-norm), so the two sides may be different relations
+    with overlapping id spaces or the same relation. Returns
+    (id_a, id_b, cosine) for pairs at or above ``threshold``."""
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.col("_v").alias(f"_v{s}"),
+            F.col("_n").alias(f"_n{s}"),
+        )
+
+    return (
+        cand.join(side(a, "a"), "id_a")
+        .join(side(b, "b"), "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            cosine_with_norms("_va", "_vb", F.col("_na"), F.col("_nb")).alias(
+                "_cos"
+            ),
+        )
+        .filter(F.col("_cos") >= threshold)
+        .select("id_a", "id_b", F.round("_cos", 6).alias("cosine"))
+    )
+
+
 def embedding_near_dup_against_store(
     store_df: DataFrame,
     new_df: DataFrame,
@@ -829,75 +845,30 @@ def embedding_near_dup_against_store(
 ) -> DataFrame:
     """``embedding_near_dup_pairs_cross`` with the reference side
     already in ``build_signbucket_store`` form: (id_a, id_b, cosine)
-    with id_a from the store, id_b from ``new_df``. Computes buckets
+    with id_a from the store, id_b from ``new_df``, the same id spaces
+    and orientation contract as the cross operator. Computes buckets
     for the ARRIVAL only; the store contributes two columnar scans
     (code columns for the band probe, the vector column for the
     candidates) — the batch form of the streaming twin's per-trigger
-    probe, and the persisted-reference loop the asymmetric three-arm
+    probe (same ``signbucket_bands`` rows and ``verify_pairs_cosine``
+    verify), and the persisted-reference loop the asymmetric three-arm
     measurement (SCALE.md, text twin) showed is where cross dedup's
     win actually lives. The arrival's bands are broadcast
     (arrival ≪ store is the premise); no ``max_bucket`` (store-split
     occupancy diverges from the corpus-global guard)."""
-
-    def bands(df: DataFrame) -> DataFrame:
-        structs = F.array(
-            *[
-                F.struct(F.lit(t).alias("t"), F.col(f"b{t}").alias("b"))
-                for t in range(tables)
-            ]
-        )
-        return df.select(
-            F.col(id_col), explode_nonempty(structs).alias("_tb")
-        ).select(id_col, F.col("_tb.t").alias("_t"), F.col("_tb.b").alias("_b"))
-
     new_state = build_signbucket_store(new_df, id_col, vec_col, bits, tables)
-    bcols = [f"b{t}" for t in range(tables)]
-    cand = (
-        bands(store_df.select(id_col, *bcols))
-        .select(F.col(id_col).alias("id_a"), "_t", "_b")
-        .join(
-            F.broadcast(
-                bands(new_state.select(id_col, *bcols)).select(
-                    F.col(id_col).alias("id_b"), "_t", "_b"
-                )
-            ),
-            ["_t", "_b"],
-        )
-        .select("id_a", "id_b")
-        .distinct()
+    cand = band_pairs(
+        signbucket_bands(store_df, id_col, tables),
+        F.broadcast(signbucket_bands(new_state, id_col, tables)),
+        id_col,
+        ("_t", "_b"),
     )
     # stored self-norm when the store has one (r11 schema); compute as
     # the pre-r11 fallback — recomputing is one HOF pass over the whole
     # store per probe, exactly the tax the stored column removes
-    dim = None  # unrolled dot loses at this probe's candidate volume
-    _na = (
-        F.col("_n")
-        if "_n" in store_df.columns
-        else _dot_d("_v", "_v", dim)
-    )
-    va = store_df.select(
-        F.col(id_col).alias("id_a"),
-        F.col("_v").alias("_va"),
-        _na.alias("_na"),
-    )
-    vb = new_state.select(
-        F.col(id_col).alias("id_b"),
-        F.col("_v").alias("_vb"),
-        F.col("_n").alias("_nb"),
-    )
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            cosine_with_norms(
-                "_va", "_vb", F.col("_na"), F.col("_nb"), dim
-            ).alias("_cos"),
-        )
-        .filter(F.col("_cos") >= threshold)
-        .select("id_a", "id_b", F.round("_cos", 6).alias("cosine"))
-    )
+    if "_n" not in store_df.columns:
+        store_df = store_df.withColumn("_n", _dot_d("_v", "_v", None))
+    return verify_pairs_cosine(cand, store_df, new_state, id_col, threshold)
 
 
 def cosine_knn_join(

@@ -1209,7 +1209,6 @@ def stream_near_dedup_minhash(
         verify_pairs_jaccard,
     )
 
-    hcols = [f"h{i}" for i in range(num_hashes)]
     return _stream_banded_dedup(
         spark,
         stream_df,
@@ -1226,7 +1225,7 @@ def stream_near_dedup_minhash(
             bdf, text_col, id_col, k, num_hashes, unit
         ),
         band_rows=lambda state: signature_bands(
-            state.select(id_col, *hcols), id_col, num_hashes, band_size
+            state, id_col, num_hashes, band_size
         ),
         keys=["band", "sig"],
         dropped_ids=lambda cand, payload: verify_pairs_jaccard(
@@ -1278,43 +1277,12 @@ def stream_near_dedup_embedding(
 
     Returns the drained keeper rows (original stream columns) over
     ``out_dir``."""
-    from big_data_analysis_of_twitter_emoji_usage_spark.core import explode_nonempty
     from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
         build_signbucket_store,
-        cosine_with_norms,
+        signbucket_bands,
+        verify_pairs_cosine,
     )
 
-    def _bands(state: DataFrame) -> DataFrame:
-        structs = F.array(
-            *[
-                F.struct(F.lit(t).alias("t"), F.col(f"b{t}").alias("b"))
-                for t in range(tables)
-            ]
-        )
-        return state.select(
-            F.col(id_col), explode_nonempty(structs).alias("_tb")
-        ).select(id_col, F.col("_tb.t").alias("_t"), F.col("_tb.b").alias("_b"))
-
-    def _cosine_dropped(cand: DataFrame, payload: DataFrame) -> DataFrame:
-        def side(s: str) -> DataFrame:
-            return payload.select(
-                F.col(id_col).alias(f"id_{s}"),
-                F.col("_v").alias(f"_v{s}"),
-                F.col("_n").alias(f"_n{s}"),
-            )
-
-        return (
-            cand.join(side("a"), "id_a")
-            .join(side("b"), "id_b")
-            .filter(
-                cosine_with_norms("_va", "_vb", F.col("_na"), F.col("_nb"))
-                >= threshold
-            )
-            .select(F.col("id_b").alias(id_col))
-            .distinct()
-        )
-
-    bcols = [f"b{t}" for t in range(tables)]
     return _stream_banded_dedup(
         spark,
         stream_df,
@@ -1330,9 +1298,13 @@ def stream_near_dedup_embedding(
         build_state=lambda bdf: build_signbucket_store(
             bdf, id_col, vec_col, bits, tables
         ),
-        band_rows=lambda state: _bands(state.select(id_col, *bcols)),
+        band_rows=lambda state: signbucket_bands(state, id_col, tables),
         keys=["_t", "_b"],
-        dropped_ids=_cosine_dropped,
+        dropped_ids=lambda cand, payload: verify_pairs_cosine(
+            cand, payload, payload, id_col, threshold
+        )
+        .select(F.col("id_b").alias(id_col))
+        .distinct(),
     )
 
 

@@ -359,7 +359,10 @@ def test_cross_pairs_equal_self_pairs_restricted_to_cross_parity(spark):
     """near_dup_pairs_cross(even, odd) at the same banding/threshold
     must emit EXACTLY the self-join operator's pairs that straddle the
     parity split, re-oriented (even, odd) — and none of the same-parity
-    ones (the catalog query's documented relationship)."""
+    ones (the catalog query's documented relationship). And the identity
+    the self-join is built on: the cross operator given the same frame
+    on both sides, restricted to id_a < id_b, IS the self-join operator,
+    with and without the max_bucket guard."""
     from big_data_analysis_of_twitter_emoji_usage_spark.operators.dedup import (
         near_dup_pairs,
         near_dup_pairs_cross,
@@ -386,6 +389,21 @@ def test_cross_pairs_equal_self_pairs_restricted_to_cross_parity(spark):
     }
     assert (1, 3) in self_pairs or (3, 1) in self_pairs  # same-parity pair exists
     assert got == want and len(got) >= 2
+
+    for max_bucket in (None, 2):
+        kw = dict(threshold=0.2, max_bucket=max_bucket)
+        one_frame = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in near_dup_pairs_cross(df, df, **kw).collect()
+            if r.id_a < r.id_b
+        }
+        self_kw = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in near_dup_pairs(df, **kw).collect()
+        }
+        assert one_frame == self_kw and len(self_kw) >= 1, max_bucket
+    # the guard engages on this fixture: docs 0, 1 and 3 share buckets
+    assert self_kw != self_pairs
 
 
 def test_cross_pairs_overlapping_id_spaces_never_conflate(spark):

@@ -748,7 +748,8 @@ def test_containment_scan_count_bounded(spark, sf_dir):
 
 
 def test_cross_dedup_plans_are_equijoin_only(spark, docs, sf_dir):
-    """Both cross-corpus near-dup operators must candidate-generate
+    """The cross-corpus near-dup operators, and the self-join operators
+    that run the same pair path on one frame, must candidate-generate
     through (band/bucket) EQUI-joins — never a cross/nested-loop pair
     enumeration — and keep a bounded exchange count (the r9 cross
     family's 100 TB contract: one scan + one band shuffle per corpus,
@@ -798,6 +799,63 @@ def test_cross_dedup_plans_are_equijoin_only(spark, docs, sf_dir):
     )
     assert "CartesianProduct" not in plan3
     assert "BroadcastNestedLoopJoin" not in plan3
+
+    from big_data_analysis_of_twitter_emoji_usage_spark.operators.dedup import near_dup_pairs
+    from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
+        embedding_near_dup_pairs,
+        embedding_near_dup_pairs_hyperplane,
+    )
+
+    for self_plan in (
+        plan_of(near_dup_pairs(docs, threshold=0.2)),
+        plan_of(
+            embedding_near_dup_pairs(
+                emb, threshold=0.3, bits=8, tables=2, max_bucket=100
+            )
+        ),
+        plan_of(
+            embedding_near_dup_pairs_hyperplane(
+                emb, threshold=0.3, bits=6, max_bucket=100
+            )
+        ),
+    ):
+        assert "CartesianProduct" not in self_plan
+        assert "BroadcastNestedLoopJoin" not in self_plan
+
+
+def test_embedding_self_dedup_orders_pair_before_cosine(spark, sf_dir):
+    """The self-join embedding dedups restrict the shared pair path to
+    id_a < id_b INSIDE it, right after the bucket join: Catalyst then
+    puts that conjunct FIRST in the pair join's condition, so mirrored
+    pairs and self-pairs are rejected before the cosine dot product is
+    evaluated. Filtering the tail's output instead would be pushed into
+    the join AFTER the cosine conjunct — same rows, every mirrored pair
+    and self-pair paying the dot."""
+    from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
+        embedding_near_dup_pairs,
+        embedding_near_dup_pairs_hyperplane,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    pair_join = re.compile(
+        r"Join \[_t#\d+, _b#\d+\], \[_t#\d+, _b#\d+\], Inner, "
+        r"(?:Build(?:Left|Right), )?(.*)$",
+        re.M,
+    )
+    for max_bucket in (None, 100):
+        for df in (
+            embedding_near_dup_pairs(
+                emb, threshold=0.3, bits=8, tables=2, max_bucket=max_bucket
+            ),
+            embedding_near_dup_pairs_hyperplane(
+                emb, threshold=0.3, bits=6, max_bucket=max_bucket
+            ),
+        ):
+            conds = pair_join.findall(plan_of(df))
+            assert len(conds) == 1, conds
+            assert re.match(
+                r"\(\(id_a#\d+L? < id_b#\d+L?\) AND .*aggregate", conds[0]
+            ), conds[0][:200]
 
 
 def test_knn_join_recall_floor(spark, sf_dir):

@@ -313,7 +313,10 @@ def test_embedding_cross_pairs_equal_self_restricted_to_cross_parity(spark):
     """embedding_near_dup_pairs_cross(even, odd) at the same operating
     point must emit exactly the self-join operator's cross-parity pairs
     re-oriented (even, odd) — the dedup_embedding_cross catalog
-    contract."""
+    contract. And the identity the self-join is built on: the cross
+    operator given the same frame on both sides, restricted to
+    id_a < id_b, IS the self-join operator at explicit bits, with and
+    without the max_bucket guard."""
     import random
 
     from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
@@ -350,6 +353,22 @@ def test_embedding_cross_pairs_equal_self_restricted_to_cross_parity(spark):
         ).collect()
     }
     assert got == want and len(got) >= 1
+
+    for max_bucket in (None, 3):
+        kw_mb = dict(kw, max_bucket=max_bucket)
+        one_frame = {
+            (r.id_a, r.id_b): r.cosine
+            for r in embedding_near_dup_pairs_cross(df, df, **kw_mb).collect()
+            if r.id_a < r.id_b
+        }
+        self_mb = {
+            (r.id_a, r.id_b): r.cosine
+            for r in embedding_near_dup_pairs(df, **kw_mb).collect()
+        }
+        assert one_frame == self_mb and len(self_mb) >= 1, max_bucket
+    # the guard engages on this fixture: the near-dup cluster's 4
+    # vectors share a bucket
+    assert self_mb != self_pairs
 
 
 def test_embedding_cross_overlapping_id_spaces_never_conflate(spark):

@@ -288,8 +288,8 @@ def test_stream_near_dedup_banded_store_matches_batch_keepers(
 ):
     """VERDICT r9 #3: the band-partitioned store layout
     (store_buckets) must be a pure layout change — the banded drive's
-    keeper set equals the flat drive's (== the batch rule, pinned by
-    the sibling test), the bands dir is bucket-major
+    keeper set equals the batch rule (corpus minus every id_b of
+    near_dup_pairs at the same parameters), the bands dir is bucket-major
     (_bkt=K top level, one batch_id=N leaf per trigger inside, via
     dynamic partition overwrite), and the probe shape it enables is a
     direct-path read of the touched bucket subtrees only (pinned below
@@ -430,8 +430,9 @@ def test_stream_near_dedup_banded_probe_reads_touched_subtrees_only(
 def test_stream_near_dedup_embedding_banded_matches_batch_keepers(
     spark, sf_dir, tmp_path
 ):
-    """The embedding twin's banded layout: same keeper parity as the
-    flat drive at the same operating point."""
+    """The embedding twin's banded layout: the drained keeper set
+    equals the batch rule (corpus minus every id_b of
+    embedding_near_dup_pairs) at the same operating point."""
     from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
     from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
         embedding_near_dup_pairs,

@@ -275,6 +275,42 @@ def _as_double(vec: Column) -> Column:
     return vec.cast("array<double>")
 
 
+def _vec_rows(
+    df: DataFrame, id_col: str, vec_col: str, out_id: str, out_vec: str
+) -> DataFrame:
+    """(out_id, out_vec double-array) rows of an (id, vector) relation."""
+    return df.select(
+        F.col(id_col).alias(out_id), _as_double(F.col(vec_col)).alias(out_vec)
+    )
+
+
+def _not_self() -> Column:
+    """Same-id exclusion of the query-set kNNs: a corpus vector is never
+    its own neighbor. The corpus-join kNNs pass no predicate, because
+    equal ids on two distinct corpora are legitimate matches."""
+    return F.col("query_id") != F.col("neighbor_id")
+
+
+def _top_k(scored: DataFrame, qid: str, nid: str, k: int) -> DataFrame:
+    """The kNN family's one rank tail over duplicate-free (qid, nid,
+    _cos) rows: the ``k`` best per ``qid`` by cosine descending, ties on
+    ``nid``, through a row_number window partitioned by ``qid`` (each
+    partition holds one query's scores). A NULL cosine ranks last.
+    Returns (qid, nid, rank, cosine) with cosine rounded to 6 decimals
+    for cross-engine comparability."""
+    w = Window.partitionBy(qid).orderBy(F.desc("_cos"), F.asc(nid))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            qid,
+            nid,
+            F.col("rank").cast("long").alias("rank"),
+            F.round("_cos", 6).alias("cosine"),
+        )
+    )
+
+
 def cosine_knn_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -298,18 +334,14 @@ def cosine_knn_bruteforce(
     # at fixture scale — the per-query candidate volume is too small to
     # amortize the fatter plan (interleaved A/B table, OPTIMIZATION_r12)
     dim = None
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
+    q = _vec_rows(queries, id_col, vec_col, "query_id", "qv")
+    c = _vec_rows(corpus, id_col, vec_col, "neighbor_id", "cv")
     # per-side self-norms (bit-identical; cosine_with_norms): the
     # corpus norm is computed n times, not n x |q| times
     q_n = q.withColumn("_qn", _dot_d("qv", "qv", dim))
     c_n = c.withColumn("_cn", _dot_d("cv", "cv", dim))
     scored = (
-        c_n.join(F.broadcast(q_n), F.col("query_id") != F.col("neighbor_id"))
+        c_n.join(F.broadcast(q_n), _not_self())
         .select(
             "query_id",
             "neighbor_id",
@@ -318,19 +350,7 @@ def cosine_knn_bruteforce(
             ).alias("_cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("_cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("_cos", 6).alias("cosine"),
-        )
-    )
+    return _top_k(scored, "query_id", "neighbor_id", k)
 
 
 def sign_bucket(vec: Column, bits: int = 6, offset: int = 0) -> Column:
@@ -911,70 +931,24 @@ def cosine_knn_join(
     query-kNN task) transfers: measured 0.912 here (pinned by
     ``test_knn_join_recall_floor``). A left row whose buckets contain
     no right rows yields NO output rows — the honest answer under LSH;
-    raise ``tables`` for coverage. Duplicate candidates from
-    multi-table agreement collapse via a map-side-partial max before
-    the per-left-row rank window."""
+    raise ``tables`` for coverage.
+
+    This is ``cosine_knn_sign_lsh`` with ``left`` as the query set and
+    ``right`` as the corpus, on the same band rows (``_band_rows``),
+    collision scorer (``_collision_scores``) and rank tail (``_top_k``),
+    with two differences: neither side is broadcast (both are corpora;
+    the band join shuffles both on (band, sig)), and there is no
+    same-id exclusion (equal ids on two distinct corpora are legitimate
+    matches). ``max_bucket`` drops each side's band rows in buckets
+    holding more than ``max_bucket`` of that side's rows. Duplicate
+    candidates from multi-table agreement always collapse through a
+    map-side-partial max before the per-left-row rank window."""
     planes = lsh_hyperplanes(bits, tables, dim, nnz)
-    sig_udf = _hyperplane_sigs_udf(planes, dim)
-
-    def prep(corpus: DataFrame, out_id: str, out_vec: str):
-        # the side's self-norm is computed once per band row here,
-        # never per candidate pair (bit-identical; cosine_with_norms)
-        e = corpus.select(
-            F.col(id_col).alias(out_id), _as_double(F.col(vec_col)).alias(out_vec)
-        ).withColumn(
-            # HOF dot (dim not forwarded): the unrolled fast path wins
-            # this query standalone (2.55 → 2.22 s min-of-6) but LOSES
-            # in full-catalog context (bench 2.55 → 3.52 s) — the big
-            # generated methods recompile under codegen-cache pressure
-            # in a 118-query session and the per-sample win is smaller
-            # than the compile tax (unlike the IVF join, which nets
-            # 0.74× in-bench). OPTIMIZATION_r12.md, guide §1.3.
-            f"_{out_id}_n", _dot_d(out_vec, out_vec, None)
-        )
-        buckets = e.select(
-            out_id,
-            out_vec,
-            f"_{out_id}_n",
-            F.posexplode(sig_udf(F.col(out_vec))).alias("_t", "_b"),
-        )
-        if max_bucket is not None:
-            w = Window.partitionBy("_t", "_b")
-            buckets = (
-                buckets.withColumn("_bc", F.count(F.lit(1)).over(w))
-                .filter(F.col("_bc") <= max_bucket)
-                .drop("_bc")
-            )
-        return buckets
-
-    lb = prep(left, "left_id", "_lv")
-    rb = prep(right, "right_id", "_rv")
-    scored = (
-        lb.join(rb, ["_t", "_b"])
-        .select(
-            "left_id",
-            "right_id",
-            cosine_with_norms(
-                "_lv",
-                "_rv",
-                F.col("_left_id_n"),
-                F.col("_right_id_n"),
-            ).alias("_cos"),
-        )
-        .groupBy("left_id", "right_id")
-        .agg(F.max("_cos").alias("_cos"))
-    )
-    w = Window.partitionBy("left_id").orderBy(F.desc("_cos"), F.asc("right_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "left_id",
-            "right_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("_cos", 6).alias("cosine"),
-        )
-    )
+    sigs = _hyperplane_sigs_udf(planes, dim)(F.col(vec_col))
+    lb = _band_rows(left, id_col, vec_col, sigs, "left_id", max_bucket)
+    rb = _band_rows(right, id_col, vec_col, sigs, "right_id", max_bucket)
+    scored = _collision_scores(lb, rb, "left_id", "right_id")
+    return _top_k(scored, "left_id", "right_id", k)
 
 
 def cosine_knn_join_ivf(
@@ -1066,11 +1040,18 @@ def cosine_knn_join_ivf_probe(
     CONTINUOUS corpus alignment: index the reference corpus once,
     then every arriving left batch (a new crawl to label, documents
     to retrieval-augment) runs only this probe. ``cosine_knn_join_ivf``
-    is literally build + this. Same plan as the inline join from the
-    probe routing down (pinned bit-for-bit by
-    ``test_knn_join_ivf_probe_equals_inline``); the shared-list
-    duplicate collapse is unconditional, so the probe is correct for
-    any index regardless of its build-time replication.
+    is build + this (pinned bit-for-bit by
+    ``test_knn_join_ivf_probe_equals_inline``).
+
+    It is ``cosine_knn_ivf_probe`` with ``left`` as the query set, on
+    the same routing (``_ivf_route_probes``) and scoring
+    (``_ivf_score_probes``), with two differences: the routed probes
+    are NOT broadcast (the probe relation is corpus-sized, so the
+    list-id equi-join shuffles both sides and AQE splits the skew),
+    and there is no same-id exclusion (equal ids on two distinct
+    corpora are legitimate matches). The shared-list duplicate
+    collapse is unconditional, so the probe is correct for any index
+    regardless of its build-time replication.
 
     ``dim``: None (default) = auto — the unrolled-dot fast path for the
     candidate-pair stage engages iff the plan-time volume gate
@@ -1079,13 +1060,6 @@ def cosine_knn_join_ivf_probe(
     per-row guard keeps results bit-identical either way. ``n_lists``
     is an optional gate hint (the index geometry, when the caller
     knows it)."""
-    # self-norms per SIDE, not per pair: the pair join below scores
-    # |left|·replication·(nprobe/n_lists)·|right| candidates and the
-    # interpreted-HOF self-dots were ~2/3 of that stage's cost
-    # (cosine_with_norms docstring; bit-identical results). _qn is
-    # projected BELOW the centroid join — once per query row, not once
-    # per (query, centroid) fan-out row (r11; the join boundary keeps
-    # CollapseProject from inlining it upward).
     if dim is None:
         # r13 (VERDICT r12 #7): the engagement decision is derived from
         # plan-time inputs, not a fixture-tuned constant. The width
@@ -1106,55 +1080,18 @@ def cosine_knn_join_ivf_probe(
             )
             else None
         )
-    # The unroll engages ONLY in the candidate-pair stage below — the
-    # corpus×corpus volume where it wins — while the routing cosine and
-    # the per-side self-norms keep the HOF dot: their volumes
-    # (|left|·n_lists fan-out, one row per side) measured as losses,
-    # and every extra unrolled site is another codegen class whose
-    # compile/JIT weight taxes the rest of a many-query session
-    # (OPTIMIZATION_r13.md). Each site may pick either dot: results are
-    # bit-identical.
-    q = left.select(
-        F.col(id_col).alias("left_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("_qn", _dot_d("qv", "qv", None))
-    q_scored = q.join(F.broadcast(centroids)).select(
-        "left_id",
-        "qv",
-        "_qn",
-        F.col("_cid"),
-        cosine("qv", "_cv", None).alias("_ccos"),
-    )
-    wq = Window.partitionBy("left_id").orderBy(F.desc("_ccos"), F.asc("_cid"))
-    probes = (
-        q_scored.withColumn("_prk", F.row_number().over(wq))
-        .filter(F.col("_prk") <= nprobe)
-        .select("left_id", "qv", "_qn", F.col("_cid").alias("_list"))
-    )
-    postings_n = postings if "_cn" in postings.columns else postings.withColumn(
-        "_cn", _dot_d("cv", "cv", None)
-    )
-    scored = (
-        postings_n.join(probes, "_list")
-        .select(
-            "left_id",
-            F.col("neighbor_id").alias("right_id"),
-            cosine_with_norms(
-                "qv", "cv", F.col("_qn"), F.col("_cn"), dim
-            ).alias("_cos"),
-        )
-        .groupBy("left_id", "right_id")
-        .agg(F.max("_cos").alias("_cos"))
-    )
-    w = Window.partitionBy("left_id").orderBy(F.desc("_cos"), F.asc("right_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "left_id",
-            "right_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("_cos", 6).alias("cosine"),
-        )
+    # the unroll engages only in the candidate-pair stage, the
+    # corpus x corpus volume where it wins: routing and self-norms keep
+    # the HOF dot (their volumes measured as losses, and each unrolled
+    # site is another codegen class taxing a many-query session;
+    # OPTIMIZATION_r13.md). Results are bit-identical either way.
+    q = _vec_rows(left, id_col, vec_col, "query_id", "qv")
+    probes = _ivf_route_probes(centroids, q, nprobe)
+    return _ivf_score_probes(postings, probes, k, dim).select(
+        F.col("query_id").alias("left_id"),
+        F.col("neighbor_id").alias("right_id"),
+        "rank",
+        "cosine",
     )
 
 
@@ -1481,22 +1418,23 @@ def cosine_knn_ivf_probe(
     vec_col: str = "embedding",
     k: int = 3,
     nprobe: int = 4,
-    replication: int = 2,
 ) -> DataFrame:
     """The query half of ``cosine_knn_ivf`` over a (typically
     persisted) ``build_ivf_index`` result: probe each query's
-    ``nprobe`` nearest centroids' lists, exact-cosine rank, top-k.
-    Per run this touches O(|queries| · n_lists) centroid math (the
-    centroid relation is broadcast) plus the probed fraction of the
-    postings — the corpus itself is never re-assigned. The shared-list
-    duplicate collapse is always planned, so the probe is correct for
-    any index regardless of its build-time replication (``replication``
-    is retained for signature compatibility; it no longer gates
-    anything)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
+    ``nprobe`` nearest centroids' lists, exact-cosine rank, top-k,
+    returning (query_id, neighbor_id, rank, cosine). Per run this
+    touches O(|queries| · n_lists) centroid math (the centroid
+    relation is broadcast) plus the probed fraction of the postings —
+    the corpus itself is never re-assigned. The routed probes are
+    broadcast (the query set is small), a vector is never its own
+    neighbor (same-id exclusion), and the shared-list duplicate
+    collapse is unconditional, so the probe is correct for any index
+    regardless of its build-time replication."""
+    q = _vec_rows(queries, id_col, vec_col, "query_id", "qv")
+    probes = _ivf_route_probes(centroids, q, nprobe)
+    return _ivf_score_probes(
+        postings, F.broadcast(probes), k, pair_pred=_not_self()
     )
-    return _ivf_probe_tail(centroids, postings, q, k, nprobe)
 
 
 def write_ivf_index(
@@ -1743,11 +1681,8 @@ def cosine_knn_ivf_probe_dir(
     from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import _hadoop_fs
 
     c = spark.read.parquet(centroids_dir)
-    dim = None  # query-probe volume is small; unrolled dot loses here
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    probes = _ivf_route_probes(c, q, nprobe, dim).persist()
+    q = _vec_rows(queries, id_col, vec_col, "query_id", "qv")
+    probes = _ivf_route_probes(c, q, nprobe).persist()
     try:
         lists = [r[0] for r in probes.select("_list").distinct().collect()]
         e = read_partition_subtrees(spark, postings_dir, "_list", lists)
@@ -1792,9 +1727,11 @@ def cosine_knn_ivf_probe_dir(
                     "neighbor_id long, cv array<double>, _cn double, "
                     "_list long",
                 )
-            empty = _ivf_score_probes(e, probes, k, dim)
+            empty = _ivf_score_probes(e, probes, k)
             return spark.createDataFrame([], empty.schema)
-        out = _ivf_score_probes(e, probes, k, dim)
+        out = _ivf_score_probes(
+            e, F.broadcast(probes), k, pair_pred=_not_self()
+        )
         # materialize before unpersisting the routed probes (they feed
         # both the collect above and the scoring join)
         out = out.localCheckpoint(eager=True)
@@ -1878,41 +1815,24 @@ def cosine_knn_ivf(
         coarse_assign,
         probe_supers,
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    return _ivf_probe_tail(c, e, q, k, nprobe)
+    return cosine_knn_ivf_probe(c, e, queries, id_col, vec_col, k, nprobe)
 
 
-def _ivf_probe_tail(
-    c: DataFrame,
-    e: DataFrame,
-    q: DataFrame,
-    k: int,
-    nprobe: int,
-    dim: int | None = None,
-) -> DataFrame:
-    """Shared probe tail of ``cosine_knn_ivf`` / ``cosine_knn_ivf_probe``:
-    c = centroids (_cid, _cv), e = postings (neighbor_id, cv, _list),
-    q = (query_id, qv)."""
-    return _ivf_score_probes(e, _ivf_route_probes(c, q, nprobe, dim), k, dim)
-
-
-def _ivf_route_probes(
-    c: DataFrame, q: DataFrame, nprobe: int, dim: int | None = None
-) -> DataFrame:
-    """Probe routing: each query's ``nprobe`` nearest centroids →
+def _ivf_route_probes(c: DataFrame, q: DataFrame, nprobe: int) -> DataFrame:
+    """Probe routing of every IVF kNN: each (query_id, qv) row's
+    ``nprobe`` nearest centroids of ``c`` (_cid, _cv; broadcast) →
     (query_id, qv, _qn, _list) rows. _qn is projected BELOW the
     centroid join so it evaluates once per query row, not once per
     (query, centroid) fan-out row (r11; the join boundary keeps
-    CollapseProject from inlining it upward)."""
-    q = q.withColumn("_qn", _dot_d("qv", "qv", dim))
+    CollapseProject from inlining it upward). Both dots are HOF: the
+    unrolled dot measured as a loss at routing volumes."""
+    q = q.withColumn("_qn", _dot_d("qv", "qv", None))
     q_scored = q.join(F.broadcast(c)).select(
         "query_id",
         "qv",
         "_qn",
         F.col("_cid"),
-        cosine("qv", "_cv", dim).alias("_ccos"),
+        cosine("qv", "_cv", None).alias("_ccos"),
     )
     wq = Window.partitionBy("query_id").orderBy(F.desc("_ccos"), F.asc("_cid"))
     return (
@@ -1923,52 +1843,50 @@ def _ivf_route_probes(
 
 
 def _ivf_score_probes(
-    e: DataFrame, probes: DataFrame, k: int, dim: int | None = None
+    e: DataFrame,
+    probes: DataFrame,
+    k: int,
+    dim: int | None = None,
+    pair_pred: Column | None = None,
 ) -> DataFrame:
-    """Score routed probes against the posting lists and take top-k.
-    Per-side self-norms ahead of the candidate join (bit-identical;
-    see cosine_with_norms) — the posting side's norm is computed once
-    per posting row (or read from a stored _cn) instead of once per
-    (query, posting) candidate."""
+    """Score routed probes against the posting lists ``e`` (neighbor_id,
+    cv, _list, optional stored _cn) and take the top-k per query:
+    (query_id, neighbor_id, rank, cosine). The caller passes ``probes``
+    already wrapped in ``F.broadcast`` or not, and ``pair_pred`` (the
+    same-id exclusion, or None) to apply right after the list join.
+    Per-side self-norms ahead of the candidate join (bit-identical; see
+    cosine_with_norms): the posting norm is computed once per posting
+    row (or read from a stored _cn) with the HOF dot; ``dim`` engages
+    the unrolled dot for the pair cosine only.
+
+    A (query, neighbor) pair sharing several probed lists appears once
+    per shared list with an IDENTICAL cosine, so a partial-aggregating
+    max collapses it (one exchange, map-side combine) rather than a
+    distinct over the wider pre-cosine candidate set. The collapse is
+    UNCONDITIONAL: a caller cannot know a (possibly persisted) index's
+    build-time replication, and gating on a caller-supplied value once
+    let a mismatched caller fill top-k ranks with duplicate neighbors.
+    For a replication=1 index it is a semantic no-op whose exchange
+    partial-aggregates ahead of the rank window's shuffle on the same
+    leading key."""
     e_n = e if "_cn" in e.columns else e.withColumn(
-        "_cn", _dot_d("cv", "cv", dim)
+        "_cn", _dot_d("cv", "cv", None)
     )
+    pairs = e_n.join(probes, "_list")
+    if pair_pred is not None:
+        pairs = pairs.filter(pair_pred)
     scored = (
-        e_n.join(F.broadcast(probes), "_list")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
+        pairs.select(
             "query_id",
             "neighbor_id",
             cosine_with_norms(
                 "qv", "cv", F.col("_qn"), F.col("_cn"), dim
             ).alias("_cos"),
         )
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.max("_cos").alias("_cos"))
     )
-    # a (query, neighbor) pair sharing several probed lists appears
-    # once per shared list with an IDENTICAL cosine — collapse with a
-    # partial-aggregating max (one exchange, map-side combine) rather
-    # than distinct-ing the wider pre-cosine candidate set. Applied
-    # UNCONDITIONALLY: the probe caller's `replication` cannot be
-    # trusted to match the (possibly persisted) index's build-time
-    # replication, and gating on it made a mismatched caller silently
-    # fill top-k ranks with duplicate neighbors. For a replication=1
-    # index the aggregate is a semantic no-op (every pair is unique);
-    # its exchange partial-aggregates map-side ahead of the rank
-    # window's shuffle on the same leading key.
-    scored = scored.groupBy("query_id", "neighbor_id").agg(
-        F.max("_cos").alias("_cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("_cos", 6).alias("cosine"),
-        )
-    )
+    return _top_k(scored, "query_id", "neighbor_id", k)
 
 
 def lsh_hyperplanes(
@@ -2150,6 +2068,90 @@ def _hyperplane_sigs_udf(
     return sigs
 
 
+def _band_rows(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    sigs: Column,
+    out_id: str,
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """Band rows of the banded kNNs: (out_id, _{out_id}_v double
+    vector, _{out_id}_n self-norm, band, sig), one row per table.
+    ``sigs`` is the caller's per-row signature array over ``vec_col``
+    (one string per table). It is evaluated in its OWN projection
+    (inlined into the Generate input it was re-evaluated through the
+    generator's consume path, r6) and exploded by ``posexplode_outer``, the posexplode analog of
+    ``core.explode_nonempty``: on this literal-sized, never-empty
+    array it is bit-identical to ``posexplode``, but it skips
+    InferFiltersFromGenerate's ``size(sigs) > 0`` filter, which would
+    evaluate the signature array a second time (SCALE.md, r6 caveat).
+    When ``max_bucket`` is given, rows in a (band, sig) bucket holding
+    more than ``max_bucket`` of this side's rows are dropped. The
+    self-norm is the HOF dot: the unrolled dot measured a loss at these
+    candidate volumes (OPTIMIZATION_r12)."""
+    v, n = f"_{out_id}_v", f"_{out_id}_n"
+    rows = (
+        df.select(
+            F.col(id_col).alias(out_id),
+            _as_double(F.col(vec_col)).alias(v),
+            sigs.alias("_sigarr"),
+        )
+        .withColumn(n, _dot_d(v, v, None))
+        .select(out_id, v, n, F.posexplode_outer("_sigarr").alias("band", "sig"))
+    )
+    if max_bucket is not None:
+        w = Window.partitionBy("band", "sig")
+        rows = (
+            rows.withColumn("_bc", F.count(F.lit(1)).over(w))
+            .filter(F.col("_bc") <= max_bucket)
+            .drop("_bc")
+        )
+    return rows
+
+
+def _collision_scores(
+    a: DataFrame,
+    b: DataFrame,
+    qid: str,
+    nid: str,
+    pair_pred: Column | None = None,
+) -> DataFrame:
+    """(qid, nid, _cos) for every pair of ``_band_rows`` rows that
+    collide in any table: the (band, sig) equi-join of ``a`` and ``b``
+    (one side is ``qid``'s rows, the other ``nid``'s), ``pair_pred``
+    applied right after it, then the max of ``cosine_with_norms`` per
+    pair. A pair colliding in several tables has bit-identical scores,
+    so the partial-aggregating max collapses the duplicates exactly,
+    and always, before any rank window sees them. The caller wraps
+    the side to broadcast in ``F.broadcast``."""
+    pairs = a.join(b, ["band", "sig"])
+    if pair_pred is not None:
+        pairs = pairs.filter(pair_pred)
+    cos = cosine_with_norms(
+        f"_{qid}_v", f"_{nid}_v", F.col(f"_{qid}_n"), F.col(f"_{nid}_n")
+    )
+    return pairs.groupBy(qid, nid).agg(F.max(cos).alias("_cos"))
+
+
+def _banded_knn(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    sigs: Column,
+    k: int,
+) -> DataFrame:
+    """Query-set banded kNN: corpus band rows join the broadcast query
+    band rows, same-id pairs excluded, collisions scored and ranked."""
+    c = _band_rows(corpus, id_col, vec_col, sigs, "neighbor_id")
+    q = _band_rows(queries, id_col, vec_col, sigs, "query_id")
+    scored = _collision_scores(
+        c, F.broadcast(q), "query_id", "neighbor_id", _not_self()
+    )
+    return _top_k(scored, "query_id", "neighbor_id", k)
+
+
 def cosine_knn_sign_lsh(
     corpus: DataFrame,
     queries: DataFrame,
@@ -2177,61 +2179,17 @@ def cosine_knn_sign_lsh(
 
     Plan shape: all ``tables`` sig strings are computed in ONE
     Arrow-batched projection (``_hyperplane_sigs_udf`` — see its
-    docstring for the measured 10× JVM-expression dead ends), then
-    posexploded into (band, sig) rows. Collisions in several tables
-    are deduplicated by a (query, neighbor) max-agg BEFORE ranking, so
-    duplicates never reach the rank window.
+    docstring for the measured 10× JVM-expression dead ends), which
+    runs once per side (``_band_rows``). The query band rows are
+    broadcast, a vector is never its own neighbor (same-id
+    exclusion), and collisions in several tables always collapse
+    through a (query, neighbor) max-agg BEFORE ranking, so duplicates
+    never reach the rank window. Returns (query_id, neighbor_id, rank,
+    cosine).
     """
     planes = lsh_hyperplanes(bits, tables, dim, nnz)
-    sig_udf = _hyperplane_sigs_udf(planes, dim)
-
-    def banded(df, out_id):
-        # the side's self-norm rides the band rows so the collision
-        # scoring pays one HOF dot per candidate (cosine_with_norms)
-        sigs = df.select(
-            F.col(id_col).alias(out_id),
-            _as_double(F.col(vec_col)).alias(f"_{out_id}_v"),
-            sig_udf(F.col(vec_col)).alias("_sigarr"),
-        ).withColumn(
-            # HOF dot (dim not forwarded): unrolled loses at this
-            # query-kNN candidate volume (A/B, OPTIMIZATION_r12)
-            f"_{out_id}_n", _dot_d(f"_{out_id}_v", f"_{out_id}_v", None)
-        )
-        return sigs.select(
-            out_id,
-            f"_{out_id}_v",
-            f"_{out_id}_n",
-            F.posexplode("_sigarr").alias("band", "sig"),
-        )
-
-    q = banded(queries, "query_id")
-    c = banded(corpus, "neighbor_id")
-    scored = (
-        c.join(F.broadcast(q), ["band", "sig"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(
-            F.max(
-                cosine_with_norms(
-                    "_query_id_v",
-                    "_neighbor_id_v",
-                    F.col("_query_id_n"),
-                    F.col("_neighbor_id_n"),
-                )
-            ).alias("_cos")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("_cos", 6).alias("cosine"),
-        )
-    )
+    sigs = _hyperplane_sigs_udf(planes, dim)(F.col(vec_col))
+    return _banded_knn(corpus, queries, id_col, vec_col, sigs, k)
 
 
 # Knuth/Fibonacci-style multipliers for the deterministic ordinal-pair
@@ -2355,64 +2313,12 @@ def cosine_knn_wta(
     shuffle), but the comparison bits use ALL coordinate information
     available to the schedule instead of the first tables*bits axis
     signs — and they are exact, so Spark and any oracle agree on bucket
-    membership bit-for-bit.
+    membership bit-for-bit. Same contract as ``cosine_knn_sign_lsh``:
+    broadcast query band rows, same-id exclusion, unconditional
+    multi-table duplicate collapse before the rank window.
     """
-    pr = wta_pairs(bits, tables, dim)
-    sig_arr = F.expr(wta_sigs_expr(vec_col, pr, dim))
-
-    def banded(df, out_id):
-        # Sigs live in their OWN projection (r6 finding: inlining the
-        # comparison trees into the Generate input re-evaluated them
-        # through the generator's consume path); posexplode_outer is
-        # the posexplode analog of core.explode_nonempty — on this
-        # literal-sized, never-empty array it is bit-identical to
-        # posexplode but skips InferFiltersFromGenerate's size() filter,
-        # which CollapseProject would otherwise feed the whole sig
-        # expression a second time.
-        sigs = df.select(
-            F.col(id_col).alias(out_id),
-            _as_double(F.col(vec_col)).alias(f"_{out_id}_v"),
-            sig_arr.alias("_sigarr"),
-        ).withColumn(
-            # HOF dot (dim not forwarded): unrolled loses at this
-            # query-kNN candidate volume (A/B, OPTIMIZATION_r12)
-            f"_{out_id}_n", _dot_d(f"_{out_id}_v", f"_{out_id}_v", None)
-        )
-        return sigs.select(
-            out_id,
-            f"_{out_id}_v",
-            f"_{out_id}_n",
-            F.posexplode_outer("_sigarr").alias("band", "sig"),
-        )
-
-    q = banded(queries, "query_id")
-    c = banded(corpus, "neighbor_id")
-    scored = (
-        c.join(F.broadcast(q), ["band", "sig"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(
-            F.max(
-                cosine_with_norms(
-                    "_query_id_v",
-                    "_neighbor_id_v",
-                    F.col("_query_id_n"),
-                    F.col("_neighbor_id_n"),
-                )
-            ).alias("_cos")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("_cos", 6).alias("cosine"),
-        )
-    )
+    sigs = F.expr(wta_sigs_expr(vec_col, wta_pairs(bits, tables, dim), dim))
+    return _banded_knn(corpus, queries, id_col, vec_col, sigs, k)
 
 
 def quantize_embeddings(

@@ -71,7 +71,6 @@ from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import (
 from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
     cosine_knn_bruteforce,
     cosine_knn_ivf,
-    cosine_knn_ivf_probe,
     cosine_knn_join,
     cosine_knn_join_ivf,
     ivf_assignments,
@@ -4949,6 +4948,13 @@ _GATE_FRONT = {
     "training_pipeline": training_pipeline_q,
     "stream_decontam_docs": stream_decontam_docs,
     "stream_sessionize_stateful_demo": stream_sessionize_stateful_demo,
+    # ---- plan changed behind the window: the banded kNNs share one
+    # band-row function whose posexplode_outer runs the signature UDF
+    # once per side (knn_lsh had run it twice per side), and the LSH
+    # kNN join collapses duplicates in the band-join stage's partial
+    # aggregate. Results hash-identical. ----
+    "knn_lsh": knn_lsh_q,
+    "knn_join_emb": knn_join_emb_q,
 }
 
 
@@ -4969,10 +4975,11 @@ _SENTINELS = {}
 
 _PROVEN = {
     # ---- window boundary: slots above re-attest in r12. ----
-    # The r13 drain head, pre-declared, is knn_lsh, embedding_outliers
-    # and multimodal_decode (displaced from the r12 window tail by the
-    # three optimization-reshaped plans re-entering the gate front)
-    # plus the 21 remaining r10-attested
+    # The r13 drain head, pre-declared, is embedding_outliers and
+    # multimodal_decode (displaced from the r12 window tail by the
+    # three optimization-reshaped plans re-entering the gate front;
+    # knn_lsh, displaced with them, re-entered the gate front with its
+    # band-row plan change) plus the 21 remaining r10-attested
     # rows below (oldest-first), then the oldest r11
     # rows. RULE (rotation invariant): any entry whose PLAN changes
     # behind the window — an operator edit that alters the physical
@@ -4981,7 +4988,6 @@ _PROVEN = {
     # drain; with 118 queries in a 50-slot window the steady-state
     # staleness floor is 2 rounds, and it holds iff each round drains
     # its pre-declared head. ----
-    "knn_lsh": knn_lsh_q,
     "embedding_outliers": embedding_outliers_q,
     "multimodal_decode": multimodal_decode_q,
     "multimodal_resize": multimodal_resize_q,
@@ -5056,7 +5062,6 @@ _PROVEN = {
     # untouched in r13 — rotated behind the window, newest attestation
     # last. ----
     "dedup_simhash64_pairs": dedup_simhash64_pairs_q,
-    "knn_join_emb": knn_join_emb_q,
     "event_top_users_sketch": event_top_users_sketch,
     "stream_sessionize_native": stream_sessionize_native,
     "dedup_simhash": dedup_simhash_q,

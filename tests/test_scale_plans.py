@@ -270,6 +270,21 @@ def test_token_by_dimension_single_kernel_eval(spark, sf_dir):
         assert not hits, f"{name}: inferred generator filter returned: {hits}"
 
 
+def test_banded_knn_signature_udf_runs_once_per_side(spark, sf_dir):
+    """The hyperplane-signature pandas UDF of the banded kNNs must run
+    once per side: exactly 2 ArrowEvalPython nodes in the executed
+    plan of knn_lsh (query side + corpus side) and of knn_join_emb
+    (left + right). An inner ``posexplode`` of the signature array lets
+    InferFiltersFromGenerate add a ``size(sigs) > 0`` Filter below the
+    Generate, which evaluates the UDF a second time per side (4 nodes;
+    the r6 caveat in SCALE.md). ``posexplode_outer`` avoids it."""
+    from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import QUERIES
+
+    for name in ("knn_lsh", "knn_join_emb"):
+        plan = plan_of(QUERIES[name](spark, sf_dir))
+        assert plan.count("ArrowEvalPython") == 2, name
+
+
 def test_ann_recall_floors(spark, sf_dir):
     """ANN quality regression: recall@3 vs the exact brute-force top-3.
     Everything is hash-deterministic, so these floors are exact numbers

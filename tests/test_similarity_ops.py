@@ -458,7 +458,6 @@ def test_ivf_index_probe_equals_inline_knn(spark, tmp_path, sf_dir):
                 queries,
                 k=3,
                 nprobe=8,
-                replication=2,
             ).collect()
         )
         want = sorted(
@@ -513,12 +512,12 @@ def test_knn_join_ivf_full_probe_is_exact(spark, sf_dir):
 
 
 def test_ivf_probe_collapse_is_unconditional(spark, tmp_path, sf_dir):
-    """ADVICE r9 #3: probing a replication=2 index while passing
-    replication=1 to cosine_knn_ivf_probe used to skip the shared-list
-    duplicate collapse and silently fill top-k ranks with the same
-    neighbor twice. The collapse is now unconditional: the mismatched
-    call must return the same neighbors as the honest one, with no
-    (query, neighbor) pair occupying two ranks."""
+    """ADVICE r9 #3: the probe once took a ``replication`` argument
+    that gated the shared-list duplicate collapse, so a caller passing
+    a value below the index's build-time replication silently filled
+    top-k ranks with the same neighbor twice. The collapse is
+    unconditional and the argument is gone: probing a replication=2
+    index must put no (query, neighbor) pair in two ranks."""
     from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
     from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
         build_ivf_index,
@@ -528,11 +527,8 @@ def test_ivf_probe_collapse_is_unconditional(spark, tmp_path, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     c, p = build_ivf_index(emb, n_lists=24, replication=2)
-    kw = dict(k=3, nprobe=8)
-    lied = cosine_knn_ivf_probe(c, p, queries, replication=1, **kw).collect()
-    honest = cosine_knn_ivf_probe(c, p, queries, replication=2, **kw).collect()
-    assert sorted(map(tuple, lied)) == sorted(map(tuple, honest))
-    pairs = [(r.query_id, r.neighbor_id) for r in lied]
+    got = cosine_knn_ivf_probe(c, p, queries, k=3, nprobe=8).collect()
+    pairs = [(r.query_id, r.neighbor_id) for r in got]
     assert len(pairs) == len(set(pairs)) == 30
 
 
@@ -544,6 +540,7 @@ def test_knn_join_ivf_probe_equals_inline(spark, tmp_path, sf_dir):
     from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
     from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
         build_ivf_index,
+        cosine_knn_ivf_probe,
         cosine_knn_join_ivf,
         cosine_knn_join_ivf_probe,
     )
@@ -569,6 +566,42 @@ def test_knn_join_ivf_probe_equals_inline(spark, tmp_path, sf_dir):
         ).collect()
     )
     assert got == want and len(got) == 750
+    # the join probe is the query probe with left as the query set: the
+    # id sets are disjoint, so the query probe's same-id exclusion never
+    # fires and the rows match once the columns are renamed
+    as_queries = sorted(
+        tuple(r)
+        for r in cosine_knn_ivf_probe(
+            spark.read.parquet(cdir), spark.read.parquet(pdir), left,
+            k=3, nprobe=8,
+        ).collect()
+    )
+    assert as_queries == got
+
+
+def test_knn_join_equals_sign_lsh_with_left_as_queries(spark, sf_dir):
+    """The LSH kNN join is the sign-LSH query kNN with the left corpus
+    as the query set and the right as the corpus: same hyperplane
+    schedule, band rows, collision scoring and rank tail. With disjoint
+    id sets (even left, odd right) the query kNN's same-id exclusion
+    never fires, so without ``max_bucket`` the rows are equal."""
+    from big_data_analysis_of_twitter_emoji_usage_spark.core import load_table
+    from big_data_analysis_of_twitter_emoji_usage_spark.operators.similarity import (
+        cosine_knn_join,
+        cosine_knn_sign_lsh,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    left = emb.filter(F.col("vec_id") % 2 == 0)
+    right = emb.filter(F.col("vec_id") % 2 == 1)
+    got = sorted(
+        tuple(r) for r in cosine_knn_join(left, right, bits=4, tables=18).collect()
+    )
+    want = sorted(
+        tuple(r)
+        for r in cosine_knn_sign_lsh(right, left, bits=4, tables=18).collect()
+    )
+    assert got == want and len(got) > 0
 
 
 def test_knn_ivf_probe_dir_equals_probe(spark, tmp_path, sf_dir):

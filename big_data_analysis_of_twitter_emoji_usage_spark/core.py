@@ -169,12 +169,62 @@ def pin_session_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def read_parquet_schema(spark: SparkSession, sf_dir: str, name: str):
-    """Schema of a fixture table, for streaming-source declaration.
-    Pins session confs first — probing events.parquet on a bare session
-    otherwise dies with PARQUET_TYPE_ILLEGAL before any query runs."""
+# Session confs that change what parquet schema inference returns for
+# the same files: nanos as bigint, un-adjusted micros as NTZ, binary as
+# string, INT96 as timestamp, case-sensitive and merged field resolution.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (path, conf values) -> (file statuses, schema): one entry per path, so
+# a table rewritten in place replaces its entry instead of adding one.
+# Each entry is stored whole; two threads missing at once both infer.
+_PARQUET_SCHEMA_CACHE: dict[tuple, tuple] = {}
+
+
+def _file_statuses(fs, status) -> list[tuple]:
+    if not status.isDirectory():
+        return [(status.getPath().toString(), status.getLen(), status.getModificationTime())]
+    return [f for s in fs.listStatus(status.getPath()) for f in _file_statuses(fs, s)]
+
+
+def parquet_schema(spark: SparkSession, path: str):
+    """The schema ``spark.read.parquet(path)`` infers, memoized.
+
+    Inference runs a Spark job that reads the footers; the memo skips it
+    while the files under ``path`` (each one's length and modification
+    time, as the Hadoop FS reports them) and the inference-affecting
+    confs are unchanged. Pins session confs first — probing
+    events.parquet on a bare session otherwise dies with
+    PARQUET_TYPE_ILLEGAL before any query runs. The path is expanded
+    with ``globStatus``, as the reader expands it; a path matching
+    nothing is never memoized and fails as a plain read does. Callers
+    must not mutate the returned schema."""
+    from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import _hadoop_fs
+
     pin_session_confs(spark)
-    return spark.read.parquet(table_path(sf_dir, name)).schema
+    fs, hpath = _hadoop_fs(spark, path)
+    matched = fs.globStatus(hpath)
+    if not matched:
+        return spark.read.parquet(path).schema
+    files = tuple(sorted(f for s in matched for f in _file_statuses(fs, s)))
+    key = (path, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    cached = _PARQUET_SCHEMA_CACHE.get(key)
+    if cached is not None and cached[0] == files:
+        return cached[1]
+    schema = spark.read.parquet(path).schema
+    _PARQUET_SCHEMA_CACHE[key] = (files, schema)
+    return schema
+
+
+def read_parquet_schema(spark: SparkSession, sf_dir: str, name: str):
+    """Schema of a fixture table, for streaming-source declaration."""
+    return parquet_schema(spark, table_path(sf_dir, name))
 
 
 def spread(df, min_partitions: int | None = None):
@@ -239,8 +289,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, spread_scan: bool = 
     dims): repartitioning a table that is about to be collected into a
     broadcast relation is a pure-waste Exchange in the plan.
     """
-    pin_session_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     return spread(df) if spread_scan else df
 
 
@@ -301,7 +351,8 @@ def spread_stream(stream, spark: SparkSession, sf_dir: str, name: str):
     addBatch was one 3.2 s single-task job vs ~0.35 s for the identical
     32-task batch plan. The decision is delegated to the SAME probe the
     batch path uses (``_scan_partitions`` on a batch read of the same
-    path — memoized, no Spark job), so stream and batch twins spread
+    path with its ``parquet_schema`` — both memoized, no Spark job once
+    warm), so stream and batch twins spread
     under exactly the same condition: on a real deployment the input
     splits past the session's parallelism and this is a no-op; it only
     ever fires when the table is smaller than cores × split size,
@@ -318,7 +369,8 @@ def spread_stream(stream, spark: SparkSession, sf_dir: str, name: str):
     aggregations all measured small losses."""
     sc = spark.sparkContext
     target = sc.defaultParallelism
-    batch_probe = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    batch_probe = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if _scan_partitions(batch_probe) < target:
         return stream.repartition(target)
     return stream

@@ -30,6 +30,7 @@ from big_data_analysis_of_twitter_emoji_usage_spark.core import (
     load_events_stream,
     load_table,
     load_table_stream,
+    parquet_schema,
     table_path,
 )
 from big_data_analysis_of_twitter_emoji_usage_spark.functions.text import WORD_KEEP, tokenize_words
@@ -3106,7 +3107,7 @@ def stream_dedup_near_docs(spark, sf):
     import tempfile
 
     src_dir = _ordered_docs_stream_dir(sf)
-    schema = spark.read.parquet(src_dir).schema
+    schema = parquet_schema(spark, src_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -3193,7 +3194,7 @@ def stream_dedup_hot_band(spark, sf):
     import tempfile
 
     src_dir = _hot_band_docs_stream_dir(sf)
-    schema = spark.read.parquet(src_dir).schema
+    schema = parquet_schema(spark, src_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -3240,7 +3241,7 @@ def stream_dedup_near_emb(spark, sf):
     import tempfile
 
     src_dir = _ordered_embeddings_stream_dir(sf)
-    schema = spark.read.parquet(src_dir).schema
+    schema = parquet_schema(spark, src_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -3289,7 +3290,8 @@ def stream_knn_ivf(spark, sf):
     parts = sorted(
         p for p in _os.listdir(src_dir) if p.endswith(".parquet")
     )
-    seed = spark.read.parquet(_os.path.join(src_dir, parts[0]))
+    schema = parquet_schema(spark, src_dir)
+    seed = spark.read.schema(schema).parquet(_os.path.join(src_dir, parts[0]))
     scratch = tempfile.mkdtemp(prefix="spark_graft_stream_ivf_")
     atexit.register(shutil.rmtree, scratch, ignore_errors=True)
     cdir = _os.path.join(scratch, "cent")
@@ -3297,7 +3299,6 @@ def stream_knn_ivf(spark, sf):
         seed, select_ivf_centroids(seed, "vec_id", _KNN_IVF_LISTS)
     )
     c.write.parquet(cdir)
-    schema = spark.read.parquet(src_dir).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -73,7 +73,11 @@ def stream_tweets(
 
 
 def read_partition_subtrees(
-    spark: SparkSession, root: str, col: str, keys: list
+    spark: SparkSession,
+    root: str,
+    col: str,
+    keys: list,
+    schema: T.StructType | None = None,
 ) -> DataFrame | None:
     """Direct-path read of ONLY the requested partition subtrees of a
     partition-major parquet layout (``<root>/<col>=<key>/...``) — the
@@ -91,7 +95,9 @@ def read_partition_subtrees(
     Existence is checked per key through the Hadoop FS (≤ ``len(keys)``
     RPCs — bound your key set before calling), because a path that
     matches nothing fails the read. Returns None when no requested
-    subtree exists."""
+    subtree exists. A caller that wrote the store passes its
+    ``schema`` (partition columns included) to skip the footer-reading
+    inference job."""
     from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import _hadoop_fs
 
     # normalize like every sibling helper (roll/consolidate/_marker_io):
@@ -107,7 +113,10 @@ def read_partition_subtrees(
     ]
     if not paths:
         return None
-    return spark.read.option("basePath", root).parquet(*paths)
+    reader = spark.read.option("basePath", root)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)
 
 
 def union_partition_tiers(

@@ -478,8 +478,7 @@ def roll_recent_into_store(
     smaller id are checkpoint-COMMITTED the moment a later batch runs
     — a committed batch is never replayed, so rolling only those keeps
     the original "committed batches only" contract with no new crash
-    window, while the in-flight batch stays in the recent tail (which
-    also keeps the tail non-empty for the probes' schema inference).
+    window, while the in-flight batch stays in the recent tail.
     ``shuffle=False`` skips the per-bucket repartition — same contract
     as ``consolidate_bucket_history``: wide-row payload stores
     (shingle/vector arrays) roll without a spill-prone exchange, at

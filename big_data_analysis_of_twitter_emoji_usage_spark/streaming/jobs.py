@@ -23,6 +23,7 @@ from operator import and_
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from big_data_analysis_of_twitter_emoji_usage_spark.sources.readers import (
     read_partition_subtrees,
@@ -738,7 +739,7 @@ def _enforce_store_layout(
 
 
 def _read_committed_recent(
-    spark: SparkSession, root: str, bid: int
+    spark: SparkSession, root: str, bid: int, schema: T.StructType | None = None
 ) -> DataFrame | None:
     """Direct-path read of a two-tier store's COMMITTED recent batch
     dirs (``<root>/batch_id=K`` for K < ``bid``). The in-flight batch's
@@ -748,7 +749,8 @@ def _read_committed_recent(
     immune to a concurrent landing's in-flight commit: only dirs whose
     batches are checkpoint-committed enter the file index (one
     listStatus, no per-dir existence RPCs). Returns None when no
-    committed dir exists yet (first trigger, or a fully-rolled tail)."""
+    committed dir exists yet (first trigger, or a fully-rolled tail).
+    ``schema`` (``batch_id`` included) skips the inference job."""
     root = root.rstrip("/")
     fs, hroot = _hadoop_fs(spark, root)
     if not fs.exists(hroot):
@@ -762,7 +764,10 @@ def _read_committed_recent(
     ]
     if not dirs:
         return None
-    return spark.read.option("basePath", root).parquet(*dirs)
+    reader = spark.read.option("basePath", root)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*dirs)
 
 
 def _run_two_tier_maintenance(
@@ -1000,12 +1005,24 @@ def _stream_banded_dedup(
         hist: str, col: str, touched: list, cur: DataFrame, bid: int
     ) -> DataFrame:
         # history subtrees of the touched buckets ∪ committed recent
-        # dirs ∪ the in-flight batch's persisted rows, as of ``bid``
-        committed = _read_committed_recent(spark, hist + "_recent", bid)
+        # dirs ∪ the in-flight batch's persisted rows, as of ``bid``.
+        # Every store file holds rows of ``cur``'s schema, so the reads
+        # declare it: recent dirs add ``batch_id``, history moves
+        # ``col`` into the dir names; both as partition inference types
+        # them (int).
+        fields = cur.schema.fields
+        batch = T.StructField("batch_id", T.IntegerType())
+        committed = _read_committed_recent(
+            spark, hist + "_recent", bid, T.StructType([*fields, batch])
+        )
+        history_schema = T.StructType(
+            [f for f in fields if f.name != col]
+            + [T.StructField(col, T.IntegerType()), batch]
+        )
         cur = cur.withColumn("batch_id", F.lit(bid))
         recent = cur if committed is None else committed.unionByName(cur)
         return union_partition_tiers(
-            read_partition_subtrees(spark, hist, col, touched),
+            read_partition_subtrees(spark, hist, col, touched, history_schema),
             recent.filter(F.col(col).isin(touched)),
             col,
         ).filter(F.col("batch_id") <= F.lit(bid))

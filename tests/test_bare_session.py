@@ -8,8 +8,9 @@ These tests reproduce that exact failure mode: strip the result-affecting
 dynamic confs from the live session (equivalent to a bare
 ``SparkSession.builder.getOrCreate()`` — same JVM, same missing confs) and
 assert every events-touching query class still runs, because the engine's
-read paths (core.load_table / core.read_parquet_schema) re-pin what they
-need at call time.
+read paths (core.load_table / core.read_parquet_schema, both through
+core.parquet_schema, which pins before it takes its memo key) re-pin what
+they need at call time.
 """
 
 import pytest
@@ -95,3 +96,16 @@ def test_spread_probe_is_cached(spark, sf_dir):
     assert len(core._SCAN_PARTITIONS_CACHE) == 1
     core.load_table(spark, sf_dir, "documents")
     assert len(core._SCAN_PARTITIONS_CACHE) == 1  # hit, not a re-probe
+
+
+def test_memoized_schema_survives_bare_session(spark, sf_dir, request):
+    """A schema memoized on the pinned session is not served against a
+    stripped one: the load re-pins before the memo key is taken, so
+    ``ts`` still arrives as ``timestamp``."""
+    from big_data_analysis_of_twitter_emoji_usage_spark.core import load_events
+
+    assert dict(load_events(spark, sf_dir).dtypes)["ts"] == "timestamp"
+    bare = request.getfixturevalue("bare_confs")
+    raw = bare.read.parquet(f"{sf_dir}/events.parquet")
+    assert dict(raw.dtypes)["ts"] == "timestamp_ntz"  # really stripped
+    assert dict(load_events(bare, sf_dir).dtypes)["ts"] == "timestamp"

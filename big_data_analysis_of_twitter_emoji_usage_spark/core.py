@@ -17,6 +17,7 @@ construction and sets the handful of configs that matter at 100 TB:
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -181,10 +182,22 @@ _SCHEMA_CONFS = (
     "spark.sql.parquet.mergeSchema",
 )
 
-# (path, conf values) -> (file statuses, schema): one entry per path, so
-# a table rewritten in place replaces its entry instead of adding one.
-# Each entry is stored whole; two threads missing at once both infer.
-_PARQUET_SCHEMA_CACHE: dict[tuple, tuple] = {}
+# The file memo's facts also depend on split planning: these confs and
+# the session's default parallelism set the scan partition count.
+_FACT_CONFS = _SCHEMA_CONFS + (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+)
+
+# What is known about a file set: (paths, conf values, parallelism) ->
+# (file stamps, facts). The facts are the inferred "schema", the scan
+# "partitions" count and, per column, the vector width ("dim", col). An
+# entry whose stamps no longer match the files is dropped whole. FIFO-
+# bounded so a long-lived application touching many transient paths
+# cannot grow it without limit.
+_FILE_FACTS: dict[tuple, tuple[tuple, dict]] = {}
+_FILE_FACTS_MAX = 512
+_FILE_FACTS_LOCK = threading.Lock()
 
 
 def _file_statuses(fs, status) -> list[tuple]:
@@ -193,33 +206,77 @@ def _file_statuses(fs, status) -> list[tuple]:
     return [f for s in fs.listStatus(status.getPath()) for f in _file_statuses(fs, s)]
 
 
+def file_stamps(spark: SparkSession, paths: "str | list[str]") -> tuple | None:
+    """Sorted (path, length, mtime) of every file under ``paths`` (one
+    path or a list), as the Hadoop FS reports them, so ``file:``,
+    scheme-less and HDFS paths take one code path. Each path is expanded
+    with ``globStatus``, as the parquet reader expands it. None when
+    there is no path or any path matches nothing."""
+    from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import _hadoop_fs
+
+    paths = [paths] if isinstance(paths, str) else paths
+    if not paths:
+        return None
+    stamps = []
+    for path in paths:
+        fs, hpath = _hadoop_fs(spark, path)
+        matched = fs.globStatus(hpath)
+        if not matched:
+            return None
+        stamps += (f for s in matched for f in _file_statuses(fs, s))
+    return tuple(sorted(stamps))
+
+
+def _file_facts(spark: SparkSession, paths: "str | list[str]") -> dict:
+    """The memo's facts for the files under ``paths``: the live entry
+    while their stamps and the key's confs are unchanged, else a fresh
+    one. A path matching nothing gets a throwaway dict, so it is never
+    memoized."""
+    stamps = file_stamps(spark, paths)
+    if stamps is None:
+        return {}
+    key = (
+        paths if isinstance(paths, str) else tuple(paths),
+        tuple(spark.conf.get(k) for k in _FACT_CONFS),
+        spark.sparkContext.defaultParallelism,
+    )
+    with _FILE_FACTS_LOCK:
+        entry = _FILE_FACTS.get(key)
+        if entry is None or entry[0] != stamps:
+            _FILE_FACTS.pop(key, None)
+            while len(_FILE_FACTS) >= _FILE_FACTS_MAX:
+                _FILE_FACTS.pop(next(iter(_FILE_FACTS)))
+            entry = _FILE_FACTS[key] = (stamps, {})
+    return entry[1]
+
+
+def _fact(facts: dict, name, probe):
+    """``facts[name]``, probed and kept on a miss. A None result is not
+    kept. Each fact is stored whole; two threads missing at once both
+    probe."""
+    if name not in facts:
+        value = probe()
+        if value is None:
+            return None
+        facts[name] = value
+    return facts[name]
+
+
+def _schema(spark: SparkSession, path: str, facts: dict):
+    return _fact(facts, "schema", lambda: spark.read.parquet(path).schema)
+
+
 def parquet_schema(spark: SparkSession, path: str):
     """The schema ``spark.read.parquet(path)`` infers, memoized.
 
     Inference runs a Spark job that reads the footers; the memo skips it
-    while the files under ``path`` (each one's length and modification
-    time, as the Hadoop FS reports them) and the inference-affecting
-    confs are unchanged. Pins session confs first — probing
-    events.parquet on a bare session otherwise dies with
-    PARQUET_TYPE_ILLEGAL before any query runs. The path is expanded
-    with ``globStatus``, as the reader expands it; a path matching
-    nothing is never memoized and fails as a plain read does. Callers
-    must not mutate the returned schema."""
-    from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import _hadoop_fs
-
+    while the files under ``path`` and the inference-affecting confs are
+    unchanged. Pins session confs first — probing events.parquet on a
+    bare session otherwise dies with PARQUET_TYPE_ILLEGAL before any
+    query runs. A path matching nothing fails as a plain read does.
+    Callers must not mutate the returned schema."""
     pin_session_confs(spark)
-    fs, hpath = _hadoop_fs(spark, path)
-    matched = fs.globStatus(hpath)
-    if not matched:
-        return spark.read.parquet(path).schema
-    files = tuple(sorted(f for s in matched for f in _file_statuses(fs, s)))
-    key = (path, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
-    cached = _PARQUET_SCHEMA_CACHE.get(key)
-    if cached is not None and cached[0] == files:
-        return cached[1]
-    schema = spark.read.parquet(path).schema
-    _PARQUET_SCHEMA_CACHE[key] = (files, schema)
-    return schema
+    return _schema(spark, path, _file_facts(spark, path))
 
 
 def read_parquet_schema(spark: SparkSession, sf_dir: str, name: str):
@@ -227,71 +284,34 @@ def read_parquet_schema(spark: SparkSession, sf_dir: str, name: str):
     return parquet_schema(spark, table_path(sf_dir, name))
 
 
-def spread(df, min_partitions: int | None = None):
-    """Round-robin repartition a scan that arrived with fewer partitions
-    than the session's parallelism.
+def load_table(spark: SparkSession, sf_dir: str, name: str, spread_scan: bool = True):
+    """Read one of the fixture tables (TESTDATA.md) as a DataFrame with
+    its memoized schema declared.
 
     The fixture tables are single-file / single-row-group parquet, so the
     scan is one task and every downstream map stage serializes onto one
-    core. On a real deployment the input splits into ~file-size /
-    ``maxPartitionBytes`` partitions and this check is false, making the
-    helper a no-op — the repartition only ever fires when the table is
-    smaller than cores × split size, bounding the shuffled volume.
-    """
-    if df.isStreaming:  # partition counts are undefined pre-execution
-        return df
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
-    if _scan_partitions(df) < target:
-        return df.repartition(target)
-    return df
-
-
-# The plan->RDD conversion behind getNumPartitions costs a driver round
-# trip per call; for a fixed input path the answer never changes, so it
-# is probed once per (path-set, session) and memoized.
-_SCAN_PARTITIONS_CACHE: dict[tuple, int] = {}
-
-
-def _scan_partitions(df) -> int:
-    key = None
-    try:
-        files = df.inputFiles()
-        if files:
-            # Split planning depends on session confs, not just the file
-            # set — two sessions sharing one JVM/appId (the bare-session
-            # scenario) can legally disagree on the partition count, so
-            # the split-affecting confs join the key.
-            sess = df.sparkSession
-            key = (
-                sess.sparkContext.applicationId,
-                sess.conf.get("spark.sql.files.maxPartitionBytes", None),
-                sess.conf.get("spark.sql.files.openCostInBytes", None),
-                sess.sparkContext.defaultParallelism,
-                tuple(sorted(files)),
-            )
-            cached = _SCAN_PARTITIONS_CACHE.get(key)
-            if cached is not None:
-                return cached
-    except Exception:
-        pass  # non-file-backed plan: fall through to the direct probe
-    n = df.rdd.getNumPartitions()
-    if key is not None:
-        _SCAN_PARTITIONS_CACHE[key] = n
-    return n
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str, spread_scan: bool = True):
-    """Read one of the fixture tables (TESTDATA.md) as a DataFrame,
-    spread to the session's parallelism (see ``spread``).
+    core. With ``spread_scan`` a scan that arrives with fewer partitions
+    than the session's parallelism is round-robin repartitioned to it.
+    On a real deployment the input splits into ~file-size /
+    ``maxPartitionBytes`` partitions and this is a no-op: it only fires
+    when the table is smaller than cores × split size, bounding the
+    shuffled volume. The partition count is memoized with the schema, so
+    a warm load makes no plan->RDD round trip.
 
     Pass ``spread_scan=False`` for tables that will be broadcast (small
     dims): repartitioning a table that is about to be collected into a
     broadcast relation is a pure-waste Exchange in the plan.
     """
     path = table_path(sf_dir, name)
-    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
-    return spread(df) if spread_scan else df
+    pin_session_confs(spark)
+    facts = _file_facts(spark, path)
+    df = spark.read.schema(_schema(spark, path, facts)).parquet(path)
+    if not spread_scan:
+        return df
+    target = spark.sparkContext.defaultParallelism
+    if _fact(facts, "partitions", lambda: df.rdd.getNumPartitions()) < target:
+        return df.repartition(target)
+    return df
 
 
 def nanos_to_timestamp(col):
@@ -338,25 +358,20 @@ def stream_table_path(sf_dir: str, name: str) -> str:
 
 
 def spread_stream(stream, spark: SparkSession, sf_dir: str, name: str):
-    """Streaming twin of ``spread``: round-robin repartition a
-    file-stream source whose BATCH scan of the same files would arrive
+    """Streaming twin of ``load_table``'s spread: round-robin repartition
+    a file-stream source whose BATCH scan of the same files would arrive
     with fewer partitions than the session's parallelism.
 
-    Why it exists (r13, guide §2.5): ``spread`` must no-op on streams
-    (partition counts are undefined pre-execution), so every micro-batch
-    of a fixture-table stream ran its entire map-side work — 13-gram
-    md5 probes, regex redaction, tokenization — in ONE task (the
-    fixture tables are single-file/single-row-group parquet), while the
-    batch twins run 32-way. Event-log evidence: stream_decontam_docs'
-    addBatch was one 3.2 s single-task job vs ~0.35 s for the identical
-    32-task batch plan. The decision is delegated to the SAME probe the
-    batch path uses (``_scan_partitions`` on a batch read of the same
-    path with its ``parquet_schema`` — both memoized, no Spark job once
-    warm), so stream and batch twins spread
-    under exactly the same condition: on a real deployment the input
-    splits past the session's parallelism and this is a no-op; it only
-    ever fires when the table is smaller than cores × split size,
-    bounding the shuffled volume. The added per-batch Exchange is
+    Why it exists (r13, guide §2.5): partition counts are undefined on a
+    stream before execution, so every micro-batch of a fixture-table
+    stream ran its entire map-side work — 13-gram md5 probes, regex
+    redaction, tokenization — in ONE task (the fixture tables are
+    single-file/single-row-group parquet), while the batch twins run
+    32-way. Event-log evidence: stream_decontam_docs' addBatch was one
+    3.2 s single-task job vs ~0.35 s for the identical 32-task batch
+    plan. The decision reads the SAME memoized partition count the batch
+    load uses (no Spark job once warm), so stream and batch twins spread
+    under exactly the same condition. The added per-batch Exchange is
     round-robin with sort-before-repartition (deterministic under task
     retry); results are partitioning-invariant for every consumer
     (row-level projections, aggregations, watermarked joins).
@@ -367,13 +382,18 @@ def spread_stream(stream, spark: SparkSession, sf_dir: str, name: str):
     scale) only pays where the per-row map work is heavy (the 13-gram
     md5 decontam probes: −30..−40%); the light projections and
     aggregations all measured small losses."""
-    sc = spark.sparkContext
-    target = sc.defaultParallelism
     path = table_path(sf_dir, name)
-    batch_probe = spark.read.schema(parquet_schema(spark, path)).parquet(path)
-    if _scan_partitions(batch_probe) < target:
-        return stream.repartition(target)
-    return stream
+    pin_session_confs(spark)
+    facts = _file_facts(spark, path)
+    n = _fact(
+        facts,
+        "partitions",
+        lambda: spark.read.schema(_schema(spark, path, facts))
+        .parquet(path)
+        .rdd.getNumPartitions(),
+    )
+    target = spark.sparkContext.defaultParallelism
+    return stream.repartition(target) if n < target else stream
 
 
 def load_table_stream(

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from big_data_analysis_of_twitter_emoji_usage_spark.core import explode_nonempty
+from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import _hadoop_fs
 
 HEX_HIGH = ("8", "9", "a", "b", "c", "d", "e", "f")  # high bit of a hex digit
 HEX_BIT2 = ("4", "5", "6", "7", "c", "d", "e", "f")  # second bit (nibble & 4)
@@ -1015,16 +1016,12 @@ def connected_components(
     # instead of leaking them on the distributed FS (r9; a dir whose
     # .checkpoint() call itself died mid-write is Spark's own
     # task-cleanup domain and is not tracked here).
-    def _hadoop_fs_and_path():
-        hpath = sc._jvm.org.apache.hadoop.fs.Path(sc.getCheckpointDir())
-        return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath
-
     def _delete_ckpt_dirs(paths: set) -> None:
         if not (reliable and paths):  # local path tracks no dirs
             return
-        fs, _ = _hadoop_fs_and_path()
         for p in paths:
-            fs.delete(sc._jvm.org.apache.hadoop.fs.Path(p), True)
+            fs, hpath = _hadoop_fs(edges.sparkSession, p)
+            fs.delete(hpath, True)
 
     tracked: set = set()  # live reliable-checkpoint dirs this run created
 

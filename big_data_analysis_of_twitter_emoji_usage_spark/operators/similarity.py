@@ -19,7 +19,13 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from big_data_analysis_of_twitter_emoji_usage_spark.core import as_col, explode_nonempty
+from big_data_analysis_of_twitter_emoji_usage_spark.core import (
+    _fact,
+    _file_facts,
+    as_col,
+    explode_nonempty,
+    parquet_schema,
+)
 from big_data_analysis_of_twitter_emoji_usage_spark.operators.dedup import band_pairs
 
 
@@ -37,20 +43,6 @@ def _dot(a: Column, b: Column) -> Column:
 # interpreted anyway — so wider vectors just keep the HOF dot.
 _UNROLL_DIM_CAP = 512
 
-
-# Probe memo keyed on (appId, file set incl. per-file mtime+size,
-# column) — same idiom as core._SCAN_PARTITIONS_CACHE: for a fixed
-# file-backed input the width never changes, so repeated operator
-# calls (the bench's min-of-N, a probe loop over a persisted index)
-# pay the LIMIT-1 job once. The mtime/size stamp (r13, ADVICE r12)
-# invalidates on in-place overwrites with a different vector width —
-# results were already safe (per-row guard) but the fast path would
-# silently degrade to the HOF fallback on every row. Never caches a
-# None (an empty relation may gain rows later); FIFO-bounded so a
-# long-lived application probing many transient stores cannot grow it
-# without limit.
-_PROBE_DIM_CACHE: dict[tuple, int] = {}
-_PROBE_DIM_CACHE_MAX = 512
 
 # The measured crossover for the unrolled dot's NET win (r12 per-site
 # A/B table + the r13 pair-only narrowing): engagements at
@@ -129,38 +121,6 @@ def _unroll_pair_gate(
     return lr * pr * frac >= _UNROLL_MIN_EST_PAIRS
 
 
-def _file_stamps(df: DataFrame, files: list) -> tuple:
-    """(path, mtime, size) stamps for a plan's input files via ONE
-    Hadoop listStatus per distinct parent dir — no Spark job. Paths
-    are matched on their URI *path* component: ``inputFiles()`` URIs
-    (``file:///…``) and Hadoop ``Path.toString()`` (``file:/…``) spell
-    the same file differently. Files missing from their dir listing
-    (concurrently deleted) stamp as (path, None, None), which still
-    keys deterministically."""
-    from urllib.parse import unquote, urlparse
-
-    def _norm(p: str) -> str:
-        u = urlparse(p)
-        return unquote(u.path) if u.scheme else p
-
-    sc = df.sparkSession.sparkContext
-    hconf = sc._jsc.hadoopConfiguration()
-    jvm = sc._jvm
-    stat: dict[str, tuple] = {}
-    parents = {}
-    for f in files:
-        parents.setdefault(f.rsplit("/", 1)[0], []).append(f)
-    for parent in parents:
-        p = jvm.org.apache.hadoop.fs.Path(parent)
-        fs = p.getFileSystem(hconf)
-        for s in fs.listStatus(p):
-            sp = _norm(s.getPath().toString())
-            stat[sp] = (s.getModificationTime(), s.getLen())
-    return tuple(
-        (f, *stat.get(_norm(f), (None, None))) for f in sorted(files)
-    )
-
-
 def _probe_dim(df: DataFrame, vec_col: str) -> int | None:
     """One-row probe of a vector column's width, used to pick the
     codegen-unrolled dot (``_dot_d``) at plan-build time. Returns None
@@ -169,32 +129,23 @@ def _probe_dim(df: DataFrame, vec_col: str) -> int | None:
     the probe is a pure FAST-PATH decision and can never change
     results (``_dot_d`` guards per row). Costs one ``first()`` job
     over a single-column projection (LIMIT 1 — the scan stops at the
-    first row), memoized for file-backed inputs."""
-    key = None
+    first row), kept in the core file memo for file-backed inputs, so
+    an in-place overwrite re-probes."""
+
+    def probe() -> int | None:
+        try:
+            r = df.select(F.size(_as_double(as_col(vec_col))).alias("_d")).first()
+        except Exception:
+            return None
+        if r is None or r[0] is None or not (0 < r[0] <= _UNROLL_DIM_CAP):
+            return None
+        return int(r[0])
+
     try:
-        files = df.inputFiles()
-        if files:
-            key = (
-                df.sparkSession.sparkContext.applicationId,
-                vec_col,
-                _file_stamps(df, files),
-            )
-            cached = _PROBE_DIM_CACHE.get(key)
-            if cached is not None:
-                return cached
+        facts = _file_facts(df.sparkSession, sorted(df.inputFiles()))
     except Exception:
-        key = None
-    try:
-        r = df.select(F.size(_as_double(as_col(vec_col))).alias("_d")).first()
-    except Exception:
-        return None
-    if r is None or r[0] is None or not (0 < r[0] <= _UNROLL_DIM_CAP):
-        return None
-    if key is not None:
-        if len(_PROBE_DIM_CACHE) >= _PROBE_DIM_CACHE_MAX:
-            _PROBE_DIM_CACHE.pop(next(iter(_PROBE_DIM_CACHE)))
-        _PROBE_DIM_CACHE[key] = int(r[0])
-    return int(r[0])
+        facts = {}  # not file-backed, or unreadable stamps: probe unmemoized
+    return _fact(facts, ("dim", vec_col), probe)
 
 
 def _dot_d(a: "Column | str", b: "Column | str", dim: int | None) -> Column:
@@ -1569,10 +1520,14 @@ def ivf_index_drift_stats(
 
     tiers = [_proj(t) for t in (main, recent) if t is not None]
     p = tiers[0] if len(tiers) == 1 else tiers[0].unionByName(tiers[1])
-    c = spark.read.parquet(centroids_dir).select(
-        F.col("_cid").cast("long").alias("_list"),
-        F.col("_cv"),
-        _dot_d("_cv", "_cv", dim).alias("_ccn"),
+    c = (
+        spark.read.schema(parquet_schema(spark, centroids_dir))
+        .parquet(centroids_dir)
+        .select(
+            F.col("_cid").cast("long").alias("_list"),
+            F.col("_cv"),
+            _dot_d("_cv", "_cv", dim).alias("_ccn"),
+        )
     )
     return (
         p.join(F.broadcast(c), "_list")
@@ -1680,7 +1635,7 @@ def cosine_knn_ivf_probe_dir(
     )
     from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import _hadoop_fs
 
-    c = spark.read.parquet(centroids_dir)
+    c = spark.read.schema(parquet_schema(spark, centroids_dir)).parquet(centroids_dir)
     q = _vec_rows(queries, id_col, vec_col, "query_id", "qv")
     probes = _ivf_route_probes(c, q, nprobe).persist()
     try:

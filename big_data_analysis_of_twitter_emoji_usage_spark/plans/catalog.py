@@ -973,17 +973,62 @@ def _tweet_records(doc_ids, shape: str):
         yield _json.dumps(rec)
 
 
-def _synth_tweet_dir(sf: str, shape: str) -> str:
-    """Materialize the ``shape`` tweet corpus for this fixture dir via
-    the rolling-JSONL ingester (atomic tmp→rename, S3 — ingest.py
-    mirrors q1:240-246), cached across calls. Driver-side by design: it
-    replaces the reference's HTTP ingester thread, not a query stage.
-    The ``_SYNTH_DONE`` marker doubles as the cache key and is invisible
-    to Spark readers (underscore-prefixed files are ignored)."""
+def _source_stamp(src: str) -> str:
+    """Staleness stamp of a staging source file: its path, size,
+    mtime_ns and the md5 of its last 64 KB. O(1) per call, however large
+    the table grows. The parquet FOOTER tail is the content component:
+    an mtime-preserving same-size replace (tar -x, rsync -a, cp -p)
+    still changes the footer's row-group stats/offsets."""
+    import hashlib
+
+    st = _os.stat(src)
+    with open(src, "rb") as fh:
+        fh.seek(max(0, st.st_size - 65536))
+        tail_md5 = hashlib.md5(fh.read()).hexdigest()
+    return f"{_os.path.abspath(src)}:{st.st_size}:{st.st_mtime_ns}:{tail_md5}"
+
+
+def _stage_once(
+    name: str, src: str, build, stamp_extra: str = "", reuse: bool = True
+) -> str:
+    """Stage a scratch directory built from the source file ``src`` once
+    per source stamp and return its path. The directory is
+    ``<tmp>/spark_graft_scratch/<name>_<hash of src's abspath>``, so two
+    fixture dirs with the same basename do not collide. It is reused
+    while ``reuse`` holds and its ``_STAGE_DONE`` marker holds the stamp
+    (``_source_stamp`` plus ``stamp_extra``); else it is cleared,
+    ``build(out)`` runs, and the marker is written last, so a partial
+    build is never reused. The underscore-prefixed marker is invisible
+    to Spark readers."""
     import hashlib
     import shutil
     import tempfile
 
+    out = _os.path.join(
+        tempfile.gettempdir(),
+        "spark_graft_scratch",
+        f"{name}_{hashlib.md5(_os.path.abspath(src).encode()).hexdigest()[:10]}",
+    )
+    stamp = f"{_source_stamp(src)}{stamp_extra}"
+    marker = _os.path.join(out, "_STAGE_DONE")
+    if reuse and _os.path.isfile(marker):
+        with open(marker, encoding="utf-8") as f:
+            if f.read() == stamp:
+                return out
+    if _os.path.isdir(out):
+        shutil.rmtree(out)
+    build(out)
+    with open(marker, "w", encoding="utf-8") as f:
+        f.write(stamp)
+    return out
+
+
+def _synth_tweet_dir(sf: str, shape: str) -> str:
+    """Materialize the ``shape`` tweet corpus for this fixture dir via
+    the rolling-JSONL ingester (atomic tmp→rename, S3 — ingest.py
+    mirrors q1:240-246), staged once per source stamp. Driver-side by
+    design: it replaces the reference's HTTP ingester thread, not a
+    query stage."""
     import pyarrow.parquet as pq
 
     from big_data_analysis_of_twitter_emoji_usage_spark.sources.ingest import (
@@ -991,42 +1036,16 @@ def _synth_tweet_dir(sf: str, shape: str) -> str:
     )
 
     src = table_path(sf, "documents")
-    dirname = _os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_tweets_{shape}_"
-        + hashlib.md5(_os.path.abspath(src).encode()).hexdigest()[:10],
-    )
-    marker = _os.path.join(dirname, "_SYNTH_DONE")
-    # O(1) staleness stamp (the _partitioned_events_dir idiom): a
-    # regenerated fixture changes size or mtime_ns, so the stamp
-    # identifies the input without re-reading + hashing the whole
-    # doc_id column on every cache HIT (the former scheme cost an
-    # O(n) pyarrow read + sort + md5 per call on all five tweet
-    # queries — a repeated driver stall at decade scale). The parquet
-    # FOOTER tail is hashed in as the content component: an
-    # mtime-preserving same-size replace (tar -x, rsync -a, cp -p)
-    # still changes the footer's row-group stats/offsets, and 64 KB is
-    # a fixed-cost read however large the table grows.
-    st = _os.stat(src)
-    with open(src, "rb") as fh:
-        fh.seek(max(0, st.st_size - 65536))
-        tail_md5 = hashlib.md5(fh.read()).hexdigest()
-    want = f"{_os.path.abspath(src)}:{st.st_size}:{st.st_mtime_ns}:{tail_md5}"
-    if not (
-        _os.path.isfile(marker)
-        and open(marker, encoding="utf-8").read() == want
-    ):
-        if _os.path.isdir(dirname):  # partial prior attempt: start clean
-            shutil.rmtree(dirname)
+
+    def build(out: str) -> None:
         doc_ids = sorted(
             pq.read_table(src, columns=["doc_id"]).column("doc_id").to_pylist()
         )
-        RollingJsonlWriter(dirname, lines_per_file=1000).drain(
+        RollingJsonlWriter(out, lines_per_file=1000).drain(
             _tweet_records(doc_ids, shape)
         )
-        with open(marker, "w", encoding="utf-8") as f:
-            f.write(want)
-    return dirname
+
+    return _stage_once(f"tweets_{shape}", src, build)
 
 
 def q4_tweets_end_to_end(spark, sf):
@@ -1612,44 +1631,20 @@ def _assert_plan_contains(df, needle: str, what: str) -> str:
 
 def _partitioned_events_dir(spark, sf) -> str:
     """Materialize the events table as ds=yyyy-MM-dd hive-layout parquet
-    under the system temp dir and return the path, cached across calls
-    (r6; the r5 version rewrote the whole table on EVERY invocation, so
-    the two pruning queries benchmarked the write, not the pruned scan
-    they exist to demonstrate). Same protocol as ``_synth_tweet_dir``:
-    the directory is keyed by the abspath hash of the SOURCE parquet
-    (two fixture dirs with the same basename no longer collide) and a
-    ``_PARTITIONED_DONE`` marker records a (size, mtime) stamp of the
-    source file — a regenerated fixture invalidates the cache, and the
-    underscore-prefixed marker is invisible to Spark readers. The
-    at-rest layout is the engine's substitute for the reference's
-    per-range directory pointing (q7:64,89): time slicing becomes
-    partition pruning instead of a path convention."""
-    import hashlib
-    import shutil
-    import tempfile
-
-    src = table_path(sf, "events")
-    st = _os.stat(src)
-    want = f"{_os.path.abspath(src)}:{st.st_size}:{st.st_mtime_ns}"
-    out = _os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_scratch",
-        "events_by_day_"
-        + hashlib.md5(_os.path.abspath(src).encode()).hexdigest()[:10],
-    )
-    marker = _os.path.join(out, "_PARTITIONED_DONE")
-    if not (
-        _os.path.isfile(marker)
-        and open(marker, encoding="utf-8").read() == want
-    ):
-        if _os.path.isdir(out):  # stale or partial prior attempt
-            shutil.rmtree(out)
-        write_parquet_partitioned(
+    under the system temp dir and return the path, staged once per
+    source stamp (r6; the r5 version rewrote the whole table on EVERY
+    invocation, so the two pruning queries benchmarked the write, not
+    the pruned scan they exist to demonstrate). The at-rest layout is the
+    engine's substitute for the reference's per-range directory
+    pointing (q7:64,89): time slicing becomes partition pruning instead
+    of a path convention."""
+    return _stage_once(
+        "events_by_day",
+        table_path(sf, "events"),
+        lambda out: write_parquet_partitioned(
             add_date_partition(load_events(spark, sf)), out, ["ds"]
-        )
-        with open(marker, "w", encoding="utf-8") as f:
-            f.write(want)
-    return out
+        ),
+    )
 
 
 def events_partitioned_prune(spark, sf):
@@ -1718,62 +1713,41 @@ def events_partitioned_dpp(spark, sf):
 def _bucketed_events_tables(spark, sf) -> tuple[str, str]:
     """Materialize the events fact and its per-user rollup as catalog
     tables bucketed ×8 on ``user_id``, memoized per (source content,
-    session): the table names embed a stamp of the source parquet's
-    (path, size, mtime), so a cached table is only reused for the exact
-    fixture that built it, and a regenerated fixture gets fresh names.
-    ``tableExists`` re-checks per session because the in-memory catalog
-    does not survive session restarts even when the table files do; the
-    tables are EXTERNAL over content-stamped scratch paths (a managed
-    table would land in the session warehouse dir — the process cwd by
-    default — and a restarted session could neither reuse nor overwrite
-    the orphaned location), so a rebuild just clears and rewrites the
-    directories this helper owns. Reuse requires BOTH the catalog entry
-    AND a ``_BUCKETED_DONE`` marker in the external dir: a tmp reaper
-    (or parallel cleanup) can delete the scratch path out from under a
-    live catalog entry, and reusing on ``tableExists`` alone would then
-    fail at read time with no rebuild path — when the marker is gone the
+    session): the table names embed a hash of the source stamp, so a
+    cached table is only reused for the exact fixture that built it,
+    and a regenerated fixture gets fresh names. The tables are EXTERNAL
+    over stamped scratch paths (a managed table would land in the
+    session warehouse dir — the process cwd by default — and a
+    restarted session could neither reuse nor overwrite the orphaned
+    location). Reuse requires BOTH the catalog entry, which does not
+    survive a session restart even when the files do, AND the staged
+    dir's marker: a tmp reaper (or parallel cleanup) can delete the
+    scratch path out from under a live catalog entry. Otherwise the
     table is dropped and rebuilt."""
     import hashlib
-    import shutil
-    import tempfile
 
     src = table_path(sf, "events")
-    st = _os.stat(src)
-    stamp = hashlib.md5(
-        f"{_os.path.abspath(src)}:{st.st_size}:{st.st_mtime_ns}".encode()
-    ).hexdigest()[:10]
-    ev_t, users_t = f"ev_bucketed_{stamp}", f"users_bucketed_{stamp}"
+    tag = hashlib.md5(_source_stamp(src).encode()).hexdigest()[:10]
+    tables = {
+        f"ev_bucketed_{tag}": lambda ev: ev.select("event_id", "user_id", "value"),
+        f"users_bucketed_{tag}": lambda ev: ev.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events")
+        ),
+    }
+    for tname, shape in tables.items():
 
-    def loc_of(tname: str) -> str:
-        return _os.path.join(
-            tempfile.gettempdir(), "spark_graft_scratch", tname
-        )
-
-    def usable(tname: str) -> bool:
-        return spark.catalog.tableExists(tname) and _os.path.isfile(
-            _os.path.join(loc_of(tname), "_BUCKETED_DONE")
-        )
-
-    if not (usable(ev_t) and usable(users_t)):
-        ev = load_events(spark, sf)
-        for tname, tdf in (
-            (ev_t, ev.select("event_id", "user_id", "value")),
-            (
-                users_t,
-                ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events")),
-            ),
-        ):
-            if spark.catalog.tableExists(tname):  # entry whose dir vanished
-                spark.sql(f"DROP TABLE IF EXISTS {tname}")
-            loc = loc_of(tname)
-            if _os.path.isdir(loc):  # orphan from a prior session
-                shutil.rmtree(loc)
+        def build(loc: str, tname=tname, shape=shape) -> None:
+            spark.sql(f"DROP TABLE IF EXISTS {tname}")
             write_bucketed_table(
-                tdf, tname, "user_id", num_buckets=8, path=loc
+                shape(load_events(spark, sf)),
+                tname,
+                "user_id",
+                num_buckets=8,
+                path=loc,
             )
-            with open(_os.path.join(loc, "_BUCKETED_DONE"), "w") as fh:
-                fh.write(stamp)
-    return ev_t, users_t
+
+        _stage_once(tname, src, build, reuse=spark.catalog.tableExists(tname))
+    return tuple(tables)
 
 
 def bucketed_join_events(spark, sf):
@@ -3013,9 +2987,8 @@ def _ordered_table_stream_dir(
     ranges with sequenced mtimes — the ordered-replay contract the
     incremental streaming dedup twins need for batch-exact semantics
     (the FileStreamSource admits files oldest-mtime-first under
-    maxFilesPerTrigger, so id order == arrival order). Cached across
-    calls with the O(1) staleness stamp idiom (``_synth_tweet_dir``):
-    size + mtime_ns + parquet-footer tail. ``transform`` (r12) is an
+    maxFilesPerTrigger, so id order == arrival order). Staged once per
+    source stamp (``_source_stamp``). ``transform`` (r12) is an
     optional pyarrow Table→Table hook applied after the sort —
     synthetic-variant stagings (``stream_dedup_hot_band``'s template
     injection) pass it with a distinguishing ``variant`` name so the
@@ -3024,46 +2997,25 @@ def _ordered_table_stream_dir(
     ``_HOT_BAND_TEMPLATE``/``_HOT_BAND_N`` would keep serving the
     stale cached staging while the DuckDB oracle uses the new values
     (a phantom parity failure)."""
-    import hashlib
-    import shutil
-    import tempfile
-
     import pyarrow.parquet as pq
 
     src = table_path(sf, table)
-    dirname = _os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_{table}_ordered{variant}_{n_files}_"
-        + hashlib.md5(_os.path.abspath(src).encode()).hexdigest()[:10],
-    )
-    marker = _os.path.join(dirname, "_STAGE_DONE")
-    st = _os.stat(src)
-    with open(src, "rb") as fh:
-        fh.seek(max(0, st.st_size - 65536))
-        tail_md5 = hashlib.md5(fh.read()).hexdigest()
-    want = (
-        f"{_os.path.abspath(src)}:{st.st_size}:{st.st_mtime_ns}:{tail_md5}"
-        f":{stamp_extra}"
-    )
-    if not (
-        _os.path.isfile(marker)
-        and open(marker, encoding="utf-8").read() == want
-    ):
-        if _os.path.isdir(dirname):  # partial prior attempt: start clean
-            shutil.rmtree(dirname)
-        _os.makedirs(dirname)
+
+    def build(out: str) -> None:
+        _os.makedirs(out)
         t = pq.read_table(src).sort_by(id_sort_col)
         if transform is not None:
             t = transform(t)
         chunk = (t.num_rows + n_files - 1) // n_files
         base_mtime = 1_700_000_000
         for i in range(n_files):
-            p = _os.path.join(dirname, f"part-{i:04d}.parquet")
+            p = _os.path.join(out, f"part-{i:04d}.parquet")
             pq.write_table(t.slice(i * chunk, chunk), p)
             _os.utime(p, (base_mtime + i * 10, base_mtime + i * 10))
-        with open(marker, "w", encoding="utf-8") as f:
-            f.write(want)
-    return dirname
+
+    return _stage_once(
+        f"{table}_ordered{variant}_{n_files}", src, build, f":{stamp_extra}"
+    )
 
 
 def stream_dedup_near_docs(spark, sf):

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def write_parquet_partitioned(
@@ -305,12 +306,30 @@ def compact_partitioned_parquet(
     }
 
 
+def store_tier_schemas(
+    schema: T.StructType, bucket_col: str
+) -> tuple[T.StructType, T.StructType]:
+    """(recent, history) read schemas of a two-tier store whose landed
+    rows have ``schema``: the recent tier's ``batch_id=N`` dirs add
+    ``batch_id``; the history's ``<bucket_col>=K/batch_id=N`` dirs move
+    ``bucket_col`` into the dir names. Both dir columns are typed as
+    partition inference types them (int)."""
+    batch = T.StructField("batch_id", T.IntegerType())
+    recent = T.StructType([*schema.fields, batch])
+    history = T.StructType(
+        [f for f in schema.fields if f.name != bucket_col]
+        + [T.StructField(bucket_col, T.IntegerType()), batch]
+    )
+    return recent, history
+
+
 def consolidate_bucket_history(
     spark: SparkSession,
     root: str,
     min_batch_dirs: int = 2,
     shuffle: bool = True,
     defer_reap: bool = False,
+    schema: T.StructType | None = None,
 ) -> dict:
     """History consolidation for bucket-major streaming-store layouts
     (``<root>/<col>=K/batch_id=N/...`` — the r11 dedup band/payload
@@ -352,7 +371,11 @@ def consolidate_bucket_history(
     pass is sound and is paid ONLY on recovery runs, never on the
     routine path. Run between drives (after ``awaitTermination`` all
     landed batches are committed; a committed batch is never replayed,
-    so merging cannot collide with a landing)."""
+    so merging cannot collide with a landing).
+
+    A caller that landed the store's rows passes their ``schema``
+    (bucket column included), so the merge read skips the
+    footer-reading inference job."""
     fs, hroot = _hadoop_fs(spark, root)
     jvm = spark.sparkContext._jvm
     Path = jvm.org.apache.hadoop.fs.Path
@@ -403,7 +426,10 @@ def consolidate_bucket_history(
             stats["recovering"] = False
         return stats
     fs.create(pending, True).close()
-    df = spark.read.option("basePath", root.rstrip("/")).parquet(
+    reader = spark.read.option("basePath", root.rstrip("/"))
+    if schema is not None:
+        reader = reader.schema(store_tier_schemas(schema, bcol)[1])
+    df = reader.parquet(
         *(f"{root.rstrip('/')}/{name}" for name in sorted(frag))
     ).drop("batch_id")
     if recovering:
@@ -454,6 +480,7 @@ def roll_recent_into_store(
     before_batch_id: int | None = None,
     shuffle: bool = True,
     defer_reap: bool = False,
+    schema: T.StructType | None = None,
 ) -> dict:
     """Roll a two-tier streaming store's batch-major RECENT tail
     (``<root>_recent/batch_id=N``, bucket col as a data column) into
@@ -484,7 +511,9 @@ def roll_recent_into_store(
     (shingle/vector arrays) roll without a spill-prone exchange, at
     the cost of one file per (bucket, batch, scan-task-that-held-
     the-bucket) instead of exactly one. Follow with
-    ``consolidate_bucket_history`` to merge the rolled batch dirs."""
+    ``consolidate_bucket_history`` to merge the rolled batch dirs. A
+    caller that landed the rows passes their ``schema`` to skip the
+    read's inference job, as for ``consolidate_bucket_history``."""
     recent = root.rstrip("/") + "_recent"
     fs, hrecent = _hadoop_fs(spark, recent)
     if not fs.exists(hrecent):
@@ -528,9 +557,10 @@ def roll_recent_into_store(
         # in-flight landing dir at file-index time. The listed dirs
         # are committed (< before_batch_id) and stable; basePath keeps
         # batch_id as a column exactly as the pruned read did.
-        df = spark.read.option("basePath", recent).parquet(
-            *(f"{recent}/{b.getName()}" for b in batches)
-        )
+        reader = spark.read.option("basePath", recent)
+        if schema is not None:
+            reader = reader.schema(store_tier_schemas(schema, bucket_col)[0])
+        df = reader.parquet(*(f"{recent}/{b.getName()}" for b in batches))
         if shuffle:
             # one file per (bucket, batch) leaf
             df = df.repartition(bucket_col)

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from big_data_analysis_of_twitter_emoji_usage_spark.core import parquet_schema
 from big_data_analysis_of_twitter_emoji_usage_spark.sources.readers import (
     read_partition_subtrees,
     union_partition_tiers,
@@ -33,6 +34,7 @@ from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import (
     _hadoop_fs,
     consolidate_bucket_history,
     roll_recent_into_store,
+    store_tier_schemas,
 )
 
 
@@ -772,13 +774,13 @@ def _read_committed_recent(
 
 def _run_two_tier_maintenance(
     spark: SparkSession,
-    roots: list[tuple[str, str, bool]],
+    roots: list[tuple],
     bid: int,
     min_batch_dirs: int,
     defer_reap: bool = False,
 ) -> list[str]:
     """One in-drive maintenance cycle, fired after batch ``bid``'s work
-    lands: for each (root, bucket_col, wide) store root, roll the
+    lands: for each (root, bucket_col, wide[, schema]) store root, roll the
     COMMITTED recent tail (strictly below the in-flight ``bid`` —
     those batches' checkpoint commits landed before this batch ran, so
     rolling them adds no crash window; the in-flight batch stays in
@@ -790,7 +792,8 @@ def _run_two_tier_maintenance(
     single-level LSM amortization). ``wide`` stores (shingle/vector
     payload arrays) roll and consolidate with ``shuffle=False`` — the
     wide-row exchange was measured spilling past local scratch at the
-    20M-doc decade (SCALE.md).
+    20M-doc decade (SCALE.md). A root given with the ``schema`` of the
+    rows the drive landed in it is read with that schema declared.
 
     ``defer_reap=True``: the cycle only ADDS files — the rolled recent
     dirs, the merged buckets' old dirs and the consolidation PENDING
@@ -802,7 +805,9 @@ def _run_two_tier_maintenance(
     delete ever racing a probe's pinned file index. Returns [] when
     not deferring."""
 
-    def _maintain_one(root: str, bucket_col: str, wide: bool) -> list[str]:
+    def _maintain_one(
+        root: str, bucket_col: str, wide: bool, schema: T.StructType | None = None
+    ) -> list[str]:
         reap = roll_recent_into_store(
             spark,
             root,
@@ -810,6 +815,7 @@ def _run_two_tier_maintenance(
             before_batch_id=bid,
             shuffle=not wide,
             defer_reap=defer_reap,
+            schema=schema,
         ).get("deferred_reap", [])
         fs, hroot = _hadoop_fs(spark, root)
         if fs.exists(hroot):
@@ -819,6 +825,7 @@ def _run_two_tier_maintenance(
                 min_batch_dirs=min_batch_dirs,
                 shuffle=not wide,
                 defer_reap=defer_reap,
+                schema=schema,
             ).get("deferred_reap", [])
         return reap
 
@@ -997,6 +1004,9 @@ def _stream_banded_dedup(
         )
     root = store_dir.rstrip("/")
     bands_dir = root + "_bands"
+    # each store root's row schema, set by every trigger; the
+    # maintenance cycle reads the root with it declared
+    landed: dict[str, T.StructType] = {}
 
     def _bucket(*cols) -> Column:
         return F.pmod(F.xxhash64(*cols), F.lit(store_buckets))
@@ -1007,17 +1017,10 @@ def _stream_banded_dedup(
         # history subtrees of the touched buckets ∪ committed recent
         # dirs ∪ the in-flight batch's persisted rows, as of ``bid``.
         # Every store file holds rows of ``cur``'s schema, so the reads
-        # declare it: recent dirs add ``batch_id``, history moves
-        # ``col`` into the dir names; both as partition inference types
-        # them (int).
-        fields = cur.schema.fields
-        batch = T.StructField("batch_id", T.IntegerType())
+        # declare it.
+        recent_schema, history_schema = store_tier_schemas(cur.schema, col)
         committed = _read_committed_recent(
-            spark, hist + "_recent", bid, T.StructType([*fields, batch])
-        )
-        history_schema = T.StructType(
-            [f for f in fields if f.name != col]
-            + [T.StructField(col, T.IntegerType()), batch]
+            spark, hist + "_recent", bid, recent_schema
         )
         cur = cur.withColumn("batch_id", F.lit(bid))
         recent = cur if committed is None else committed.unionByName(cur)
@@ -1031,6 +1034,7 @@ def _stream_banded_dedup(
         state = build_state(bdf).persist()
         state_p = state.withColumn("_pbkt", _bucket(F.col(id_col)))
         bc = band_rows(state).withColumn("_bkt", _bucket(*keys)).persist()
+        landed[root], landed[bands_dir] = state_p.schema, bc.schema
         cand = seen_cached = None
         # The landings write dirs nothing in this trigger reads back
         # (the probe takes the current batch from the persisted frames),
@@ -1127,12 +1131,18 @@ def _stream_banded_dedup(
         maintain_every,
         lambda bid: _run_two_tier_maintenance(
             spark,
-            [(bands_dir, "_bkt", False), (store_dir, "_pbkt", True)],
+            [
+                (bands_dir, "_bkt", False, landed.get(bands_dir)),
+                (root, "_pbkt", True, landed.get(root)),
+            ],
             bid,
             consolidate_min_batch_dirs,
             defer_reap=True,
         ),
-        lambda: spark.read.parquet(out_dir).drop("batch_id"),
+        # out_dir is batch-major, like a recent tier of the stream's rows
+        lambda: spark.read.schema(store_tier_schemas(stream_df.schema, id_col)[0])
+        .parquet(out_dir)
+        .drop("batch_id"),
         lambda: stream_df.schema,
     )
 
@@ -1387,7 +1397,7 @@ def stream_ivf_index_append(
     )
 
     recent_dir = postings_dir.rstrip("/") + "_recent"
-    c = spark.read.parquet(centroids_dir)
+    c = spark.read.schema(parquet_schema(spark, centroids_dir)).parquet(centroids_dir)
     # broadcast-sized by contract; counted once for the drift rollup
     n_lists = c.count() if (maintain_every is not None and drift_signal) else 0
 
@@ -1407,10 +1417,14 @@ def stream_ivf_index_append(
             .join(assign.withColumnRenamed("_id", "neighbor_id"), "neighbor_id")
         )
 
+    # the landed posting rows' schema; every store read declares it
+    schema = _postings(spark.createDataFrame([], stream_df.schema)).schema
+    recent_schema, history_schema = store_tier_schemas(schema, "_list")
+
     def _maintain(bid: int) -> list:
         _run_two_tier_maintenance(
             spark,
-            [(postings_dir, "_list", False)],
+            [(postings_dir, "_list", False, schema)],
             bid,
             consolidate_min_batch_dirs,
         )
@@ -1427,7 +1441,7 @@ def stream_ivf_index_append(
             _write_small_json_atomic(fs, jpath, target, s)
         return []  # nothing deferred (deletes ran inline above)
 
-    def _tier(root: str, prefix: str) -> DataFrame | None:
+    def _tier(root: str, prefix: str, tier_schema: T.StructType) -> DataFrame | None:
         # a rolled tail is an EMPTY dir, and a fresh store holds only
         # the marker: read a tier only when it has data dirs
         fs, hroot = _hadoop_fs(spark, root)
@@ -1435,12 +1449,12 @@ def stream_ivf_index_append(
             s.isDirectory() and s.getPath().getName().startswith(prefix)
             for s in fs.listStatus(hroot)
         ):
-            return spark.read.parquet(root)
+            return spark.read.schema(tier_schema).parquet(root)
         return None
 
     def _read() -> DataFrame | None:
-        main = _tier(postings_dir, "_list=")
-        recent = _tier(recent_dir, "batch_id=")
+        main = _tier(postings_dir, "_list=", history_schema)
+        recent = _tier(recent_dir, "batch_id=", recent_schema)
         if recent is not None:
             return union_partition_tiers(main, recent, "_list").drop("batch_id")
         if main is not None:
@@ -1460,5 +1474,5 @@ def stream_ivf_index_append(
         maintain_every,
         _maintain,
         _read,
-        lambda: _postings(spark.createDataFrame([], stream_df.schema)).schema,
+        lambda: schema,
     )

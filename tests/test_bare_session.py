@@ -91,11 +91,13 @@ def test_spread_probe_is_cached(spark, sf_dir):
     scan-partition probe is memoized per file set."""
     from big_data_analysis_of_twitter_emoji_usage_spark import core
 
-    core._SCAN_PARTITIONS_CACHE.clear()
+    core._FILE_FACTS.clear()
     core.load_table(spark, sf_dir, "documents")
-    assert len(core._SCAN_PARTITIONS_CACHE) == 1
+    assert len(core._FILE_FACTS) == 1
+    (entry,) = core._FILE_FACTS.values()
+    assert "partitions" in entry[1]
     core.load_table(spark, sf_dir, "documents")
-    assert len(core._SCAN_PARTITIONS_CACHE) == 1  # hit, not a re-probe
+    assert list(core._FILE_FACTS.values()) == [entry]  # hit, not a re-probe
 
 
 def test_memoized_schema_survives_bare_session(spark, sf_dir, request):

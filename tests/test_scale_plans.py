@@ -3,7 +3,7 @@ engine's 100 TB design claims (SCALE.md). A refactor that silently adds
 an Exchange or turns a top-k into a global sort should fail HERE, not in
 a benchmark three rounds later.
 
-Plans are inspected on raw reads (no ``spread()``) so the assertions see
+Plans are inspected on raw reads (no ``load_table`` spread) so the assertions see
 only the operator's own exchanges, not the local-parallelism repartition.
 """
 

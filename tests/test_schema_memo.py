@@ -1,11 +1,12 @@
-"""``core.parquet_schema`` memoizes the schema parquet inference gives a
-path, so a warm ``load_table`` reads with a declared schema and submits
-no Spark job. The memo must never serve a stale schema: a file rewritten
-in place, or a change to an inference-affecting conf, re-infers.
+"""``core``'s file memo keeps what is known about a file set: the schema
+parquet inference gives a path, its scan partition count and vector
+widths. A warm ``load_table`` reads with a declared schema and submits
+no Spark job. The memo must never serve a stale fact: a file rewritten
+in place, or a change to a fact-affecting conf, re-probes.
 
-The banded dedup drive's store reads declare the schema of the frame it
-wrote instead of inferring it; the declared schema must equal what
-inference gives for the same dirs.
+The store drives' probe and maintenance reads declare the schema of the
+rows they landed instead of inferring it; the declared schema must equal
+what inference gives for the same dirs.
 """
 
 import os
@@ -104,14 +105,98 @@ def test_inference_conf_is_part_of_the_key(spark, tmp_path):
 
 def test_missing_path_fails_and_is_not_memoized(spark, tmp_path):
     path = str(tmp_path / "absent.parquet")
-    size = len(core._PARQUET_SCHEMA_CACHE)
+    size = len(core._FILE_FACTS)
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
         parquet_schema(spark, path)
-    assert len(core._PARQUET_SCHEMA_CACHE) == size
+    assert len(core._FILE_FACTS) == size
     os.makedirs(tmp_path / "later")
     pq.write_table(pa.table({"a": [1]}), str(tmp_path / "later" / "p.parquet"))
     shutil.move(str(tmp_path / "later"), path)
     assert parquet_schema(spark, path).fieldNames() == ["a"]
+
+
+def test_scan_partitions_reprobe_after_inplace_rewrite(spark, tmp_path):
+    """A table rewritten in place several times larger splits into more
+    scan partitions under a small ``maxPartitionBytes``; the memoized
+    count follows the files instead of keeping the first one."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    path = core.table_path(str(sf), "documents")
+
+    def write(n):
+        text = [f"document {i} " * 8 for i in range(n)]
+        pq.write_table(
+            pa.table({"doc_id": pa.array(range(n), pa.int64()), "text": text}),
+            path,
+            compression="none",
+        )
+
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        write(50)
+        load_table(spark, str(sf), "documents")
+        small = core._file_facts(spark, path)["partitions"]
+        write(1000)
+        load_table(spark, str(sf), "documents")
+        got = core._file_facts(spark, path)["partitions"]
+        assert got == spark.read.parquet(path).rdd.getNumPartitions() > small
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_file_memo_holds_at_most_its_bound(spark, tmp_path, monkeypatch):
+    """The memo is FIFO-bounded: past its bound the oldest entry goes."""
+    monkeypatch.setattr(core, "_FILE_FACTS", {})
+    monkeypatch.setattr(core, "_FILE_FACTS_MAX", 3)
+    paths = [str(tmp_path / f"t{i}.parquet") for i in range(5)]
+    for i, path in enumerate(paths):
+        pq.write_table(pa.table({"a": [i]}), path)
+        assert parquet_schema(spark, path).fieldNames() == ["a"]
+        assert len(core._FILE_FACTS) <= 3
+    assert [key[0] for key in core._FILE_FACTS] == paths[2:]
+
+
+def test_file_memo_bound_holds_under_threads(monkeypatch):
+    """Drive threads and the maintenance thread share the memo: many
+    threads inserting past the bound at once never raise and never
+    leave it over its bound. The session and the stamps are stubbed so
+    the threads contend on the memo itself, not on py4j."""
+    import sys
+    import threading
+    from types import SimpleNamespace
+
+    session = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda key: "v"),
+        sparkContext=SimpleNamespace(defaultParallelism=4),
+    )
+    monkeypatch.setattr(core, "file_stamps", lambda spark, paths: (paths,))
+    monkeypatch.setattr(core, "_FILE_FACTS", {})
+    monkeypatch.setattr(core, "_FILE_FACTS_MAX", 4)
+    over, errors = [], []
+
+    def work(offset):
+        try:
+            for i in range(2000):
+                core._file_facts(session, f"p{(offset + i) % 64}")["seen"] = True
+                if len(core._FILE_FACTS) > 4:
+                    over.append(len(core._FILE_FACTS))
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(i,)) for i in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and over == []
 
 
 @pytest.mark.parametrize("kind", ["minhash", "embedding"])
@@ -172,4 +257,45 @@ def test_drive_store_reads_declare_the_inferred_schema(
     assert {tier for tier, *_ in seen} == {"history", "recent"}
     for tier, is_declared, got, inferred in seen:
         assert is_declared, tier
+        assert got == inferred, tier
+
+
+@pytest.mark.parametrize("query", ["stream_dedup_near_docs", "stream_knn_ivf"])
+def test_maintenance_reads_declare_the_inferred_schema(
+    spark, sf_dir, monkeypatch, query
+):
+    """The in-drive maintenance cycle rolls and consolidates each store
+    root with the schema of the rows the drive landed there declared,
+    and that schema reads the dirs exactly as inference does."""
+    from big_data_analysis_of_twitter_emoji_usage_spark.plans import catalog
+    from big_data_analysis_of_twitter_emoji_usage_spark.sources.writers import (
+        store_tier_schemas,
+    )
+    from big_data_analysis_of_twitter_emoji_usage_spark.streaming import jobs
+
+    seen = []
+    roll, consolidate = jobs.roll_recent_into_store, jobs.consolidate_bucket_history
+
+    def check(spark_, tier, path, schema, bucket_col):
+        declared = store_tier_schemas(schema, bucket_col)[tier == "history"]
+        got = spark_.read.schema(declared).parquet(path).schema
+        seen.append((tier, got, spark_.read.parquet(path).schema))
+
+    def rolled(spark_, root, bucket_col, **kw):
+        recent = root.rstrip("/") + "_recent"
+        if any(d.startswith("batch_id=") for d in os.listdir(recent)):
+            check(spark_, "recent", recent, kw["schema"], bucket_col)
+        return roll(spark_, root, bucket_col, **kw)
+
+    def consolidated(spark_, root, **kw):
+        dirs = [d for d in os.listdir(root) if "=" in d and not d.startswith(".")]
+        if dirs:
+            check(spark_, "history", root, kw["schema"], dirs[0].split("=")[0])
+        return consolidate(spark_, root, **kw)
+
+    monkeypatch.setattr(jobs, "roll_recent_into_store", rolled)
+    monkeypatch.setattr(jobs, "consolidate_bucket_history", consolidated)
+    catalog.QUERIES[query](spark, sf_dir)
+    assert {tier for tier, *_ in seen} == {"recent", "history"}
+    for tier, got, inferred in seen:
         assert got == inferred, tier

@@ -6,6 +6,7 @@ not just on results.
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from big_data_analysis_of_twitter_emoji_usage_spark.core import load_events
@@ -35,6 +36,48 @@ def test_partition_pruning(spark, sf_dir, tmp_path):
     # the pruned read returns exactly that day's rows
     expected = ev.filter(F.col("ds") == "2024-01-03").count()
     assert back.count() == expected > 0
+
+
+def test_partitioned_events_restaged_on_same_size_replace(spark, sf_dir, tmp_path):
+    """A same-size replace of the source that keeps its mtime_ns (``cp
+    -p``, ``rsync -a``) still re-stages the partitioned events dir: the
+    stamp hashes the file's tail, so the staging never serves rows the
+    DuckDB oracle no longer reads."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import (
+        _partitioned_events_dir,
+    )
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    src, bumped_src = str(sf / "events.parquet"), str(tmp_path / "bumped.parquet")
+    tbl = pq.read_table(f"{sf_dir}/events.parquet").slice(0, 200)
+    bumped = tbl.set_column(
+        tbl.schema.get_field_index("value"), "value", pc.add(tbl["value"], 1.0)
+    )
+    for path, t in ((src, tbl), (bumped_src, bumped)):
+        pq.write_table(t, path, compression="none", use_dictionary=False)
+    st = os.stat(src)
+    assert os.path.getsize(bumped_src) == st.st_size
+
+    def staged_sum():
+        out = _partitioned_events_dir(spark, str(sf))
+        return out, spark.read.parquet(out).agg(F.sum("value")).first()[0]
+
+    out, before = staged_sum()
+    try:
+        assert before == pytest.approx(pc.sum(tbl["value"]).as_py())
+        os.replace(bumped_src, src)
+        os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns))
+        assert os.stat(src).st_mtime_ns == st.st_mtime_ns
+        _, after = staged_sum()
+        assert after == pytest.approx(pc.sum(bumped["value"]).as_py())
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir):

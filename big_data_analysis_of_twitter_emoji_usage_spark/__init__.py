@@ -8,7 +8,7 @@ package re-expresses every capability Spark-first on PySpark 4:
 - ``core``              session factory tuned for large-cluster defaults
 - ``schemas``           declared StructType schemas for the six tweet shapes
 - ``functions.emoji``   the emoji-extraction kernel (reference q1:97-113)
-- ``functions.text``    the q3 word tokenizer (portable + compat modes)
+- ``functions.text``    the q3 word tokenizer (reference q3:166-176)
 - ``sources``           batch/stream readers, rolling-JSONL ingester, and
                         partitioned/bucketed Parquet writers
 - ``operators``         dedup (exact/MinHash-LSH/SimHash/n-gram/embedding,

@@ -1,6 +1,4 @@
 from big_data_analysis_of_twitter_emoji_usage_spark.functions.emoji import (  # noqa: F401
-    EMOJI,
-    NOT_EMOJI,
     PORTABLE_EMOJI,
     extract_emojis,
     emoji_tokens,

@@ -1,50 +1,26 @@
 """The emoji-extraction kernel — the reference's signature operator.
 
-Every one of the reference's seven questions composes the same six-step
-pipeline (canonical instance q1/src/main/scala/com/revature/questionone/
-Runner.scala:101-113, constants q1:97-99):
+Every one of the reference's seven questions runs the same emoji chain
+(canonical instance q1/src/main/scala/com/revature/questionone/
+Runner.scala:101-113, constants q1:97-99): an ``rlike`` pre-filter, a
+strip of every non-emoji character, a space inserted before each emoji,
+``split`` + ``explode``, then a re-filter that drops the ``(``/``)``/``|``
+tokens the reference's buggy character class lets through.
 
-    filter(text rlike EMOJI)                      -- cheap pre-filter
-    regexp_replace(text, NOT_EMOJI, "")           -- strip non-emoji chars
-    regexp_replace(_,  REGEX_SPACE, " $1")        -- space before each emoji
-    split(_, " ") -> explode                      -- tokenize
-    filter(token rlike EMOJI)                     -- re-filter
-    filter(!contains "(" / ")" / "|")             -- strip metachar artifacts
+The net effect of that chain on any input is: the tokens are exactly the
+code points in the three reference ranges, in order — U+1F600–1F64F
+(Emoticons), U+1F300–1F5FF (Misc Symbols & Pictographs) and
+U+1F900–1F9FF (Supplemental S&P). ZWJ sequences split into their
+component emoji; skin-tone modifiers (U+1F3FB–1F3FF) sit inside the
+second range and count as tokens of their own (reference deck slide 7);
+lone surrogates in JSON input (which Spark's UTF-8 strings hold as ``?``)
+are dropped. The engine computes that in one pass: ``regexp_extract_all``
+of one code-point class, a JVM-side built-in that stays inside
+whole-stage codegen.
 
-The engine implements it once as ``extract_emojis(col) -> array<string>``
-using only JVM-side built-ins (regexp_replace / split / higher-order
-``filter``), so the whole kernel stays inside whole-stage codegen — no
-Python in the hot path.
-
-Semantics replicated exactly (all observable in reference output):
-
-* The char class ``[(\\uD83D\\uDE00-\\uD83D\\uDE4F)|...]`` treats ``(``,
-  ``)`` and ``|`` as class members (the reference's char-class bug), which
-  is why the final contains-filter exists (q1:109).
-* Java regex char classes operate on *code points*, so the three ranges are
-  U+1F600–1F64F (Emoticons), U+1F300–1F5FF (Misc Symbols & Pictographs),
-  U+1F900–1F9FF (Supplemental S&P).
-* ZWJ sequences are split into their component emoji; skin-tone modifiers
-  are outside the ranges and get stripped (reference deck slide 7).
-* The space-insertion pattern ``(\\B\\uD83D.{1})|...`` LOOKS like it
-  matches a lead surrogate plus one code unit, but a LONE lead
-  surrogate in a compiled Java pattern matches ZERO-WIDTH against
-  well-formed text (it can never match half of a real surrogate
-  pair), so what the alternation actually does — verified empirically
-  in a local JVM session — is insert a space at every ``\\B`` position
-  of the stripped text, i.e. before EVERY code point. The observable
-  tokens still match the reference exactly because both engines run
-  the same JVM regex quirk (bug-for-bug fidelity is the point); do
-  NOT "fix" the pattern to match surrogate pairs properly — that
-  changes tokenization and breaks the synth oracles. Lone surrogates
-  cannot cross the Py4J bridge (UTF-8), so the pattern is materialized
-  JVM-side via a Spark SQL string literal with ``\\uXXXX`` escapes
-  (``F.expr``) — bit-identical to the reference's Scala literal once
-  in the JVM.
-
-``PORTABLE_EMOJI`` is the sane, artifact-free equivalent used for
-DuckDB-oracle-checked queries (SURVEY §7.3): same three ranges, no
-metachar members, valid in both Java regex and RE2.
+The reference's verbatim chain is kept in the tests
+(``tests/reference_kernels.py``) as the bug-for-bug oracle this kernel is
+checked against.
 """
 
 from __future__ import annotations
@@ -54,73 +30,18 @@ from pyspark.sql import functions as F
 
 from big_data_analysis_of_twitter_emoji_usage_spark.core import as_col as _col
 
-# Reference q1:97 — written with real code points here; the JVM receives the
-# identical UTF-16 sequence the Scala literal produced.
-EMOJI = (
-    "[(\U0001f600-\U0001f64f)|(\U0001f300-\U0001f5ff)|(\U0001f900-\U0001f9ff)]"
-)
-# Reference q1:98 — negation, same members.
-NOT_EMOJI = (
-    "[^(\U0001f600-\U0001f64f)|(\U0001f300-\U0001f5ff)|(\U0001f900-\U0001f9ff)]"
-)
-# Reference q1:99 — nominally "lead surrogate plus one code unit", but a
-# lone lead surrogate matches zero-width in a compiled Java pattern, so
-# in practice this inserts a space at every \B position (see module
-# docstring; keep verbatim — bug-for-bug). Expressed as a Spark-SQL
-# string literal because Python strings with lone surrogates cannot be
-# sent over Py4J.
-REGEX_SPACE_SQL_LITERAL = (
-    r"'(\\B\uD83D.{1})|(\\B\uD83C.{1})|(\\B\uD83E.{1})'"
-)
-
-# Artifact-free portable class: same three code-point ranges, no (/)/| —
+# The reference's three code-point ranges without its (/)/| class members;
 # identical semantics in Java regex (Spark) and RE2 (DuckDB oracle).
 PORTABLE_EMOJI = "[\U0001f300-\U0001f5ff\U0001f600-\U0001f64f\U0001f900-\U0001f9ff]"
 
-# The metachars the buggy class admits; filtered out post-split (q1:109).
-_METACHAR_ARTIFACTS = ("(", ")", "|")
-
-
-def _regex_space_pattern() -> Column:
-    """The q1:99 pattern as a JVM-side literal (see module docstring)."""
-    return F.expr(REGEX_SPACE_SQL_LITERAL)
-
-
-def spaced_emoji_text(col: Column | str) -> Column:
-    """Steps 2-3 of the kernel: strip non-emoji, space-separate emoji.
-
-    Mirrors q1:104-105 (`Removed Text` -> `Added Emoji Space`).
-    """
-    stripped = F.regexp_replace(_col(col), NOT_EMOJI, "")
-    return F.regexp_replace(stripped, _regex_space_pattern(), F.lit(" $1"))
-
 
 def extract_emojis(col: Column | str) -> Column:
-    """Full kernel as one array<string> expression.
-
-    split + higher-order filter replaces the reference's explode→filter→
-    filter chain (q1:106-109); callers explode the result. Rows without
-    emoji yield an empty array, which `explode` drops — equivalent to the
-    reference's pre-filter (q1:103) for result purposes; query builders
-    still apply the pre-filter for scan-level row pruning.
-    """
-    tokens = F.split(spaced_emoji_text(col), " ")
-    keep = lambda t: (  # noqa: E731
-        t.rlike(EMOJI)
-        & ~t.contains("(")
-        & ~t.contains(")")
-        & ~t.contains("|")
-    )
-    return F.filter(tokens, keep)
+    """The kernel as one array<string> expression: every in-range code
+    point of ``col``, in order. An emoji-free text gives ``[]`` and a
+    NULL text gives NULL, both of which ``explode`` drops."""
+    return F.regexp_extract_all(_col(col), F.lit(PORTABLE_EMOJI), 0)
 
 
 def emoji_tokens(df, text_col: str = "text", out: str = "Emoji"):
-    """DataFrame helper: one output row per extracted emoji.
-
-    `filter(rlike EMOJI)` first so the predicate lands on the scan
-    (q1:103), then explode the kernel array.
-    """
-    return (
-        df.filter(_col(text_col).rlike(EMOJI))
-        .select(F.explode(extract_emojis(text_col)).alias(out))
-    )
+    """DataFrame helper: one output row per extracted emoji."""
+    return df.select(F.explode(extract_emojis(text_col)).alias(out))

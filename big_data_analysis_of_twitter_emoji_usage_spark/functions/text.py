@@ -6,8 +6,8 @@ and keeps only ``^[A-Za-z0-9']+$`` tokens via the (Spark-2.4-only) typed
 ``explode`` UDTF — replaced here by built-ins (SURVEY §2.4 G4).
 
 Everything is expressed with JVM-side built-ins so the tokenizer runs
-inside whole-stage codegen; the patterns used in oracle-checked queries
-are portable between Java regex (Spark) and RE2 (DuckDB).
+inside whole-stage codegen; its patterns are portable between Java regex
+(Spark) and RE2 (DuckDB).
 """
 
 from __future__ import annotations
@@ -17,27 +17,24 @@ from pyspark.sql import functions as F
 
 from big_data_analysis_of_twitter_emoji_usage_spark.core import as_col as _col
 
-# Reference q3:167. The Java class uses `&&` intersection syntax which is
-# Java-regex-only; kept verbatim for reference-parity mode.
-RANDOM_THINGS_JAVA = "[(\\s)(\\p{C})(\\p{Cntrl}&&[^\r\n\t])()]"
-# Portable equivalent: the union the Java class actually denotes —
-# parens, whitespace, and the full Unicode "Other" category (⊇ Cntrl).
+# Reference q3:167's strip class, portably: its Java spelling uses `&&`
+# intersection syntax (Java-regex-only), and the union it actually denotes
+# is parens, whitespace and the full Unicode "Other" category (⊇ Cntrl).
+# The verbatim Java class is the tests' oracle (tests/reference_kernels.py).
 RANDOM_THINGS_PORTABLE = "[()\\s\\pC]"
 # Reference q3:168 ("notWords", used positively as the keep-filter).
 WORD_KEEP = "^[A-Za-z0-9']+$"
 
 
-def tokenize_words(col: Column | str, compat: bool = False) -> Column:
+def tokenize_words(col: Column | str) -> Column:
     """q3's word tokenizer as one array<string> expression.
 
     split(' ') → strip junk chars per-token → keep ^[A-Za-z0-9']+$.
-    ``compat=True`` uses the verbatim Java-only strip class (q3:167);
-    the default uses the portable equivalent (identical on any input the
-    oracle sees — validated by unit tests).
     """
-    pat = RANDOM_THINGS_JAVA if compat else RANDOM_THINGS_PORTABLE
     tokens = F.split(_col(col), " ")
-    cleaned = F.transform(tokens, lambda t: F.regexp_replace(t, pat, ""))
+    cleaned = F.transform(
+        tokens, lambda t: F.regexp_replace(t, RANDOM_THINGS_PORTABLE, "")
+    )
     return F.filter(cleaned, lambda t: t.rlike(WORD_KEEP))
 
 

@@ -9,8 +9,8 @@ column names).
 
 Cross-engine determinism rules used throughout (SURVEY §7.3):
 - regexes restricted to the Java∩RE2 common subset for oracle queries
-  (the verbatim Java-only reference patterns are covered by PySpark-only
-  unit tests in tests/);
+  (the verbatim Java-only reference patterns are the PySpark-only test
+  oracle in tests/reference_kernels.py);
 - money aggregates go through DECIMAL (exact, order-independent) and are
   cast back to DOUBLE — double SUMs are partition-order-dependent and
   would flap the hash;
@@ -34,7 +34,7 @@ from big_data_analysis_of_twitter_emoji_usage_spark.core import (
     table_path,
 )
 from big_data_analysis_of_twitter_emoji_usage_spark.functions.text import WORD_KEEP, tokenize_words
-from big_data_analysis_of_twitter_emoji_usage_spark.functions.emoji import PORTABLE_EMOJI, extract_emojis
+from big_data_analysis_of_twitter_emoji_usage_spark.functions.emoji import extract_emojis
 from big_data_analysis_of_twitter_emoji_usage_spark.plans.queries import (
     emoji_by_dimension,
     global_token_counts,
@@ -677,15 +677,14 @@ def _docs(spark: SparkSession, sf: str) -> DataFrame:
 def q1_top_words(spark, sf):
     """q1 'most popular token' (q1:101-113) with the word kernel."""
     return token_counts(
-        _docs(spark, sf), "text", tokenize_words, pre_rlike=None,
-        out="word", count_alias="cnt",
+        _docs(spark, sf), "text", tokenize_words, out="word", count_alias="cnt"
     )
 
 
 def q1_rare_words(spark, sf):
     """q1 option 2: least-popular, ascending sort (q1:149-162)."""
     return token_counts(
-        _docs(spark, sf), "text", tokenize_words, pre_rlike=None,
+        _docs(spark, sf), "text", tokenize_words,
         ascending=True, out="word", count_alias="cnt",
     )
 
@@ -693,7 +692,7 @@ def q1_rare_words(spark, sf):
 def q1_word_search(spark, sf):
     """q1 option 3: rlike point-lookup on the token (q1:204, F5)."""
     return token_counts(
-        _docs(spark, sf), "text", tokenize_words, pre_rlike=None,
+        _docs(spark, sf), "text", tokenize_words,
         token_rlike="^s", out="word", count_alias="cnt",
     )
 
@@ -714,29 +713,22 @@ def _synth_emoji_cols():
 
 def q1_top_emojis(spark, sf):
     """q1 flagship 'most popular emoji' (q1:101-113) through the full
-    ``token_counts`` plan — rlike pre-filter, strip, tokenize, group,
-    sort — on the portable kernel subset (SURVEY §7.3).
+    ``token_counts`` plan — kernel, explode, group, sort.
 
     Value-bearing: the fixture corpus is emoji-free, so emoji text is
     synthesized from doc_id arithmetic (two Emoticons-range emoji per
-    doc, one parenthesized so the strip branch executes, one repeated as
-    a separate token). The oracle reproduces the expected frequency
-    table from the same chr() arithmetic with no regex at all — ground
-    truth, not a reimplementation. The verbatim Java-regex kernel is
-    covered by q1_emoji_kernel_synth + PySpark-only unit tests."""
+    doc, one parenthesized, one repeated as a separate token). The
+    oracle reproduces the expected frequency table from the same chr()
+    arithmetic with no regex at all — ground truth, not a
+    reimplementation. The kernel's fidelity to the reference's verbatim
+    Java-regex chain is checked by PySpark-only tests against that chain
+    (tests/reference_kernels.py)."""
     e1, e2 = _synth_emoji_cols()
     text = F.concat(
         F.lit("lorem ("), e1, F.lit(") ipsum "), e2, F.lit(" "), e2, F.lit(" end")
     )
     prep = _docs(spark, sf).select(text.alias("text"))
-    return token_counts(
-        prep, "text",
-        tokens_fn=lambda c: F.filter(
-            F.split(F.regexp_replace(c, f"[^{PORTABLE_EMOJI[1:-1]} ]", ""), " "),
-            lambda t: t.rlike(PORTABLE_EMOJI),
-        ),
-        pre_rlike=PORTABLE_EMOJI, out="Emoji", count_alias="cnt",
-    )
+    return token_counts(prep, "text", out="Emoji", count_alias="cnt")
 
 
 def word_position_counts(spark, sf):
@@ -755,16 +747,17 @@ def word_position_counts(spark, sf):
 
 
 def q1_emoji_kernel_synth(spark, sf):
-    """The VERBATIM reference emoji kernel (Java char-class bug, surrogate
-    space pattern, metachar filter — functions.emoji.extract_emojis)
-    under a value-bearing differential oracle.
+    """The emoji kernel (``functions.emoji.extract_emojis``) under a
+    value-bearing differential oracle, on the inputs where the
+    reference's chain has its quirks.
 
     The fixture corpus is emoji-free, so emoji text is synthesized
     deterministically from doc_id: two Emoticons-range emoji per doc,
-    wrapped in parens and doubled into an unseparated run so the strip /
-    space-insertion / metachar-filter branches all execute. The oracle
-    reproduces the EXPECTED tokens from the same arithmetic (chr()) with
-    no regex at all — ground truth, not a reimplementation."""
+    wrapped in parens next to a pipe (the reference class's metachar
+    members) and doubled into an unseparated run (the reference's
+    space-insertion branch). The oracle reproduces the EXPECTED tokens
+    from the same arithmetic (chr()) with no regex at all — ground
+    truth, not a reimplementation."""
     e1, e2 = _synth_emoji_cols()
     text = F.concat(
         F.lit("lorem ("), e1, F.lit(") ipsum | "), e2, e2, F.lit(" end")
@@ -780,39 +773,28 @@ def q1_emoji_kernel_synth(spark, sf):
 
 
 def q1_kernel_equiv(spark, sf):
-    """Cross-kernel drift detector (r2 verdict #5): the VERBATIM Java
-    kernel (char-class bug + surrogate space pattern + metachar filter)
-    and the PORTABLE kernel (clean char class, no artifacts) run on the
-    SAME synth text inside one plan, labeled and unioned. The oracle
-    builds the expected table once from chr() arithmetic and duplicates
-    it under both labels — so if EITHER kernel drifts from the other (or
-    from ground truth), its half of the result hash-mismatches. The text
-    exercises the divergence-prone branches (parens, pipe, spacing) on
-    input where the two kernels provably agree."""
+    """The emoji kernel twice over the SAME synth text inside one plan,
+    under the oracle's ``verbatim`` and ``portable`` labels, unioned; the
+    oracle builds the expected table once from chr() arithmetic and
+    duplicates it under both labels. The text exercises the reference
+    chain's quirky branches (parens, pipe, spacing); the kernel's drift
+    from the reference's verbatim chain itself is checked by the
+    property tests (tests/test_kernel_properties.py)."""
     e1, e2 = _synth_emoji_cols()
     text = F.concat(
         F.lit("lorem ("), e1, F.lit(") ipsum | "),
         e2, F.lit(" "), e2, F.lit(" end"),
     )
     docs = _docs(spark, sf).select(text.alias("text"))
-    verbatim = docs.select(
-        F.explode(extract_emojis("text")).alias("Emoji"),
-        F.lit("verbatim").alias("kernel"),
-    )
-    portable = docs.select(
-        F.explode(
-            F.filter(
-                F.split(
-                    F.regexp_replace("text", f"[^{PORTABLE_EMOJI[1:-1]} ]", ""),
-                    " ",
-                ),
-                lambda t: t.rlike(PORTABLE_EMOJI),
-            )
-        ).alias("Emoji"),
-        F.lit("portable").alias("kernel"),
-    )
+    halves = [
+        docs.select(
+            F.explode(extract_emojis("text")).alias("Emoji"),
+            F.lit(label).alias("kernel"),
+        )
+        for label in ("verbatim", "portable")
+    ]
     return (
-        verbatim.unionByName(portable)
+        halves[0].unionByName(halves[1])
         .groupBy("kernel", "Emoji")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy("kernel", F.desc("cnt"), "Emoji")
@@ -836,17 +818,16 @@ def q4_emoji_by_user_synth(spark, sf):
     )
     return token_by_dimension(
         prep, "text", "users", "Username",
-        explode_dim=True, tokens_fn=extract_emojis, pre_rlike=None,
-        out="Emoji", count_alias="cnt",
+        explode_dim=True, out="Emoji", count_alias="cnt",
     )
 
 
 def q3_ratio_synth(spark, sf):
     """q3's emoji-per-word ratio (two global aggregates + cross join —
-    the division the reference did on a slide, deck slide 10) with BOTH
-    verbatim kernels on synthesized text whose expected counts are pure
-    doc_id arithmetic: per doc, 2 + (doc_id % 4) word tokens and 3 emoji
-    tokens (one parenthesized, two as an unseparated run)."""
+    the division the reference did on a slide, deck slide 10) with the
+    emoji and word kernels on synthesized text whose expected counts are
+    pure doc_id arithmetic: per doc, 2 + (doc_id % 4) word tokens and 3
+    emoji tokens (one parenthesized, two as an unseparated run)."""
     e1, e2 = _synth_emoji_cols()
     pad = F.repeat(F.lit("pad "), (F.col("doc_id") % 4).cast("int"))
     text = F.concat(pad, F.lit("alpha ("), e1, F.lit(") beta "), e2, e2)
@@ -878,8 +859,7 @@ def q4_words_by_source(spark, sf):
     """q4 shape (token × dimension, q4:108-123): word × source."""
     return token_by_dimension(
         _docs(spark, sf), "text", "source", "source",
-        tokens_fn=tokenize_words, pre_rlike=None,
-        out="word", count_alias="cnt",
+        tokens_fn=tokenize_words, out="word", count_alias="cnt",
     )
 
 
@@ -887,8 +867,7 @@ def q5_words_by_lang(spark, sf):
     """q5 shape (token × category with named agg, q5:97-112)."""
     return token_by_dimension(
         _docs(spark, sf), "text", "lang", "lang",
-        tokens_fn=tokenize_words, pre_rlike=None,
-        out="word", count_alias="cnt",
+        tokens_fn=tokenize_words, out="word", count_alias="cnt",
     )
 
 
@@ -896,7 +875,7 @@ def q6_words_by_lang_excl(spark, sf):
     """q6 exclude-one variant (negated contains, q6:216-228)."""
     return token_by_dimension(
         _docs(spark, sf), "text", "lang", "lang",
-        tokens_fn=tokenize_words, pre_rlike=None,
+        tokens_fn=tokenize_words,
         exclude_contains="e", out="word", count_alias="cnt",
     )
 
@@ -905,7 +884,7 @@ def q6_word_search_by_lang(spark, sf):
     """q6 one-dimension-value variant (rlike include, q6:160-177)."""
     return token_by_dimension(
         _docs(spark, sf), "text", "lang", "lang",
-        tokens_fn=tokenize_words, pre_rlike=None,
+        tokens_fn=tokenize_words,
         include_rlike="^e", out="word", count_alias="cnt",
     )
 
@@ -1055,7 +1034,7 @@ def q4_tweets_end_to_end(spark, sf):
     the engine's replacement for the reference's inference pass, SURVEY
     §1.3) → ``emoji_by_dimension('username')``: nested-struct projection
     (P1), array-of-struct username pull-up (P2, q4:110), F3 null guard
-    on the ``includes`` expansion (q4:111), verbatim emoji kernel, and
+    on the ``includes`` expansion (q4:111), the emoji kernel, and
     the double-explode (mention × emoji) cross product (G3, q4:116-117).
     """
     from big_data_analysis_of_twitter_emoji_usage_spark import schemas
@@ -1103,7 +1082,7 @@ def q6_tweets_geo(spark, sf):
 def q2_tweets_stream_top_emojis(spark, sf):
     """q2's entry path (q2:96-120): the q1 emoji-frequency plan on an
     UNBOUNDED file-source scan of the tweet directory — declared schema
-    (the reference borrowed a batch inference pass, q2:96-97), verbatim
+    (the reference borrowed a batch inference pass, q2:96-97), the emoji
     kernel, complete-mode sorted aggregate — driven with availableNow
     into a memory sink. Batch/stream duality made oracle-checkable: the
     final table equals the batch q1 result, which is what the SQL
@@ -1401,8 +1380,7 @@ def q2_stream_top_words(spark, sf):
     driven with availableNow into a memory sink; result equals q1's."""
     stream = load_table_stream(spark, sf, "documents")
     counted = token_counts(
-        stream, "text", tokenize_words, pre_rlike=None,
-        out="word", count_alias="cnt",
+        stream, "text", tokenize_words, out="word", count_alias="cnt"
     )
     return run_stream_to_memory(spark, counted, "q2_stream_top_words_sink")
 
@@ -4908,6 +4886,20 @@ _GATE_FRONT = {
     # aggregate. Results hash-identical. ----
     "knn_lsh": knn_lsh_q,
     "knn_join_emb": knn_join_emb_q,
+    # ---- plan changed behind the window: every emoji site runs the one
+    # regexp_extract_all kernel, in place of the reference's
+    # strip/space/split/filter chain and the two inline split chains,
+    # and the token builders drop the rlike pre-filter (explode already
+    # drops emoji-free rows). Results hash-identical. ----
+    "q1_top_emojis": q1_top_emojis,
+    "q1_emoji_kernel_synth": q1_emoji_kernel_synth,
+    "q1_kernel_equiv": q1_kernel_equiv,
+    "q3_ratio_synth": q3_ratio_synth,
+    "q4_emoji_by_user_synth": q4_emoji_by_user_synth,
+    "q4_tweets_end_to_end": q4_tweets_end_to_end,
+    "q5_tweets_categories": q5_tweets_categories,
+    "q6_tweets_geo": q6_tweets_geo,
+    "q2_tweets_stream_top_emojis": q2_tweets_stream_top_emojis,
 }
 
 
@@ -4950,7 +4942,6 @@ _PROVEN = {
     "cohort_retention_events": cohort_retention_events,
     "salted_agg_events": salted_agg_events,
     "anomaly_zscore_events": anomaly_zscore_events,
-    "q1_kernel_equiv": q1_kernel_equiv,
     "text_ngrams": text_ngrams_q,
     "text_logprob": text_logprob_q,
     "dedup_fuzzy_names": dedup_fuzzy_names_q,
@@ -4981,14 +4972,10 @@ _PROVEN = {
     "knn_brute": knn_brute_q,
     "q1_rare_words": q1_rare_words,
     "q1_word_search": q1_word_search,
-    "q1_emoji_kernel_synth": q1_emoji_kernel_synth,
-    "q3_ratio_synth": q3_ratio_synth,
     "q3_corpus_counts": q3_corpus_counts,
     "q7_events_late": q7_events_late,
-    "q2_tweets_stream_top_emojis": q2_tweets_stream_top_emojis,
     "stream_windowed_events": stream_windowed_events,
     "decontam_docs": decontam_docs_q,
-    "q1_top_emojis": q1_top_emojis,
     "q7_events_early": q7_events_early,
     "q2_stream_top_words": q2_stream_top_words,
     "dedup_cross_pairs": dedup_cross_pairs_q,
@@ -5020,14 +5007,10 @@ _PROVEN = {
     "dedup_simhash": dedup_simhash_q,
     "dedup_simhash_pairs": dedup_simhash_pairs_q,
     "shuffle_shards": shuffle_shards_q,
-    "q4_tweets_end_to_end": q4_tweets_end_to_end,
     "q4_words_by_source": q4_words_by_source,
     "q5_words_by_lang": q5_words_by_lang,
-    "q4_emoji_by_user_synth": q4_emoji_by_user_synth,
     "q6_words_by_lang_excl": q6_words_by_lang_excl,
     "q6_word_search_by_lang": q6_word_search_by_lang,
-    "q5_tweets_categories": q5_tweets_categories,
-    "q6_tweets_geo": q6_tweets_geo,
     "q1_top_words": q1_top_words,
     "text_langid": text_langid_q,
     "text_quality": text_quality_q,

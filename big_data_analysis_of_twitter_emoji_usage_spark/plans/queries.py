@@ -22,9 +22,8 @@ inputs (the reference's batch/stream duality, SURVEY §2.8).
 Scale notes (100 TB): every builder is a narrow scan→generate stage into
 one hash aggregate — partial aggregation happens map-side before the
 single shuffle on the (low-cardinality) group keys, and the final
-``orderBy`` range-partitions the already-aggregated (small) result. The
-pre-filter ``rlike`` sits on the scan so non-matching rows never reach
-the generator. No joins, no driver-side collection.
+``orderBy`` range-partitions the already-aggregated (small) result. No
+joins, no driver-side collection.
 """
 
 from __future__ import annotations
@@ -34,10 +33,7 @@ from pyspark.sql import functions as F
 
 from big_data_analysis_of_twitter_emoji_usage_spark.core import as_col as _col
 
-from big_data_analysis_of_twitter_emoji_usage_spark.functions.emoji import (
-    EMOJI,
-    extract_emojis,
-)
+from big_data_analysis_of_twitter_emoji_usage_spark.functions.emoji import extract_emojis
 from big_data_analysis_of_twitter_emoji_usage_spark.functions.text import tokenize_words
 
 
@@ -45,7 +41,6 @@ def token_counts(
     df: DataFrame,
     text_col: str = "data.text",
     tokens_fn=extract_emojis,
-    pre_rlike: str | None = EMOJI,
     ascending: bool = False,
     token_rlike: str | None = None,
     out: str = "Emoji",
@@ -55,13 +50,12 @@ def token_counts(
     (q1:149-162), the rlike point-lookup (q1:204), and q7's historical
     runs (q7:62-107) — one builder.
 
-    Plan: scan → rlike pre-filter → kernel → explode → hash agg →
-    global sort (count, token-asc tiebreak — q1:112).
+    Plan: scan → kernel → explode → hash agg → global sort (count,
+    token-asc tiebreak — q1:112). ``explode`` drops the rows whose
+    token array is empty, which is all the reference's ``rlike``
+    pre-filter (q1:103) did.
     """
-    base = df
-    if pre_rlike is not None:
-        base = base.filter(_col(text_col).rlike(pre_rlike))
-    tokens = base.select(F.explode(tokens_fn(_col(text_col))).alias(out))
+    tokens = df.select(F.explode(tokens_fn(_col(text_col))).alias(out))
     if token_rlike is not None:
         # F5: parameterized rlike — pattern-match point lookup, the
         # reference's declared semantics (a user '.' matches everything).
@@ -94,7 +88,6 @@ def token_by_dimension(
     dim_alias: str,
     explode_dim: bool = False,
     tokens_fn=extract_emojis,
-    pre_rlike: str | None = EMOJI,
     dim_not_null: bool = True,
     include_rlike: str | None = None,
     exclude_contains: str | None = None,
@@ -120,8 +113,6 @@ def token_by_dimension(
     base = df
     if dim_not_null:
         base = base.filter(_col(dim_col).isNotNull())
-    if pre_rlike is not None:
-        base = base.filter(_col(text_col).rlike(pre_rlike))
     # Project once: token array + dimension, carried through (P4).
     step = base.select(
         tokens_fn(_col(text_col)).alias("_toks"), _col(dim_col).alias("_dim")

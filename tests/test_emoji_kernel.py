@@ -1,21 +1,31 @@
 """Kernel unit tests: hand-computed token multisets for every branch of
-the reference pipeline (SURVEY §5.2)."""
+the reference pipeline (SURVEY §5.2). Each case also runs the
+reference's verbatim chain (tests/reference_kernels.py), which must give
+the same tokens."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from big_data_analysis_of_twitter_emoji_usage_spark.functions.emoji import (
-    EMOJI,
     extract_emojis,
     emoji_tokens,
-    spaced_emoji_text,
 )
 from big_data_analysis_of_twitter_emoji_usage_spark.functions.text import tokenize_words
+from tests.reference_kernels import (
+    EMOJI,
+    reference_extract_emojis,
+    reference_tokenize_words,
+    spaced_emoji_text,
+)
 
 
 def extract(spark, texts):
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    return [r.e for r in df.select(extract_emojis("text").alias("e")).collect()]
+    rows = df.select(
+        extract_emojis("text").alias("e"), reference_extract_emojis("text").alias("r")
+    ).collect()
+    assert [r.e for r in rows] == [r.r for r in rows]
+    return [r.e for r in rows]
 
 
 def test_basic_extraction(spark):
@@ -120,8 +130,8 @@ def test_word_tokenizer_compat_matches_portable(spark):
     from tests.tweet_fixtures import tweets_base
 
     df = spark.createDataFrame(tweets_base(200))
-    a = df.select(F.explode(tokenize_words("data.text", compat=True)).alias("w"))
-    b = df.select(F.explode(tokenize_words("data.text", compat=False)).alias("w"))
+    a = df.select(F.explode(reference_tokenize_words("data.text")).alias("w"))
+    b = df.select(F.explode(tokenize_words("data.text")).alias("w"))
     assert sorted(r.w for r in a.collect()) == sorted(r.w for r in b.collect())
 
 
@@ -130,3 +140,34 @@ def test_emoji_class_matches_metachars_directly(spark):
     df = spark.createDataFrame([("(",), (")",), ("|",), ("x",)], ["c"])
     got = [r.c for r in df.filter(F.col("c").rlike(EMOJI)).collect()]
     assert got == ["(", ")", "|"]
+
+
+def test_json_lone_surrogates_dropped(spark, tmp_path):
+    # Lone UTF-16 surrogates cannot be sent through createDataFrame; a
+    # tweet JSON line carries them as \u escapes (Spark's UTF-8 strings
+    # hold each as '?'). Neither kernel may turn them into tokens: only
+    # the real emoji between them survives.
+    from big_data_analysis_of_twitter_emoji_usage_spark.schemas import TWEETS_BASE
+    from big_data_analysis_of_twitter_emoji_usage_spark.sources.readers import read_tweets
+
+    d = tmp_path / "tweets"
+    d.mkdir()
+    (d / "part-00000.json").write_text(
+        '{"data": {"id": "1", "text": "a \\ud83d b \U0001f600 c \\ude00 d"}}\n',
+        encoding="utf-8",
+    )
+    df = read_tweets(spark, str(d), TWEETS_BASE)
+    rows = df.select(
+        extract_emojis("data.text").alias("e"),
+        reference_extract_emojis("data.text").alias("r"),
+    ).collect()
+    assert [(r.e, r.r) for r in rows] == [(["\U0001f600"], ["\U0001f600"])]
+
+
+def test_null_text_yields_null_and_no_token(spark):
+    df = spark.createDataFrame([(None,)], "text string")
+    rows = df.select(
+        extract_emojis("text").alias("e"), reference_extract_emojis("text").alias("r")
+    ).collect()
+    assert [(r.e, r.r) for r in rows] == [(None, None)]
+    assert emoji_tokens(df).count() == 0

@@ -1,5 +1,6 @@
-"""Property-based kernel tests (hypothesis): the Spark emoji kernel must
-agree with an independent Python model of the reference semantics on
+"""Property-based kernel tests (hypothesis): the Spark emoji kernel, the
+reference's verbatim chain (tests/reference_kernels.py) and an
+independent Python model of the reference semantics must all agree on
 randomized inputs — broader sampling than the fixed cases in
 test_emoji_kernel.py.
 
@@ -15,6 +16,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from big_data_analysis_of_twitter_emoji_usage_spark.functions.emoji import extract_emojis
+from tests.reference_kernels import reference_extract_emojis
 
 IN_RANGES = [(0x1F300, 0x1F5FF), (0x1F600, 0x1F64F), (0x1F900, 0x1F9FF)]
 
@@ -40,7 +42,7 @@ emoji_chars = st.one_of(
 )
 near_miss_chars = st.sampled_from(
     [chr(0x1F2FF), chr(0x1F650), chr(0x1F8FF), chr(0x1FA00), chr(0x2764),
-     chr(0x263A), chr(0x1F680)]
+     chr(0x263A), chr(0x1F680), "\u200d", "$1", "\\", "\u4e2d", "\u00e9"]
 )
 word_chars = st.text(
     alphabet="abcXYZ019'", min_size=1, max_size=6
@@ -55,8 +57,12 @@ texts = st.lists(piece, min_size=0, max_size=25).map("".join)
 @given(st.lists(texts, min_size=1, max_size=8))
 def test_kernel_matches_model(spark, batch):
     df = spark.createDataFrame([(t,) for t in batch], ["text"])
-    got = [r.e for r in df.select(extract_emojis("text").alias("e")).collect()]
-    assert got == [model_extract(t) for t in batch]
+    rows = df.select(
+        extract_emojis("text").alias("e"), reference_extract_emojis("text").alias("r")
+    ).collect()
+    want = [model_extract(t) for t in batch]
+    assert [r.e for r in rows] == want
+    assert [r.r for r in rows] == want
 
 
 @settings(max_examples=15, deadline=None)

@@ -254,12 +254,23 @@ def test_token_by_dimension_single_kernel_eval(spark, sf_dir):
     caveat as the r6 decontam finding — SCALE.md). The outer-explode +
     output-null-filter shape keeps exactly one kernel evaluation: the
     optimized plan must contain no Filter computing size() over a
-    computed (non-attribute) expression on the token side."""
+    computed (non-attribute) expression on the token side. The emoji
+    queries (q1 via ``token_counts``, the tweet-shape q4/q5/q6) must also
+    evaluate the one-pass emoji kernel exactly once: one
+    ``regexp_extract_all``. (q4_emoji_by_user_synth is left out: its
+    synthetic mentions array is a computed expression too, so its
+    dimension explode keeps an inferred filter — SCALE.md.)"""
     import re
 
     from big_data_analysis_of_twitter_emoji_usage_spark.plans.catalog import QUERIES
 
-    for name in ("q4_words_by_source", "q5_words_by_lang"):
+    emoji_queries = (
+        "q1_top_emojis",
+        "q4_tweets_end_to_end",
+        "q5_tweets_categories",
+        "q6_tweets_geo",
+    )
+    for name in ("q4_words_by_source", "q5_words_by_lang", *emoji_queries):
         plan = (
             QUERIES[name](spark, sf_dir)
             ._jdf.queryExecution()
@@ -268,6 +279,8 @@ def test_token_by_dimension_single_kernel_eval(spark, sf_dir):
         )
         hits = re.findall(r"Filter.{0,40}size\((?!\w+#\d)", plan)
         assert not hits, f"{name}: inferred generator filter returned: {hits}"
+        if name in emoji_queries:
+            assert plan.count("regexp_extract_all") == 1, name
 
 
 def test_banded_knn_signature_udf_runs_once_per_side(spark, sf_dir):
